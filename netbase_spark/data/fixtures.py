@@ -141,43 +141,24 @@ def mentionable_labels() -> list[str]:
 
 
 def labels_spark_df(spark):
-    """Fixture labels as a JVM-NATIVE DataFrame: goes through pandas so
-    the Arrow path materializes the rows inside the JVM.  A plain
-    ``createDataFrame(list_of_tuples)`` keeps the data as pickled Python
-    rows — every downstream job then spawns Python workers just to
-    deserialize an 80-row dimension (measured ~3 s/core of pure import
-    overhead per pipeline run)."""
-    import pandas as pd
-
+    """Fixture labels as a JVM-native DataFrame
+    (:func:`~netbase_spark.plans.broadcast_gate.local_frame`)."""
+    from netbase_spark.plans.broadcast_gate import local_frame
     from netbase_spark.schemas import LABELS_SCHEMA
 
-    rows = labels_fixture()
-    pdf = pd.DataFrame(
-        {
-            "key": [r["key"] for r in rows],
-            "label": [r["label"] for r in rows],
-            "label_type": [r["label_type"] for r in rows],
-            "lang": [r["lang"] for r in rows],
-        }
-    )
-    return spark.createDataFrame(pdf, LABELS_SCHEMA).coalesce(1)
+    rows = [
+        (r["key"], r["label"], r["label_type"], r["lang"])
+        for r in labels_fixture()
+    ]
+    return local_frame(spark, rows, LABELS_SCHEMA).coalesce(1)
 
 
 def synonym_spark_df(spark):
     """raw_synonym_edges as a JVM-native 5-column triple DataFrame
-    (same rationale as :func:`labels_spark_df`)."""
-    import pandas as pd
+    (:func:`~netbase_spark.plans.broadcast_gate.local_frame`)."""
+    from netbase_spark.plans.broadcast_gate import local_frame
 
-    rows = raw_synonym_edges()
-    pdf = pd.DataFrame(
-        {
-            "subj": [s for s, _, _ in rows],
-            "rel": pd.Series([r for _, r, _ in rows], dtype="int32"),
-            "obj": [o for _, _, o in rows],
-            "rule": ["raw"] * len(rows),
-            "doc_id": pd.Series([None] * len(rows), dtype="object"),
-        }
-    )
-    return spark.createDataFrame(
-        pdf, "subj string, rel int, obj string, rule string, doc_id string"
+    rows = [(s, r, o, "raw", None) for s, r, o in raw_synonym_edges()]
+    return local_frame(
+        spark, rows, "subj string, rel int, obj string, rule string, doc_id string"
     ).coalesce(1)

@@ -22,9 +22,24 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from netbase_spark.plans.broadcast_gate import local_frame
+
 
 class Console:
     """One reference-console session over a triple table."""
+
+    # commands that rebind the triple table, write or read files, or
+    # change the paging/view state every caller of a shared session sees
+    MUTATING = frozenset({
+        ":learn", ":update", ":delete", ":d", ":merge", ":ci", ":label",
+        ":abstract", ":save", ":s", ":w", ":load", ":l", ":import", ":i",
+        ":more", ":include", ":exclude", "limit",
+    })
+
+    @classmethod
+    def mutates(cls, line: str) -> bool:
+        """True if ``line`` runs a :attr:`MUTATING` command."""
+        return (line or "").strip().partition(" ")[0].lower() in cls.MUTATING
 
     def __init__(
         self,
@@ -48,10 +63,10 @@ class Console:
     # -- helpers --------------------------------------------------------
 
     def _nodes(self, *names: str) -> DataFrame:
-        return self.spark.createDataFrame([(n,) for n in names], "node string")
+        return local_frame(self.spark, [(n,) for n in names], "node string")
 
     def _bool_df(self, value: bool) -> DataFrame:
-        return self.spark.createDataFrame([(value,)], "result boolean")
+        return local_frame(self.spark, [(value,)], "result boolean")
 
     # -- dispatcher -----------------------------------------------------
 
@@ -70,7 +85,7 @@ class Console:
 
             self.triples = learn(
                 self.triples,
-                self.spark.createDataFrame([(rest,)], "sentence string"),
+                local_frame(self.spark, [(rest,)], "sentence string"),
             )
             return self.triples
         if c in (":update",):
@@ -104,7 +119,7 @@ class Console:
             a, b = rest.split()
             self.triples = manual_merge(
                 self.triples,
-                self.spark.createDataFrame([(a, b)], "target string, node string"),
+                local_frame(self.spark, [(a, b)], "target string, node string"),
             )
             return self.triples
         if c in (":ci",):
@@ -155,8 +170,10 @@ class Console:
                 subclass_edges(self.triples)
             )
             path = find_path(edges, a, b)
-            return self.spark.createDataFrame(
-                [(i, n) for i, n in enumerate(path or [])], "step int, node string"
+            return local_frame(
+                self.spark,
+                [(i, n) for i, n in enumerate(path or [])],
+                "step int, node string",
             )
         if c in (":has",):
             from netbase_spark.operators.query_ops import member_path_exists
@@ -208,8 +225,8 @@ class Console:
                     .limit(100000)  # lookupLimit-style bound (netbase.hpp:253)
                     .collect()
                 ]
-            texts = self.spark.createDataFrame(
-                [("console", rest)], "doc_id string, text string"
+            texts = local_frame(
+                self.spark, [("console", rest)], "doc_id string, text string"
             )
             return detect_mentions_text(texts, self.alias_names, self.blacklist)
         if c in (":seo",):
@@ -225,7 +242,7 @@ class Console:
                 .select("key", F.col("key").alias("label"))
             )
             idx = seo_index(labels, node_degrees(self.triples))
-            probe = self.spark.createDataFrame([(rest,)], "q string").select(
+            probe = local_frame(self.spark, [(rest,)], "q string").select(
                 seo_slug_col(F.col("q")).alias("slug")
             )
             return idx.join(F.broadcast(probe), "slug")
@@ -246,8 +263,8 @@ class Console:
 
             parts = rest.split(None, 1)
             if len(parts) == 2:
-                mapping = self.spark.createDataFrame(
-                    [(parts[0], parts[1])], "node string, rep string"
+                mapping = local_frame(
+                    self.spark, [(parts[0], parts[1])], "node string, rep string"
                 )
                 self.triples = rewrite_triples(self.triples, mapping)
                 return self.triples

@@ -21,7 +21,10 @@ serving layer reads MATERIALIZED tables:
 - ``/count`` introspection numbers are computed once at startup;
 - ad-hoc console lines (``/q/...``) DO run through the live Console —
   that is the interactive surface, explicitly not the hot path, and it
-  shares the one SparkSession (threaded handler, no forking).
+  shares the one SparkSession (threaded handler, no forking).  The shim
+  is read-only: a line running a ``Console.MUTATING`` command (insert,
+  update, delete, merge, save/load/import, paging/view state) gets 403,
+  so no client can change or repoint the graph the others read.
 
 Formats: a ``json`` / ``csv`` / ``txt`` path prefix selects the
 response rendering (webserver.cpp's format prefixes); default json.
@@ -32,7 +35,8 @@ Endpoints::
     GET /[fmt/]ee/<text>        -> entity linking over the text
     GET /[fmt/]entities/<text>  -> alias of ee/
     GET /[fmt/]q/<console line> -> console router (query language, BGPs,
-                                   ":all X", property questions, ...)
+                                   ":all X", property questions, ...);
+                                   403 for a mutating command
     GET /?q=<line>              -> same as /q/<line>
     GET /count                  -> {"statements": N, "nodes": N}
 """
@@ -143,6 +147,9 @@ class KgHttpServer:
                     )
             return 200, rows, fmt
         if head == "q":
+            if self.console.mutates(rest):
+                cmd = rest.split()[0]
+                return 403, [{"error": f"read-only server: {cmd!r} refused"}], fmt
             df = self.console.execute(rest)
             if df is None:
                 return 200, [], fmt

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from netbase_spark.plans.broadcast_gate import collect_limit, local_frame
+
 
 def _persistent_ids(spark) -> set[int]:
     m = spark.sparkContext._jsc.getPersistentRDDs()
@@ -70,13 +72,13 @@ def connected_components(
     sameAs-class edge sets are label-table-sized, not corpus-sized, so
     the driver path is the common case even at 10^12 docs; the
     distributed loop is the guarantee it stays correct when it isn't.
+    The driver path reads ``edges`` once and returns a ``LocalRelation``.
     """
-    if driver_threshold and edges.limit(driver_threshold + 1).count() <= driver_threshold:
-        pairs = [
-            (r[0], r[1])
-            for r in edges.select("src", "dst").collect()
-            if r[0] is not None and r[1] is not None
-        ]
+    if driver_threshold:
+        # one read decides AND fetches: the +1 row proves overflow
+        got = collect_limit(edges.select("src", "dst"), driver_threshold + 1)
+    if driver_threshold and len(got) <= driver_threshold:
+        pairs = [(a, b) for a, b in got if a is not None and b is not None]
         parent: dict = {}
 
         def find(x):
@@ -95,11 +97,8 @@ def connected_components(
                 parent[hi] = lo
         rows = [(n, find(n)) for n in parent]
         rows = [(n, r) for n, r in rows if n != r]
-        schema = "node string, rep string"
         f = edges.schema["src"].dataType.simpleString()
-        if f != "string":
-            schema = f"node {f}, rep {f}"
-        return edges.sparkSession.createDataFrame(rows, schema)
+        return local_frame(edges.sparkSession, rows, f"node {f}, rep {f}")
 
     sym = _pin(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -351,5 +350,5 @@ def manual_merge(triples: DataFrame, pairs: DataFrame) -> DataFrame:
     rows = [(n, find(n)) for n in rep]
     if not rows:
         return triples
-    mapping = spark.createDataFrame(rows, "node string, rep string")
+    mapping = local_frame(spark, rows, "node string, rep string")
     return rewrite_triples(triples, mapping)

@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from netbase_spark.plans.broadcast_gate import local_frame
+
 # 64-bit signature carried as two 32-bit halves: neither Spark conv()
 # nor DuckDB '0x..'::BIGINT can build a full unsigned 64-bit value
 # without signed overflow, and two ints band-split cleanly.
@@ -446,7 +448,7 @@ def cosine_neardup_pairs(
     n = emb.count()
     if n == 0:
         id_t = emb.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame([], f"a {id_t}, b {id_t}, sim_e4 long")
+        return local_frame(spark, [], f"a {id_t}, b {id_t}, sim_e4 long")
     n_tiles = max(1, math.ceil(n / tile_rows))
     id_t = emb.schema[id_col].dataType.simpleString()
     thr = int(threshold_e4)
@@ -573,16 +575,15 @@ def ann_lsh_buckets(
     import numpy as np
     import pandas as pd
 
+    id_t = emb.schema[id_col].dataType.simpleString()
+    vec_t = emb.schema[vec_col].dataType.simpleString()
+    schema = f"vec_id {id_t}, bucket int"
+    if keep_vec:
+        schema += f", embedding {vec_t}"
     first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
     if first is None:
-        # empty-input shape must match the normal path: actual id/vec
-        # dtypes, and the embedding column when keep_vec is set
-        id_t = emb.schema[id_col].dataType.simpleString()
-        schema = f"{id_col} {id_t}, bucket int"
-        if keep_vec:
-            vec_t = emb.schema[vec_col].dataType.simpleString()
-            schema += f", {vec_col} {vec_t}"
-        return emb.sparkSession.createDataFrame([], schema)
+        # empty input: the normal path's columns, no rows
+        return local_frame(emb.sparkSession, [], schema)
     dims = int(first["d"])
     bc = emb.sparkSession.sparkContext.broadcast(
         _plane_weights_int(n_planes, dims) if exact
@@ -610,11 +611,6 @@ def ann_lsh_buckets(
                 out["embedding"] = pdf[vec_col]
             yield pd.DataFrame(out)
 
-    id_t = emb.schema[id_col].dataType.simpleString()
-    vec_t = emb.schema[vec_col].dataType.simpleString()
-    schema = f"vec_id {id_t}, bucket int"
-    if keep_vec:
-        schema += f", embedding {vec_t}"
     return emb.select(id_col, vec_col).mapInPandas(block, schema=schema)
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from netbase_spark.operators.mutate import rel_id_for, upsert_triples
+from netbase_spark.plans.broadcast_gate import local_frame
 from netbase_spark.relations import REL_NAMES
 
 INCLUDE_REL = rel_id_for("include")
@@ -54,8 +55,8 @@ def exclude_rule_rows(spark, node: str | None, term: str) -> DataFrame:
     """One ``(node, exclude, term)`` statement; ``node=None`` is the
     global ``:exclude term`` form (src/console.cpp:442-446)."""
     owner = node if node is not None else GLOBAL_EXCLUDE_NODE
-    return spark.createDataFrame(
-        [(owner, EXCLUDE_REL, term)], "subj string, rel int, obj string"
+    return local_frame(
+        spark, [(owner, EXCLUDE_REL, term)], "subj string, rel int, obj string"
     )
 
 
@@ -70,7 +71,7 @@ def include_rule_rows(
     typ = get_type(triples, [node]).select("type").limit(1).collect()
     if typ and typ[0][0] is not None and typ[0][0] != node:
         rows.append((typ[0][0], INCLUDE_REL, term))
-    return spark.createDataFrame(rows, "subj string, rel int, obj string")
+    return local_frame(spark, rows, "subj string, rel int, obj string")
 
 
 def add_view_rule(

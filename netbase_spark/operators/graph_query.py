@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from netbase_spark.plans.broadcast_gate import collect_limit, local_frame
+
 _POS = ("subj", "rel", "obj")
 
 
@@ -254,7 +256,7 @@ def path_closure(
         return _with_identity(edges)
 
     if driver_threshold:
-        pairs = edges.limit(driver_threshold + 1).collect()
+        pairs = collect_limit(edges, driver_threshold + 1)
     if driver_threshold and len(pairs) <= driver_threshold:
         adj: dict = {}
         for a, b in pairs:
@@ -287,9 +289,7 @@ def path_closure(
                         "the reference's truncating semantics"
                     )
             rows.extend((n, b) for b in seen)
-        out = triples.sparkSession.createDataFrame(
-            rows, f"subj {st}, obj {ot}"
-        )
+        out = local_frame(triples.sparkSession, rows, f"subj {st}, obj {ot}")
         return _with_identity(out)
 
     # Semi-naive frontier loop, LEVELS kept as separate pinned frames:
@@ -696,7 +696,7 @@ def bgp_match(
         # null — but they are still output columns
         for _pats, _possible, _shared, new in opt_plan:
             fields.extend(T.StructField(v[1:], dt) for v, dt in new)
-        return triples.sparkSession.createDataFrame([], T.StructType(fields))
+        return local_frame(triples.sparkSession, [], T.StructType(fields))
 
     # build each distinct Path's closure table exactly once (group
     # sub-BGPs receive the parent's dict so a path inside an optional
@@ -748,11 +748,11 @@ def bgp_match(
                     for v in defined
                 ]
             )
-            vdf = (
-                triples.sparkSession.createDataFrame(
-                    [[row[v] for v in defined] for row in rows], schema
-                ).dropDuplicates()
-            )
+            vdf = local_frame(
+                triples.sparkSession,
+                [[row[v] for v in defined] for row in rows],
+                schema,
+            ).dropDuplicates()
             if sh_def:
                 b = out.join(vdf, [v[1:] for v in sh_def])
             else:

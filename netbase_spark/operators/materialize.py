@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from netbase_spark.plans.broadcast_gate import local_frame
+
 
 def node_degrees(triples: DataFrame, salt_buckets: int = 32) -> DataFrame:
     """degree per node over subj and obj sides with two-stage salted
@@ -321,9 +323,7 @@ def pagerank(
     if n == 0:
         # empty edge set: same schema, no rows (no 1/N to divide by)
         node_t = nodes.schema["node"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            [], f"node {node_t}, pr_e6 long"
-        )
+        return local_frame(edges.sparkSession, [], f"node {node_t}, pr_e6 long")
     d = int(damping_pct)
     base = (PAGERANK_E12 * (100 - d) // 100) // n
     out_deg = e.groupBy("src").agg(F.count("*").alias("outd"))
@@ -392,8 +392,8 @@ def pagerank_resume(
     if n == 0:
         node_t = nodes.schema["node"].dataType.simpleString()
         return (
-            edges.sparkSession.createDataFrame(
-                [], f"node {node_t}, pr_e12 long, pr_e6 long"
+            local_frame(
+                edges.sparkSession, [], f"node {node_t}, pr_e12 long, pr_e6 long"
             ),
             0,
         )

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from netbase_spark.normalize import norm_name, norm_name_col
+from netbase_spark.plans.broadcast_gate import local_frame
 from netbase_spark.relations import PREDICATE_CANON, canon_predicate
 
 # learned free predicates get a stable md5-slice id in [10^4, 2^30)
@@ -182,7 +183,8 @@ def set_value(
     key = norm_name(subj) or subj
     keep = triples.where(~((F.col("subj") == key) & (F.col("rel") == rel)))
     spark = triples.sparkSession
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(key, rel, norm_name(new_obj) or new_obj, "update", None)],
         "subj string, rel int, obj string, rule string, doc_id string",
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from netbase_spark.plans.broadcast_gate import collect_limit, local_frame
 from netbase_spark.relations import (
     INSTANCE,
     INVERSE_PAIRS,
@@ -95,7 +96,7 @@ def isa_closure(
 
     if driver_threshold:
         # one job decides AND fetches: the +1 row proves overflow
-        pairs = upward_edges(triples).limit(driver_threshold + 1).collect()
+        pairs = collect_limit(upward_edges(triples), driver_threshold + 1)
     if driver_threshold and len(pairs) <= driver_threshold:
         adj: dict = {}
         for r in pairs:
@@ -112,9 +113,7 @@ def isa_closure(
                 stack.extend(adj.get(a, ()))
             rows.extend((n, a) for a in seen if a != n)
         f = triples.schema["subj"].dataType.simpleString()
-        return triples.sparkSession.createDataFrame(
-            rows, f"node {f}, anc {f}"
-        )
+        return local_frame(triples.sparkSession, rows, f"node {f}, anc {f}")
 
     edges = _pin(upward_edges(triples))
     # explicit column renames, not alias-qualified self-joins: a
@@ -197,10 +196,8 @@ def extend_closure(
     )
 
     if driver_threshold:
-        both = (
-            closure.select("node", "anc").unionByName(e)
-            .limit(driver_threshold + 1)
-            .collect()
+        both = collect_limit(
+            closure.select("node", "anc").unionByName(e), driver_threshold + 1
         )
         if len(both) <= driver_threshold:
             adj: dict = {}
@@ -218,9 +215,7 @@ def extend_closure(
                     stack.extend(adj.get(x, ()))
                 rows.extend((n, a) for a in seen if a != n)
             f = closure.schema["node"].dataType.simpleString()
-            return closure.sparkSession.createDataFrame(
-                rows, f"node {f}, anc {f}"
-            )
+            return local_frame(closure.sparkSession, rows, f"node {f}, anc {f}")
 
     c = _pin(closure.select("node", "anc"))
     e = _pin(e)
@@ -264,7 +259,7 @@ def extend_closure(
 def _semantic_keys(spark, term: str, closure: DataFrame, colname: str) -> DataFrame:
     """{term} ∪ descendants(term) per the closure — the match set for a
     semantic pattern term (isA4 subsumption, src/netbase.cpp:1764-1785)."""
-    exact = spark.createDataFrame([(term,)], f"{colname} string")
+    exact = local_frame(spark, [(term,)], f"{colname} string")
     desc = closure.where(F.col("anc") == term).select(
         F.col("node").alias(colname)
     )
@@ -428,7 +423,7 @@ def bfs_distances(
     from netbase_spark.operators.canonicalize import _pin, _unpin
 
     if driver_threshold:
-        pairs = edges.select("src", "dst").limit(driver_threshold + 1).collect()
+        pairs = collect_limit(edges.select("src", "dst"), driver_threshold + 1)
     if driver_threshold and len(pairs) <= driver_threshold:
         adj: dict = {}
         for r in pairs:
@@ -449,8 +444,8 @@ def bfs_distances(
                 frontier = nxt
             rows.extend((n, root, d) for n, d in seen.items())
         f = sources.schema["node"].dataType.simpleString()
-        return sources.sparkSession.createDataFrame(
-            rows, f"node {f}, root {f}, depth int"
+        return local_frame(
+            sources.sparkSession, rows, f"node {f}, root {f}, depth int"
         )
 
     visited = _pin(
@@ -483,7 +478,7 @@ def shortest_path_length(
 ) -> int | None:
     """``findPath`` hop count between two nodes, None if unreachable."""
     spark = edges.sparkSession
-    sources = spark.createDataFrame([(src,)], "node string")
+    sources = local_frame(spark, [(src,)], "node string")
     hit = (
         bfs_distances(edges, sources, max_depth)
         .where(F.col("node") == dst)
@@ -512,7 +507,7 @@ def find_path(
         return [src]
     e = edges.select("src", "dst")
     visited = _pin(
-        spark.createDataFrame([(src, None)], "node string, parent string")
+        local_frame(spark, [(src, None)], "node string, parent string")
     )
     frontier = visited
     levels: list[DataFrame] = []
@@ -705,7 +700,7 @@ def all_instances(
     edges = instance_edges(triples)
     if include_classes:
         edges = edges.unionByName(subclass_edges(triples)).distinct()
-    sources = spark.createDataFrame([(word,)], "node string")
+    sources = local_frame(spark, [(word,)], "node string")
     return (
         bfs_distances(edges, sources, max_depth)
         .where(F.col("depth") > 0)
@@ -1013,7 +1008,7 @@ def find_properties(
     rel-partitioned triple layout — and never shuffled."""
     spark = triples.sparkSession
     if isinstance(names, (list, tuple)):
-        names = spark.createDataFrame([(n,) for n in names], "name string")
+        names = local_frame(spark, [(n,) for n in names], "name string")
     names = names.select("name").distinct()
 
     inst = (

@@ -28,6 +28,13 @@ The cap defaults to ``spark.netbase.broadcastCapBytes`` (conf) or
 ``cap_bytes=1`` and force the broadcast with a huge cap; both paths are
 property-tested identical on the operators that use the gate
 (tests/test_mention_shuffle.py, tests/test_broadcast_gate.py).
+
+A PythonRDD-backed frame carries no Catalyst statistics, so every gate
+over it pays the sampled jobs.  Driver-built relations (a union-find
+result, a BFS seed, a corrections table) therefore go through
+:func:`local_frame`, which makes them ``LocalRelation``s: exact
+statistics (the gate costs zero jobs) and no Python worker when a later
+job reads them.
 """
 
 from __future__ import annotations
@@ -42,6 +49,57 @@ DEFAULT_CAP_BYTES = 256 << 20  # 256 MiB serialized — comfortable per-executor
 # the driver-collect gate inflates by this factor plus a per-entry floor
 PY_OVERHEAD_FACTOR = 3
 PY_PER_ROW_BYTES = 64
+
+
+def local_frame(spark, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples, lists or Rows, positional) as a JVM
+    ``LocalRelation`` with ``schema`` (a StructType or a DDL string).
+
+    ``createDataFrame(list_of_tuples)`` yields a PythonRDD: every job
+    that reads it starts Python workers just to unpickle the rows
+    (a fixed ~0.3 s per task wave on a 4-core host, whatever the row
+    count), and its plan has no size statistics, so each size gate
+    over it pays a count + sample.  A ``pyarrow.Table`` built with the
+    Spark schema lands in the JVM as a ``LocalRelation`` with exact
+    statistics.  The Arrow table is built here rather than through
+    pandas, which falls back to a PythonRDD when conversion fails
+    (e.g. None in an int column); empty ``rows`` keep ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = zip(*rows) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def collect_limit(df: DataFrame, n: int) -> list:
+    """At most ``n`` rows of ``df`` on the driver, in ONE Spark job.
+
+    ``df.limit(n).collect()`` scans one partition, then four times as
+    many per further job until it holds ``n`` rows: a sparse input (a
+    handful of merge edges, a small delta) costs two or three jobs, and
+    each job over a Python-backed input starts its workers again.  The
+    Arrow collect runs the same limit as one job over every partition (a
+    local limit per partition, then one single-partition exchange), so
+    driver memory stays bounded by ``n`` rows.  An input past ``n`` rows
+    is still scanned whole, where the incremental take could stop early;
+    every caller then takes a distributed path that scans it anyway.
+    Rows come back as ``Row``s; atomic column types convert as
+    ``collect()`` converts them (nested and timestamp columns would
+    not)."""
+    from pyspark.sql import Row
+
+    table = df.limit(n).toArrow()
+    row = Row(*table.column_names)
+    return [row(*v) for v in zip(*(c.to_pylist() for c in table.columns))]
 
 
 def broadcast_cap_bytes(spark, cap_bytes: int | None = None) -> int:
@@ -137,9 +195,9 @@ def collect_under_cap(
     lineage twice (and three times when Catalyst has no stats, e.g.
     localCheckpoint-backed plans — measured ~0.7 s per construction at
     fixture scale); this probe instead collects ``cap_rows + 1`` rows
-    via CollectLimit (incremental partition scan, cheap for small
-    results) where ``cap_rows = cap // PY_PER_ROW_BYTES`` — the row
-    count the cap could possibly admit at the per-entry overhead floor.
+    via :func:`collect_limit`, where ``cap_rows = cap //
+    PY_PER_ROW_BYTES`` is the row count the cap could possibly admit at
+    the per-entry overhead floor.
     Returns the rows when they fit (the caller builds its dict from
     them — no second execution), or None when the limit was hit or the
     sampled estimate exceeds the cap (caller takes the shuffle path).
@@ -149,7 +207,7 @@ def collect_under_cap(
     cap = broadcast_cap_bytes(df.sparkSession, cap_bytes)
     # clamp to a Java int: limit() rejects larger arguments
     cap_rows = min(max(1, cap // PY_PER_ROW_BYTES), (1 << 31) - 2)
-    rows = df.limit(cap_rows + 1).collect()
+    rows = collect_limit(df, cap_rows + 1)
     if len(rows) > cap_rows:
         return None
     sample = rows[:sample_rows]

@@ -46,6 +46,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from netbase_spark.plans.broadcast_gate import local_frame
+
 
 def _vdir(table: str) -> str:
     return os.path.join(table, "_versions")
@@ -278,7 +280,7 @@ def read(spark: SparkSession, table: str, version: int | None = None) -> DataFra
                 f"version {man['version']} of {table} lists no files and "
                 "predates schema-bearing manifests"
             )
-        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        return local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     return spark.read.parquet(*paths)
 
 
@@ -306,9 +308,10 @@ def expire_versions(
     ``keep_future=False`` to reclaim that branch's disk.  A leftover
     ``_staging-*`` directory is removed only once its mtime is older
     than ``staging_grace_secs``: a fresh one is the normal state of an
-    IN-FLIGHT append/replace commit (the streaming loop runs expiry
-    between batches), and deleting it mid-write would crash or truncate
-    that commit.  Returns the deleted data file names."""
+    IN-FLIGHT append/replace commit, and deleting it mid-write would
+    crash or truncate that commit — expiry may run beside a live writer
+    (the streaming loop itself never calls it; a caller runs it between
+    batches).  Returns the deleted data file names."""
     import time
     cur = current_version(table)
     if cur is None:

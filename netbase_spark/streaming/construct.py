@@ -80,32 +80,39 @@ def apply_merges(
         rewrite_triples,
     )
     from netbase_spark.operators.mentions import remap_scan_entities
-    from netbase_spark.plans import versioned as V
+    from netbase_spark.plans.broadcast_gate import (
+        collect_under_cap,
+        gated_broadcast,
+        local_frame,
+    )
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
 
     old_map = artifacts.mapping
     new_map = merge_mapping(old_map, merge_edges).localCheckpoint()
-    changed = mapping_delta(old_map, new_map).localCheckpoint()
-    if changed.limit(1).count() == 0:
-        return artifacts
-
-    # failure atomicity: the broadcast-gazetteer remap (step 3) needs
-    # the rep delta on the driver; run its collect gate BEFORE the table
-    # commit so a too-large delta fails with the on-disk state untouched
-    # (raising after the rewrite would leave a merged table with stale
-    # artifacts and no handle to recover)
-    rep_rows = None
-    if artifacts.scan_bc is not None:
-        from netbase_spark.plans.broadcast_gate import collect_under_cap
-
-        rep_rows = collect_under_cap(changed.select("node", "rep"))
-        if rep_rows is None:
+    # the rep delta is collected ONCE: its rows become the LocalRelation
+    # every later step joins against, the isin list of the surgical
+    # rewrite and the gazetteer remap.  Only a delta over the collect
+    # cap stays a (checkpointed) DataFrame.
+    delta = mapping_delta(old_map, new_map).select("node", "rep")
+    rep_rows = collect_under_cap(delta)
+    if rep_rows is None:
+        # failure atomicity: the broadcast-gazetteer remap (step 3)
+        # needs the rep delta on the driver; refuse BEFORE the table
+        # commit so a too-large delta fails with the on-disk state
+        # untouched (raising after the rewrite would leave a merged
+        # table with stale artifacts and no handle to recover)
+        if artifacts.scan_bc is not None:
             raise ValueError(
                 "mapping delta exceeds the driver-collect cap; rebuild "
                 "artifacts via build_artifacts (shuffle path) instead of "
                 "remapping the broadcast in place (no table state was "
                 "modified)"
             )
+        changed = delta.localCheckpoint()
+    elif not rep_rows:
+        return artifacts
+    else:
+        changed = local_frame(spark, rep_rows, delta.schema)
 
     # 2. delta-rewrite the table.  Versioned tables get the SURGICAL
     # path: only the data FILES containing touched rows are rewritten;
@@ -115,7 +122,8 @@ def apply_merges(
     # the write, not the rewrite join, is the dominant cost at scale
     # (measured: BENCH/incremental_merge_probe.json).
     if versioned:
-        _surgical_recanonicalize(spark, table_dir, changed, batch_id)
+        nodes = None if rep_rows is None else [r["node"] for r in rep_rows]
+        _surgical_recanonicalize(spark, table_dir, changed, batch_id, nodes)
     else:
         existing = spark.read.parquet(table_dir)
         updated = recanonicalize_delta(existing, changed)
@@ -134,8 +142,6 @@ def apply_merges(
         rep_of = {r["node"]: r["rep"] for r in rep_rows}
         scan_bc = remap_scan_entities(spark, scan_bc, rep_of)
     if alias_entity is not None:
-        from netbase_spark.plans.broadcast_gate import gated_broadcast
-
         d = gated_broadcast(
             changed.select(F.col("node").alias("entity"), F.col("rep").alias("_r"))
         )
@@ -161,17 +167,19 @@ time, and parquet In-pushdown degrades on huge lists — past this, the
 broadcast-marker join is strictly better."""
 
 
-def _surgical_recanonicalize(spark, table_dir, changed, batch_id):
+def _surgical_recanonicalize(spark, table_dir, changed, batch_id, nodes=None):
     """File-level delta rewrite of a versioned triple table: one
-    column-pruned scan finds the data files containing touched rows;
-    ONLY those files are re-read, their delta-touched ROWS rewritten
-    through the mapping (untouched rows in the same file carry verbatim
-    — identical split to ``recanonicalize_delta``, so sameAs-class rels
-    and self-loops already stored in untouched rows survive exactly as
-    the plain path keeps them), deduplicated against the untouched
-    files' keys (first-writer, via a key-only scan), and committed as
-    a ``replace_files`` manifest swap.  End-state equality with the
-    full ``recanonicalize_delta`` is pinned by
+    column-pruned scan finds the data files containing touched rows
+    (``nodes``: ``changed``'s node keys when the caller already holds
+    them, else collected here); ONLY those files are re-read, their
+    delta-touched ROWS rewritten through the mapping (untouched rows in
+    the same file carry verbatim — identical split to
+    ``recanonicalize_delta``, so sameAs-class rels and self-loops
+    already stored in untouched rows survive exactly as the plain path
+    keeps them), deduplicated against the untouched files' keys
+    (first-writer, via a key-only scan), and committed as a
+    ``replace_files`` manifest swap.  End-state equality with the full
+    ``recanonicalize_delta`` is pinned by
     tests/test_streaming_construct.py."""
     import os
 
@@ -180,7 +188,7 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id):
     from netbase_spark.operators.canonicalize import recanonicalize_delta
     from netbase_spark.operators.evaluate import fresh_triples
     from netbase_spark.plans import versioned as V
-    from netbase_spark.plans.broadcast_gate import gated_broadcast
+    from netbase_spark.plans.broadcast_gate import collect_limit, gated_broadcast
 
     man = V.read_manifest(table_dir)
     data_dir = os.path.join(table_dir, "data")
@@ -191,9 +199,10 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id):
     # key-clustered layout: write_triples_bucketed / repartitionByRange
     # keeps each node's rows in O(1) files).  Past ISIN_NODE_CAP, fall
     # back to broadcast-marker joins (full scan, still column-pruned).
-    node_rows = changed.select("node").limit(ISIN_NODE_CAP + 1).collect()
-    if len(node_rows) <= ISIN_NODE_CAP:
-        nodes = [r[0] for r in node_rows]
+    if nodes is None:
+        nodes = collect_limit(changed.select("node"), ISIN_NODE_CAP + 1)
+        nodes = [r[0] for r in nodes]
+    if len(nodes) <= ISIN_NODE_CAP:
         cond = F.col("subj").isin(nodes) | F.col("obj").isin(nodes)
         touched_q = (
             full.withColumn("_f", F.input_file_name())

@@ -101,5 +101,25 @@ def test_count_and_entity_linking(served):
     hits = [r for r in rows if r.get("alias_key") == "gehren"]
     assert hits and hits[0]["seo"] == "gehren"
     # bad console input surfaces as 400, not a hung 500
-    status, body = _get(f"{url}/q/:update%20broken", accept_status=400)
+    status, body = _get(f"{url}/q/:path%20gehren", accept_status=400)
     assert status == 400 and "error" in json.loads(body)[0]
+
+
+@pytest.mark.parametrize("line", [
+    ":learn gehren is a town", ":update gehren set Population=1",
+    ":delete gehren", ":d gehren", ":merge gehren city", ":ci",
+    ":label gehren gehren2", ":save snapshot", ":load snapshot",
+    ":import data.nt", ":more", ":include type", "limit 5",
+])
+def test_mutating_console_lines_are_refused(served, line):
+    """The shim is read-only: every command that mutates, writes,
+    repoints or changes shared session state is a 403, through both
+    the /q/ path and the ?q= form, and the served graph is unchanged."""
+    from urllib.parse import quote
+
+    srv, url, _, t = served
+    before = srv.console.triples
+    for u in (f"{url}/q/{quote(line, safe='')}", f"{url}/?q={quote(line)}"):
+        status, body = _get(u, accept_status=403)
+        assert status == 403 and "read-only" in json.loads(body)[0]["error"]
+    assert srv.console.triples is before and srv.console.limit == 200
