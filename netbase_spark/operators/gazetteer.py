@@ -35,20 +35,27 @@ def build_alias_table(labels: DataFrame, with_seo: bool = True) -> DataFrame:
         F.col("label_type").alias("source"),
     ).where(F.length("name_norm") > 0)
 
-    rows = base
+    rows = base.withColumn("_seo", F.lit(False))
     if with_seo:
         seo = labels.select(
             seo_slug_col(F.col("label")).alias("name_norm"),
             "key",
             F.lit("seo").alias("source"),
+            F.lit(True).alias("_seo"),
         ).where(F.length("name_norm") > 0)
-        rows = base.unionByName(seo)
+        rows = rows.unionByName(seo)
 
+    # a label that collides with its own SEO slug keeps its label
+    # source (the min over its label rows), so the rows with
+    # source != "seo" are exactly the with_seo=False table
+    only_seo = F.min("_seo")
     return (
-        # min(source) keeps the row deterministic when label and seo forms
-        # collide on the same (name_norm, key)
         rows.groupBy("name_norm", "key")
-        .agg(F.min("source").alias("source"))
+        .agg(
+            F.when(only_seo, F.lit("seo"))
+            .otherwise(F.min(F.when(~F.col("_seo"), F.col("source"))))
+            .alias("source")
+        )
         .join(prior, "key", "left")
         .select("name_norm", "key", "source", "prior")
     )

@@ -3,27 +3,25 @@ checkpoint resume.
 
 Stage graph (north_rule):
 
-    labels ──> gazetteer(aliases) ───────────────┐ (compose alias->rank-1
-    labels ──> dissect + alias edges ──> CC map ──┤  entity->canonical rep,
-                                                  v  one broadcast dict)
-    docs ──────────> fused scan+link+canonicalize ──> mention triples ─┐ (hardlink publish)
-    label triples ──> rewrite through CC map + dedup ──────────────────┴──> triples
-                                                                            ├─> adjacency (obj-keyed reverse index;
-                                                                            │   the triple table IS the subj side)
-                                                                            └─> degrees (union-view group-count)
+    labels ──> gazetteer(aliases) ─────────────────────┐ (scan_artifacts: alias->rank-1
+    labels + raw ──> label side ──> CC map ────────────┤  entity->canonical rep, size-gated)
+                                                        v
+    docs ──────────> scan_batch (scan+link+canonicalize) ──> mention triples ─┐ (hardlink publish)
+    label side ──> rewrite through CC map + dedup ────────────────────────────┴──> triples
+                                                                                   ├─> adjacency (obj-keyed reverse index;
+                                                                                   │   the triple table IS the subj side)
+                                                                                   └─> degrees (union-view group-count)
 
+The construction itself lives in plans/synth_pipeline (the construction
+core, shared with ``construct_from`` and the stream); this module only
+adds staging, resume, metrics and the rel-partitioned write layout.
 Canonicalization is LABEL-SIDE-FIRST: sameAs-class merge edges come only
-from dissect rules / label conflicts / synonym fixtures, never from the
-doc scan (rel=MENTIONED_IN), so the union-find map exists before any
-document is read and composes into the scan's broadcast gazetteer.
-Mention triples are then born canonical AND born distinct (obj=doc_id
-puts the doc id in the dedup key, so the scan's per-doc seen-set IS
-global distinctness) — the corpus-sized triple set never pays a dedup
-exchange.  The previous shape (raw mention triples -> broadcast-join
-link -> union -> global dropDuplicates) spent ~50 non-scaling seconds
-at 47M triples/16 cores shuffling + hash-aggregating 100% of rows to
-remove the 1.6% of duplicates, and was the single largest flat cost in
-the N->4N scaling profile.
+from the label side, never from the doc scan (rel=MENTIONED_IN), so the
+union-find map exists before any document is read and composes into the
+scan's gazetteer.  Mention triples are then born canonical AND born
+distinct (obj=doc_id puts the doc id in the dedup key, so the scan's
+per-doc seen-set IS global distinctness) — the corpus-sized triple set
+never pays a dedup exchange.
 
 Every stage writes parquet under ``<out>/<stage>/``; a stage whose
 output already exists (``_SUCCESS``) is skipped on resume — the Iceberg
@@ -40,22 +38,20 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from netbase_spark.operators.canonicalize import (
     connected_components,
     rewrite_triples,
     sameas_edges,
 )
-from netbase_spark.operators.extraction import alias_instance_edges, dissect_triples
 from netbase_spark.operators.gazetteer import build_alias_table
-from netbase_spark.operators.mentions import scan_mention_triples_gated
 from netbase_spark.operators.materialize import (
     adjacency_reverse,
     adjacency_view,
     degrees_from_adjacency,
     write_triples,
 )
+from netbase_spark.plans.synth_pipeline import label_side, scan_artifacts, scan_batch
 from netbase_spark.plans.table_io import link_partition_files, write_snapshot
 
 
@@ -128,53 +124,28 @@ class Pipeline:
         raw_triples: DataFrame | None = None,
         german: bool = False,
     ) -> DataFrame:
-        """Full construction; returns the canonical triple table."""
+        """Full construction; returns the canonical triple table.  Every
+        stage body is a construction-core step (plans/synth_pipeline)."""
         aliases = self._stage("aliases", lambda: build_alias_table(labels))
-
-        # gazetteer names for the scan come from label/altLabel rows only
-        # (SEO slugs are lookup aliases, not scan surface forms)
-        scan_aliases = aliases.where(F.col("source") != "seo")
-
-        extract = self._stage(
-            "extract_triples",
-            lambda: dissect_triples(labels, german).unionByName(
-                alias_instance_edges(labels)
-            ),
+        side = self._stage(
+            "extract_triples", lambda: label_side(labels, raw_triples, german)
         )
-        # label_side = union of already-snapshotted dimension inputs;
-        # NOT its own snapshot stage (resume recovers it for free)
-        label_side = extract
-        if raw_triples is not None:
-            label_side = label_side.unionByName(raw_triples)
-
-        # sameAs-class edges are label-side-only (the scan emits
-        # MENTIONED_IN exclusively), so the canonical map resolves
-        # BEFORE any document is read
         mapping = self._stage(
             "canonical_map",
-            lambda: connected_components(sameas_edges(label_side)),
+            lambda: connected_components(sameas_edges(side)),
         )
-
-        # fused scan -> link -> canonicalize: alias -> rank-1 entity ->
-        # canonical rep composed into one broadcast dict; the doc side
-        # runs as a single mapInPandas — no join, no shuffle, no dedup
-        # exchange (per-doc distinct == global distinct, obj=doc_id).
-        # SIZE-GATED (plans/broadcast_gate): past the broadcast cap the
-        # gazetteer stays a partitioned DataFrame and the scan becomes a
-        # probe-key shuffle join (operators/mentions shuffle fallback) —
-        # the reference's fixed 2*maxNodes Ahash assumption
-        # (src/netbase.cpp:159-228) does not survive 10^8 aliases.
-        # The map builds INSIDE the stage lambda: it costs two collects +
-        # a window job, which a resumed run must not pay for a skipped
-        # stage.  The snapshot is written DIRECTLY in the final
-        # rel-partitioned layout (the scan emits one rel, so the
-        # dynamic-partition writer adds no work), which lets the triples
-        # stage below publish these files into the canonical table by
-        # hardlink instead of a full decode+re-encode pass.
+        # the scan preparation (size gate + broadcast build) runs INSIDE
+        # the stage lambda, so a resumed run does not pay for it.  The
+        # snapshot is written directly in the final rel-partitioned
+        # layout (the scan emits one rel), which lets the triples stage
+        # publish these files by hardlink instead of re-encoding them.
         self._stage(
             "mention_triples",
-            lambda: scan_mention_triples_gated(
-                docs, scan_aliases, mapping, blacklist, german
+            lambda: scan_batch(
+                docs,
+                scan_artifacts(
+                    self.spark, aliases, mapping, blacklist, german
+                ),
             ),
             write=write_triples,
         )
@@ -204,7 +175,7 @@ class Pipeline:
 
         triples = self._stage(
             "triples",
-            lambda: rewrite_triples(label_side, mapping),
+            lambda: rewrite_triples(side, mapping),
             write=_write_canonical,
         )
 

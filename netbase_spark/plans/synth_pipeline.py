@@ -1,6 +1,23 @@
-"""In-memory KG construction over the synthetic interleaved corpus —
-used by the entry contract (rows-only query), the P/R tests, and the
-bench throughput job (triples/sec at two parallelism levels)."""
+"""The construction core: the one place that composes KG construction.
+
+Both drivers of the construction use these functions and nothing else:
+
+- the staged ``plans/pipeline.Pipeline`` snapshots each step as a stage
+  (resume, metrics, rel-partitioned write layout);
+- the in-memory batch loop — :func:`build_artifacts` once, then
+  :func:`construct_from` per document batch (the entry contract, the
+  P/R tests, the bench) — and the stream's ``process_batch``
+  (streaming/construct.py) reuse the same artifacts.
+
+The steps:
+
+- :func:`label_side` — dissect ∪ alias-instance edges ∪ raw triples;
+- :func:`scan_artifacts` — the scan preparation: the SEO rule, alias ->
+  rank-1 entity -> canonical rep composition, and the
+  broadcast-vs-shuffle size gate;
+- :func:`scan_batch` — the doc side: the one dispatch between the
+  broadcast scan and the shuffle-join scan.
+"""
 
 from __future__ import annotations
 
@@ -59,37 +76,124 @@ class ConstructionArtifacts:
     10^12-doc corpus in batches (or a Structured Streaming micro-batch
     loop) must not rebuild + re-broadcast a multi-GB automaton per
     batch — at 10^7-10^8 aliases the rebuild would dominate batch
-    latency."""
+    latency.  ``label_triples`` is None when the staged Pipeline builds
+    them in its own stage."""
 
     __slots__ = (
         "label_triples", "mapping", "scan_bc", "alias_entity", "blacklist",
-        "ft_bc",
+        "ft_bc", "german",
     )
 
     def __init__(self, label_triples, mapping, scan_bc, alias_entity,
-                 blacklist, ft_bc=None):
+                 blacklist, ft_bc=None, german=False):
         self.label_triples = label_triples
         self.mapping = mapping
         self.scan_bc = scan_bc          # prepared broadcast handle, or None
         self.alias_entity = alias_entity  # DataFrame fallback, or None
         self.blacklist = blacklist
         self.ft_bc = ft_bc  # prepared first-token filter (shuffle path)
+        self.german = german
+
+
+def label_side(
+    labels: DataFrame, raw_triples: DataFrame | None = None,
+    german: bool = False,
+) -> DataFrame:
+    """Every label-side triple before canonicalization: dissect rules ∪
+    alias-instance edges ∪ the raw (e.g. synonym) triples.  sameAs-class
+    merge edges come only from here — the doc scan emits MENTIONED_IN
+    exclusively — so the canonical map resolves before any document is
+    read."""
+    from netbase_spark.operators.extraction import (
+        alias_instance_edges,
+        dissect_triples,
+    )
+
+    side = dissect_triples(labels, german).unionByName(
+        alias_instance_edges(labels)
+    )
+    return side if raw_triples is None else side.unionByName(raw_triples)
+
+
+def scan_artifacts(
+    spark: SparkSession,
+    aliases: DataFrame,
+    mapping: DataFrame,
+    blacklist: set[str],
+    german: bool = False,
+    cap_bytes: int | None = None,
+    label_triples: DataFrame | None = None,
+) -> ConstructionArtifacts:
+    """Prepare the mention scan from the alias table
+    (``gazetteer.build_alias_table``) and the canonical map.
+
+    The scan matches label/altLabel surface forms only: SEO slugs are
+    lookup aliases, not scan surface forms.  Each surviving alias
+    resolves to its rank-1 entity, then to that entity's canonical rep
+    (``linking.alias_entity_table``).  The size gate is a ONE-job
+    CollectLimit probe (``broadcast_gate.collect_under_cap``): under the
+    cap the composed alias->entity map becomes one prepared broadcast
+    (the doc side then needs no join and no shuffle); above it the
+    table stays a checkpointed DataFrame for the probe-key shuffle join,
+    with its first-token pre-filter prepared once — the reference's
+    fixed 2*maxNodes Ahash assumption (src/netbase.cpp:159-228) does not
+    survive 10^8 aliases."""
+    from pyspark.sql import functions as F
+
+    from netbase_spark.operators.linking import alias_entity_table
+    from netbase_spark.operators.mentions import (
+        first_token_hash_filter,
+        prepare_triple_scan,
+    )
+    from netbase_spark.plans.broadcast_gate import collect_under_cap
+
+    label_forms = aliases.where(~F.col("source").eqNullSafe("seo"))
+    ae = alias_entity_table(label_forms, mapping)
+    rows = collect_under_cap(ae, cap_bytes)
+    if rows is not None:
+        amap = {r["alias_key"]: r["entity"] for r in rows}
+        bc = prepare_triple_scan(spark, amap, blacklist)
+        return ConstructionArtifacts(
+            label_triples, mapping, bc, None, blacklist, german=german
+        )
+    ae = ae.localCheckpoint()
+    return ConstructionArtifacts(
+        label_triples, mapping, None, ae, blacklist,
+        ft_bc=first_token_hash_filter(ae, "alias_key"), german=german,
+    )
+
+
+def scan_batch(docs: DataFrame, artifacts: ConstructionArtifacts) -> DataFrame:
+    """Canonical, per-doc-distinct mention triples of one document
+    batch: the broadcast scan (one mapInPandas over doc partitions, no
+    join, no shuffle) or, past the broadcast cap, the shuffle join
+    against the alias->entity table."""
+    from netbase_spark.operators.mentions import (
+        scan_mention_triples_prepared,
+        scan_mention_triples_shuffle,
+    )
+
+    if artifacts.scan_bc is not None:
+        return scan_mention_triples_prepared(
+            docs, artifacts.scan_bc, artifacts.german
+        )
+    return scan_mention_triples_shuffle(
+        docs, artifacts.alias_entity, artifacts.blacklist, artifacts.german,
+        ft_bc=artifacts.ft_bc,
+    )
 
 
 def build_artifacts(
     spark: SparkSession,
     labels_df: DataFrame | None = None,
     cap_bytes: int | None = None,
+    raw_triples: DataFrame | None = None,
+    blacklist: set[str] | None = None,
+    german: bool = False,
 ) -> ConstructionArtifacts:
-    """Build the docs-independent half of the construction.
-
-    sameAs-class merge edges come from the LABEL side only (dissect
-    rules + synonym fixtures); the doc side emits MENTIONED_IN edges
-    exclusively.  So candidate selection AND canonicalization both
-    resolve before any document is read: compose alias -> rank-1
-    entity -> canonical rep into one broadcast map (size-gated via
-    plans/broadcast_gate: collect-and-broadcast under the cap,
-    checkpointed DataFrame for the shuffle-join path above it).
+    """Build the docs-independent half of the construction from the
+    inputs ``Pipeline.run`` takes; labels, raw triples and blacklist
+    default to the fixtures (``data/fixtures``).
 
     localCheckpoint, not persist: label-side tables are dimension-sized
     and read by multiple consumers; checkpoint blocks are freed by the
@@ -106,43 +210,22 @@ def build_artifacts(
         rewrite_triples,
         sameas_edges,
     )
-    from netbase_spark.operators.extraction import (
-        alias_instance_edges,
-        dissect_triples,
-    )
     from netbase_spark.operators.gazetteer import build_alias_table
-    from netbase_spark.operators.linking import alias_entity_table
-    from netbase_spark.operators.mentions import prepare_triple_scan
-    from netbase_spark.plans.broadcast_gate import collect_under_cap
 
     if labels_df is None:
         labels_df = labels_spark_df(spark)
+    if raw_triples is None:
+        raw_triples = synonym_spark_df(spark)
+    if blacklist is None:
+        blacklist = blacklist_fixture()
+    side = label_side(labels_df, raw_triples, german).localCheckpoint()
+    mapping = connected_components(sameas_edges(side))
+    label_triples = rewrite_triples(side, mapping).localCheckpoint()
+    # no SEO slugs: scan_artifacts would drop them (a label that
+    # collides with its own slug keeps its label source either way)
     aliases = build_alias_table(labels_df, with_seo=False)
-    label_side = (
-        dissect_triples(labels_df)
-        .unionByName(alias_instance_edges(labels_df))
-        .unionByName(synonym_spark_df(spark))
-        .localCheckpoint()
-    )
-    mapping = connected_components(sameas_edges(label_side))
-    label_triples = rewrite_triples(label_side, mapping).localCheckpoint()
-    blacklist = blacklist_fixture()
-    ae = alias_entity_table(aliases, mapping)
-    rows = collect_under_cap(ae, cap_bytes)
-    if rows is not None:
-        amap = {r["alias_key"]: r["entity"] for r in rows}
-        bc = prepare_triple_scan(spark, amap, blacklist)
-        return ConstructionArtifacts(label_triples, mapping, bc, None, blacklist)
-    # oversized gazetteer: keep the alias->entity table distributed;
-    # checkpoint so per-batch scans don't re-run the dimension lineage,
-    # and prepare the first-token probe pre-filter ONCE (mentions.
-    # first_token_hash_filter) so every batch's shuffle scan reuses it
-    ae = ae.localCheckpoint()
-    from netbase_spark.operators.mentions import first_token_hash_filter
-
-    return ConstructionArtifacts(
-        label_triples, mapping, None, ae, blacklist,
-        ft_bc=first_token_hash_filter(ae, "alias_key"),
+    return scan_artifacts(
+        spark, aliases, mapping, blacklist, german, cap_bytes, label_triples
     )
 
 
@@ -156,18 +239,6 @@ def construct_from(
     callers persist/count).  Pass prebuilt ``artifacts`` to amortize
     the dimension side across batches (micro-batch / incremental
     loops); without it the dimension side is built in-line."""
-    from netbase_spark.operators.mentions import (
-        scan_mention_triples_prepared,
-        scan_mention_triples_shuffle,
-    )
-
     if artifacts is None:
         artifacts = build_artifacts(spark)
-    if artifacts.scan_bc is not None:
-        mention_triples = scan_mention_triples_prepared(docs, artifacts.scan_bc)
-    else:
-        mention_triples = scan_mention_triples_shuffle(
-            docs, artifacts.alias_entity, artifacts.blacklist,
-            ft_bc=artifacts.ft_bc,
-        )
-    return mention_triples.unionByName(artifacts.label_triples)
+    return scan_batch(docs, artifacts).unionByName(artifacts.label_triples)

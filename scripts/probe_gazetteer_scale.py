@@ -1,20 +1,20 @@
 #!/usr/bin/env python
-"""Gazetteer scale probe (round-2 verdict items 4+8): at 10^5..10^6
-aliases, measure for BOTH scan automata (hash-set window probe vs
-token-trie goto walk):
+"""Gazetteer scale probe: at 10^5..10^6 aliases, measure the token-trie
+scan kernel (rules.find_mentions_trie):
 
-- driver build time of the broadcast structures
+- driver build time of the broadcast trie
 - serialized broadcast payload bytes (pickle — what sc.broadcast ships)
 - single-thread scan throughput (docs/s, tokens/s) over a synthetic
   corpus with a realistic hit rate
 
 Pure driver-side (no Spark session): the scan closure's per-batch work
-is exactly these functions, so single-thread numbers compare the
-automata without sandbox scheduler noise.  Results feed the
-BENCH/BASELINE.md table and the broadcast-cap defaults in
-plans/broadcast_gate.py.
+is exactly these functions, so single-thread numbers measure the kernel
+without scheduler noise.  Prints one JSON row per size; ``--out PATH``
+also writes them as a JSON list.  BENCH/gazetteer_scale_probe.json is
+the historical record of an earlier version that also timed a hash-set
+window probe, since removed.
 
-Usage: python scripts/probe_gazetteer_scale.py [n_aliases ...]
+Usage: python scripts/probe_gazetteer_scale.py [--out PATH] [n_aliases ...]
 """
 
 from __future__ import annotations
@@ -58,15 +58,18 @@ def synth_docs(n_docs: int, aliases: list[str], rng: random.Random):
 
 
 def main():
-    sizes = [int(a) for a in sys.argv[1:]] or [100_000, 1_000_000]
+    args = sys.argv[1:]
+    out = None
+    if "--out" in args:
+        i = args.index("--out")
+        out = args[i + 1]
+        del args[i:i + 2]
+    sizes = [int(a) for a in args] or [100_000, 1_000_000]
     from netbase_spark.oracle.rules import (
         build_token_trie,
         filter_candidates,
-        find_mentions,
         find_mentions_trie,
-        first_token_index,
         max_alias_word_count,
-        prefix2_index,
     )
 
     rng = random.Random(42)
@@ -76,67 +79,36 @@ def main():
         docs = synth_docs(300, aliases, rng)
         n_tokens = sum(len(d.split(" ")) for d in docs)
         blacklist: frozenset[str] = frozenset()
+        maxw = max_alias_word_count(aliases)
 
-        # --- probe structures
-        t0 = time.monotonic()
-        aset = frozenset(aliases)
-        ftoks = first_token_index(aset)
-        maxw = max_alias_word_count(aset)
-        pfx2 = prefix2_index(aset)
-        probe_build = time.monotonic() - t0
-        probe_bytes = len(pickle.dumps((aset, ftoks, blacklist, maxw, pfx2)))
-
-        # --- trie structures
         t0 = time.monotonic()
         trie = build_token_trie(aliases)
-        trie_build = time.monotonic() - t0
-        trie_bytes = len(pickle.dumps((trie, blacklist, maxw)))
+        build = time.monotonic() - t0
+        payload_bytes = len(pickle.dumps((trie, blacklist, maxw)))
 
-        # --- scan throughput (identical outputs asserted per doc)
         t0 = time.monotonic()
-        probe_out = [
-            filter_candidates(
-                find_mentions(
-                    d, aset, blacklist, False,
-                    first_tokens=ftoks, max_span_words=maxw, prefix2=pfx2,
-                )
-            )
-            for d in docs
-        ]
-        probe_scan = time.monotonic() - t0
-        t0 = time.monotonic()
-        trie_out = [
+        for d in docs:
             filter_candidates(
                 find_mentions_trie(d, trie, blacklist, False, max_span_words=maxw)
             )
-            for d in docs
-        ]
-        trie_scan = time.monotonic() - t0
-        assert probe_out == trie_out, "automata disagree"
+        scan = time.monotonic() - t0
 
         row = {
             "aliases": n,
-            "probe": {
-                "build_s": round(probe_build, 2),
-                "bytes": probe_bytes,
-                "docs_per_s": round(len(docs) / probe_scan, 1),
-                "tokens_per_s": round(n_tokens / probe_scan, 0),
-            },
             "trie": {
-                "build_s": round(trie_build, 2),
-                "bytes": trie_bytes,
-                "docs_per_s": round(len(docs) / trie_scan, 1),
-                "tokens_per_s": round(n_tokens / trie_scan, 0),
+                "build_s": round(build, 2),
+                "bytes": payload_bytes,
+                "docs_per_s": round(len(docs) / scan, 1),
+                "tokens_per_s": round(n_tokens / scan, 0),
             },
         }
         results.append(row)
         print(json.dumps(row), flush=True)
 
-    out = os.path.join(REPO, "BENCH", "gazetteer_scale_probe.json")
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    with open(out, "w") as f:
-        json.dump(results, f, indent=1)
-    print(f"wrote {out}")
+    if out:
+        with open(out, "w") as f:
+            json.dump(results, f, indent=1)
+        print(f"wrote {out}")
 
 
 if __name__ == "__main__":

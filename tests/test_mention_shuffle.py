@@ -89,19 +89,30 @@ def test_probe_decomposition_matches_naive_scan():
 
 def test_trie_automaton_matches_naive_scan():
     """find_mentions_trie (goto-trie walk + dead-prefix break) equals
-    find_mentions_naive for randomized texts/alias sets/blacklists."""
-    from netbase_spark.oracle.rules import build_token_trie, find_mentions_trie
+    find_mentions_naive for randomized texts/alias sets/blacklists,
+    before and after the longest-match filter.  The vocabulary hits
+    every fast/slow boundary of the kernel: quoted and underscored or
+    dashed words (non-compositional normalization), tabs, lone "s"
+    words (the stem drops the separator too), non-ascii casing (final
+    sigma), numbers, empties, bigram probes."""
+    from netbase_spark.oracle.rules import (
+        build_token_trie,
+        filter_candidates,
+        find_mentions_trie,
+    )
 
     rng = random.Random(424242)
     vocab = [
         "Tesla", "Tesla's", "New", "York", "New York", "5", "Öl", "a",
         "ab", "the", "cat", "cats", "Hunde", "hunde", '"q"', "x-y", "of",
         "Ofen", "...", "%", "()", "e.V", "Kiel", "42nd", "0", "07",
-        "St.", "s", "CATS",
+        "St.", "s", "CATS", "ΑΣ", "tab\tword", "under_score", "_", "-",
+        "dash-word",
     ]
     pool = [norm_name(v) for v in vocab] + [
         "new york", "tesla", "cat", "hund", "kiel e.v", "st", "x y",
-        "a b", "york new", "new york cat", "tesla s",
+        "a b", "york new", "new york cat", "tesla s", "a s", "tab word",
+        "under score", "dash word",
     ]
     for _ in range(800):
         text = " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 14)))
@@ -124,6 +135,7 @@ def test_trie_automaton_matches_naive_scan():
             max_span_words=maxsw,
         )
         assert got == ref, (text, sorted(aliases), sorted(blacklist), german)
+        assert filter_candidates(got) == filter_candidates_naive(ref)
 
 
 @pytest.fixture(scope="module")
@@ -161,17 +173,6 @@ def test_shuffle_scan_matches_broadcast_scan(spark, fixture_scan_inputs):
         got = sorted(map(tuple, got_df.collect()))
         assert got == want
         assert want, "fixture corpus produced no mentions — test is vacuous"
-        # and the probe automaton (broadcast twin) agrees with both
-        probe = sorted(
-            map(
-                tuple,
-                detect_mentions_text(
-                    texts, names, bl, distinct_per_doc=distinct,
-                    automaton="probe",
-                ).collect(),
-            )
-        )
-        assert probe == want
 
 
 def test_shuffle_triple_scan_matches_broadcast(spark, fixture_scan_inputs):
@@ -180,7 +181,8 @@ def test_shuffle_triple_scan_matches_broadcast(spark, fixture_scan_inputs):
         alias_entity_table,
     )
     from netbase_spark.operators.mentions import (
-        scan_mention_triples,
+        prepare_triple_scan,
+        scan_mention_triples_prepared,
         scan_mention_triples_shuffle,
     )
 
@@ -189,13 +191,9 @@ def test_shuffle_triple_scan_matches_broadcast(spark, fixture_scan_inputs):
         [("Q70", "Q7"), ("Q71", "Q7")], "node string, rep string"
     )
     bl = blacklist_fixture()
+    bc = prepare_triple_scan(spark, alias_canonical_map(aliases, mapping), bl)
     want = sorted(
-        map(
-            tuple,
-            scan_mention_triples(
-                docs, alias_canonical_map(aliases, mapping), bl
-            ).collect(),
-        )
+        map(tuple, scan_mention_triples_prepared(docs, bc).collect())
     )
     got = sorted(
         map(
@@ -227,21 +225,29 @@ def test_alias_entity_table_matches_driver_dict(spark, fixture_scan_inputs):
     assert got == want
 
 
-def test_gated_scan_forced_overflow(spark, fixture_scan_inputs):
-    """cap=1 byte forces the shuffle plan; a huge cap keeps the
-    broadcast-dict plan; both emit identical triples, and the shuffle
-    plan really is shuffle-side (no driver dict: its explain has a
-    join, the broadcast one has none)."""
-    from netbase_spark.operators.mentions import scan_mention_triples_gated
+def test_gated_scan_forced_overflow(spark):
+    """scan_batch at two caps: a huge cap keeps the broadcast-dict plan,
+    cap=1 byte forces the shuffle-join plan against the alias->entity
+    table; both emit identical canonical triples through a non-empty
+    canonical map, and the shuffle plan really is shuffle-side (its
+    explain has a join, the broadcast one has none)."""
+    from netbase_spark.plans.synth_pipeline import build_artifacts, scan_batch
 
-    docs, _, aliases = fixture_scan_inputs
-    mapping = spark.createDataFrame([], "node string, rep string")
-    bl = blacklist_fixture()
-    big = scan_mention_triples_gated(docs, aliases, mapping, bl, cap_bytes=1 << 40)
-    small = scan_mention_triples_gated(docs, aliases, mapping, bl, cap_bytes=1)
-    assert "Join" not in big._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in small._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, big.collect())) == sorted(map(tuple, small.collect()))
+    docs = docs_df(spark, 80, seed=11, partitions=4)
+    big = build_artifacts(spark, cap_bytes=1 << 40)
+    small = build_artifacts(spark, cap_bytes=1)
+    assert big.scan_bc is not None and small.alias_entity is not None
+    assert big.mapping.count() > 0, "canonical map is empty — test is vacuous"
+    b, s = scan_batch(docs, big), scan_batch(docs, small)
+    assert "Join" not in b._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in s._jdf.queryExecution().executedPlan().toString()
+    want = sorted(map(tuple, b.collect()))
+    assert want, "fixture corpus produced no mention triples"
+    assert sorted(map(tuple, s.collect())) == want
+    # the scan links through the canonical map: merged-away keys never
+    # appear as subjects
+    merged = {r["node"] for r in big.mapping.collect() if r["node"] != r["rep"]}
+    assert merged and not merged & {t[0] for t in want}
 
 
 def test_broadcast_gate_estimates(spark):

@@ -2,9 +2,10 @@
 
 from netbase_spark.normalize import norm_name, seo_slug
 from netbase_spark.oracle.rules import (
+    build_token_trie,
     dissect_name,
     filter_candidates,
-    find_mentions,
+    find_mentions_trie,
     oracle_triples,
 )
 from netbase_spark.relations import INSTANCE, LOCATION, MEMBER, MENTIONED_IN, NEAR
@@ -90,11 +91,9 @@ def test_number_rule_is_dead():
 
 def test_find_mentions_longest_match():
     aliases = {"battle of hastings", "battle", "hastings", "widget"}
-
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    found = find_mentions("the battle of hastings began", lookup, set())
+    found = find_mentions_trie(
+        "the battle of hastings began", build_token_trie(aliases), set()
+    )
     keys = {k for k, _, _ in found}
     assert "battle of hastings" in keys and "battle" in keys
     kept = {k for k, _, _ in filter_candidates(found)}
@@ -102,71 +101,67 @@ def test_find_mentions_longest_match():
 
 
 def test_find_mentions_stemming_blacklist_numbers():
-    aliases = {"widget", "the"}
-
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    found = find_mentions("widgets 123 the", lookup, {"the"})
+    trie = build_token_trie({"widget", "the"})
+    found = find_mentions_trie("widgets 123 the", trie, {"the"})
     keys = {k for k, _, _ in found}
     assert keys == {"widget"}  # plural stemmed; 123 numeric; "the" blacklisted
 
 
-def test_prefilter_never_rejects_apostrophe_stems():
-    # "Tesla's" with alias "tesla": the probe strips the raw last char
-    # then normalizes ("Tesla'" -> "tesla"); the prefilter must pass it.
-    from netbase_spark.oracle.rules import first_token_index
-
-    aliases = {"tesla"}
-
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    ftoks = first_token_index(aliases)
-    without = find_mentions("Tesla's factory opened", lookup, set())
-    withf = find_mentions(
-        "Tesla's factory opened", lookup, set(), first_tokens=ftoks
-    )
-    assert {k for k, _, _ in without} == {"tesla"}
-    assert without == withf
-
-
-def test_prefilter_equivalence_property():
-    # Property: find_mentions with the prefilter == without, over a
-    # generated mix of aliases/punctuation/stems/quotes.
+def test_optimized_scan_equals_naive_property():
+    # Property: the optimized find_mentions_trie (memoized word info,
+    # goto-trie walk with dead-prefix break, word-count pruning) returns
+    # EXACTLY what the pristine transcription returns, over tokens
+    # engineered to hit every fast/slow boundary: quoted and underscored
+    # words (non-compositional normalization), 1-char "s" words (stem
+    # drops the separator too), non-ascii casing (final sigma), numbers,
+    # empties, blacklist hits, bigram probes.
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from netbase_spark.oracle.rules import first_token_index
+    from netbase_spark.oracle.rules import (
+        filter_candidates_naive,
+        find_mentions_naive,
+        max_alias_word_count,
+    )
 
     aliases = {
-        "tesla", "red widget", "battle of hastings", "kiel", "new york",
-        "o'brien", '"quoted"', "cars",
+        "tesla", "red widget", "battle of hastings", "kiel", "cars",
+        "o'brien", '"quoted"', "a s", "x", "ΑΣ".lower(), "tab word",
+        "very long alias of six words", "battle of",
     }
-    ftoks = first_token_index(aliases)
+    trie = build_token_trie(aliases)
+    maxw = max_alias_word_count(aliases)
+    blacklist = {"the", "tab word"}
 
     def lookup(nn):
         return nn if nn in aliases else None
 
     tokens = st.sampled_from(
         [
-            "Tesla's", "Tesla", "teslas", "red", "widgets", "widget",
-            "battle", "of", "hastings", "Kiel", "e.V", "new", "york",
-            "O'Briens", "o'brien", '"quoted"s', "cars'", "123", "", "the",
-            "(red)", "very",
+            "Tesla's", "Tesla", "teslas", "red", "widgets", "s", "S",
+            "battle", "of", "hastings", "Kiel", "e.V", "O'Briens",
+            '"quoted"s', "cars'", "123", "", "the", "(red)", "x",
+            "a", "ΑΣ", "tab\tword", "under_score", "dash-word", "é",
+            "very", "long", "alias", "six", "words", '"', "_", "-",
         ]
     )
 
-    @settings(max_examples=200, deadline=None)
-    @given(st.lists(tokens, min_size=0, max_size=10))
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(tokens, min_size=0, max_size=12))
     def check(words):
         text = " ".join(words)
         for german in (False, True):
-            a = find_mentions(text, lookup, set(), german)
-            b = find_mentions(
-                text, lookup, set(), german, first_tokens=ftoks
+            naive = find_mentions_naive(text, lookup, blacklist, german)
+            fast = find_mentions_trie(text, trie, blacklist, german)
+            assert fast == naive, (text, german)
+            # with word-count pruning (the engine's actual hot path)
+            pruned = find_mentions_trie(
+                text, trie, blacklist, german, max_span_words=maxw
             )
-            assert a == b, (text, german)
+            assert pruned == naive, (text, german)
+            assert filter_candidates(fast) == filter_candidates_naive(naive), (
+                text, german,
+            )
 
     check()
 
@@ -191,72 +186,3 @@ def test_oracle_end_to_end_canonicalizes():
     assert ("automobile", INSTANCE, "Q1") in got  # Q2 merged into Q1
     assert ("Q3", MENTIONED_IN, "0") in got
     assert ("widget", INSTANCE, "Q3") in got  # head rule on "red widget"
-
-
-def test_optimized_scan_equals_naive_property():
-    # Property: the optimized find_mentions (memoized norms, incremental
-    # safe-span normalization, prefix-sum lengths, prefilter + word-count
-    # pruning) returns EXACTLY what the pristine transcription returns,
-    # over tokens engineered to hit every fast/slow boundary: quoted and
-    # underscored words (non-compositional normalization), 1-char "s"
-    # words (stem drops the separator too), non-ascii casing (final
-    # sigma), numbers, empties, blacklist hits, bigram probes.
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from netbase_spark.oracle.rules import (
-        filter_candidates,
-        filter_candidates_naive,
-        find_mentions,
-        find_mentions_naive,
-        first_token_index,
-        max_alias_word_count,
-        prefix2_index,
-    )
-
-    aliases = {
-        "tesla", "red widget", "battle of hastings", "kiel", "cars",
-        "o'brien", '"quoted"', "a s", "x", "ΑΣ".lower(), "tab word",
-        "very long alias of six words", "battle of",
-    }
-    ftoks = first_token_index(aliases)
-    maxw = max_alias_word_count(aliases)
-    pfx2 = prefix2_index(aliases)
-    blacklist = {"the", "tab word"}
-
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    tokens = st.sampled_from(
-        [
-            "Tesla's", "Tesla", "teslas", "red", "widgets", "s", "S",
-            "battle", "of", "hastings", "Kiel", "e.V", "O'Briens",
-            '"quoted"s', "cars'", "123", "", "the", "(red)", "x",
-            "a", "ΑΣ", "tab\tword", "under_score", "dash-word", "é",
-            "very", "long", "alias", "six", "words", '"', "_", "-",
-        ]
-    )
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.lists(tokens, min_size=0, max_size=12))
-    def check(words):
-        text = " ".join(words)
-        for german in (False, True):
-            naive = find_mentions_naive(text, lookup, blacklist, german)
-            fast = find_mentions(
-                text, lookup, blacklist, german,
-                first_tokens=ftoks, max_span_words=maxw,
-            )
-            assert fast == naive, (text, german)
-            # container form + all three prune indexes (the engine's
-            # actual hot path: direct `in` probes, prefix2 gate)
-            direct = find_mentions(
-                text, frozenset(aliases), blacklist, german,
-                first_tokens=ftoks, max_span_words=maxw, prefix2=pfx2,
-            )
-            assert direct == naive, (text, german)
-            assert filter_candidates(fast) == filter_candidates_naive(naive), (
-                text, german,
-            )
-
-    check()

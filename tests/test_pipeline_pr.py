@@ -88,6 +88,92 @@ def test_resume_skips_stages(spark, built):
     assert all(m["resumed"] for m in pipe2.metrics), pipe2.metrics
     got2 = {(r.subj, r.rel, r.obj) for r in triples2.collect()}
     assert got2 == got
+    # the benchmark reads per-stage layers by these names: a merged or
+    # renamed stage must fail here, not silently lower its coverage
+    names = _perfbench_stage_names()
+    assert len(names) == 7
+    assert [m["stage"] for m in pipe2.metrics] == names
+    assert [m["stage"] for m in built[3].metrics] == names
+
+
+def _perfbench_stage_names() -> list[str]:
+    """The stage names perfbench/layers.construct_layers reads, parsed
+    from its source (the module imports perfbench-local modules)."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "layers.py"
+    fn = next(
+        n for n in ast.walk(ast.parse(src.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "construct_layers"
+    )
+    return next(
+        [e.value for e in n.elts] for n in ast.walk(fn)
+        if isinstance(n, ast.Tuple) and n.elts
+        and all(isinstance(e, ast.Constant) and isinstance(e.value, str)
+                for e in n.elts)
+    )
+
+
+@pytest.mark.parametrize("cap_bytes", [None, 1])
+def test_pipeline_and_construct_from_agree(spark, tmp_path, cap_bytes):
+    """The staged Pipeline and construct_from(build_artifacts(...)) are
+    one construction: same labels, raw triples, blacklist and docs give
+    the same key set on both gate paths.  "Kiel" collides with its own
+    SEO slug and its label_type sorts after "seo"; it must stay a scan
+    surface form on both paths."""
+    from netbase_spark.plans.broadcast_gate import CONF_KEY
+    from netbase_spark.plans.synth_pipeline import build_artifacts, construct_from
+    from netbase_spark.relations import MENTIONED_IN, SYNONYM
+    from netbase_spark.schemas import DOCS_SCHEMA
+
+    labels = spark.createDataFrame(
+        [
+            ("S1", "Kiel", "supplier", "en"),
+            ("R1", "Oslo", "region", "en"),
+            ("S2", "New York", "supplier", "en"),
+            ("S3", "Big Apple", "supplier", "en"),
+            ("R2", "Bergen", "region", "en"),
+        ],
+        LABELS_SCHEMA,
+    )
+    raw = spark.createDataFrame(
+        [("S3", SYNONYM, "S2", "raw", None)],
+        "subj string, rel int, obj string, rule string, doc_id string",
+    )
+    blacklist = {"bergen"}
+    texts = [
+        "ships leave Kiel for Oslo",
+        "New York is the Big Apple",
+        "Bergen and Kiel",
+    ]
+    docs = spark.createDataFrame(
+        [(f"d{i}", [("text", t, None, 0)]) for i, t in enumerate(texts)],
+        DOCS_SCHEMA,
+    )
+    keyset = lambda df: {(r.subj, r.rel, r.obj) for r in df.collect()}  # noqa: E731
+
+    if cap_bytes is not None:
+        spark.conf.set(CONF_KEY, str(cap_bytes))
+    try:
+        staged = keyset(
+            Pipeline(spark, str(tmp_path / "kg"), resume=False).run(
+                docs, labels, blacklist, raw_triples=raw
+            )
+        )
+    finally:
+        spark.conf.unset(CONF_KEY)
+    arts = build_artifacts(
+        spark, labels_df=labels, cap_bytes=cap_bytes, raw_triples=raw,
+        blacklist=blacklist,
+    )
+    assert (arts.scan_bc is None) == (cap_bytes == 1)
+    fused = keyset(construct_from(spark, docs, arts))
+    assert staged == fused
+    mentions = {(s, o) for s, r, o in fused if r == MENTIONED_IN}
+    assert {("S1", "d0"), ("R1", "d0"), ("S1", "d2")} <= mentions
+    assert ("S2", "d1") in mentions or ("S3", "d1") in mentions
+    assert not any(s == "R2" for s, _ in mentions)  # blacklisted
 
 
 def test_canonicalization_merged(built):

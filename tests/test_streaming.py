@@ -1,67 +1,10 @@
-"""Structured Streaming ingest: file-source docs stream -> mention
-triples, availableNow drain, checkpoint resume, batch-equivalence."""
+"""Structured Streaming windowed aggregation: watermarks bound state and
+survive a checkpoint restart.  The full construction stream is covered
+by tests/test_streaming_construct.py."""
 
 from __future__ import annotations
 
 import pathlib
-
-from pyspark.sql import functions as F
-
-
-def _write_landing(spark, tmp, n_docs, start=0):
-    from netbase_spark.data.synth import docs_df
-
-    docs = docs_df(spark, n_docs + start, seed=11).where(
-        F.col("doc_id").cast("long") >= start
-    )
-    docs.write.mode("append").parquet(str(tmp / "landing"))
-
-
-def test_stream_matches_batch_and_resumes(spark, tmp_path: pathlib.Path):
-    from netbase_spark.data.fixtures import blacklist_fixture, labels_fixture
-    from netbase_spark.operators.gazetteer import build_alias_table
-    from netbase_spark.operators.linking import link_mentions
-    from netbase_spark.operators.mentions import detect_mentions
-    from netbase_spark.schemas import LABELS_SCHEMA
-    from netbase_spark.streaming.ingest import start_ingest
-
-    labels_df = spark.createDataFrame(
-        [(r["key"], r["label"], r["label_type"], r["lang"]) for r in labels_fixture()],
-        LABELS_SCHEMA,
-    )
-    aliases = build_alias_table(labels_df, with_seo=False)
-    alias_names = [r[0] for r in aliases.select("name_norm").distinct().collect()]
-    blacklist = blacklist_fixture()
-
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-
-    # micro-batch 1: 30 docs
-    _write_landing(spark, tmp_path, 30)
-    q = start_ingest(
-        spark, str(tmp_path / "landing"), str(out), str(ckpt),
-        alias_names, aliases, blacklist, available_now=True,
-    )
-    q.awaitTermination(120)
-
-    # micro-batch 2 (restart from checkpoint): 20 more docs
-    _write_landing(spark, tmp_path, 20, start=30)
-    q2 = start_ingest(
-        spark, str(tmp_path / "landing"), str(out), str(ckpt),
-        alias_names, aliases, blacklist, available_now=True,
-    )
-    q2.awaitTermination(120)
-
-    streamed = spark.read.parquet(str(out)).select("subj", "rel", "obj")
-
-    batch_docs = spark.read.parquet(str(tmp_path / "landing"))
-    batch = link_mentions(
-        detect_mentions(batch_docs, alias_names, blacklist), aliases
-    ).select("subj", "rel", "obj")
-
-    assert streamed.count() == batch.count()
-    assert streamed.exceptAll(batch).isEmpty()
-    assert batch.exceptAll(streamed).isEmpty()
 
 
 def test_watermark_drops_late_rows(spark, tmp_path: pathlib.Path):
