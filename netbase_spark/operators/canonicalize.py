@@ -7,77 +7,45 @@ edges — Synonym -32, Label -38/Labeled -39, P460, redirects
 
 Spark-first: iterative min-label propagation with pointer jumping
 (path doubling) — converges in O(log diameter) rounds; each round is
-one shuffle on the node key.  Every iteration is ``localCheckpoint``ed
-to cut the lineage (driver-loop iteration is the documented pattern for
-Catalyst, which has no recursion).  The representative is the
+one shuffle on the node key.  Every iteration is pinned
+(``frontier._pin``) to cut the lineage (driver-loop iteration is the
+documented pattern for Catalyst, which has no recursion).  The stop is
+exact: each round counts, in the job that pins it, the nodes whose rep
+changed; reps only decrease, so a round with no change is the fixpoint
+and the loop always ends.  The representative is the
 lexicographic MIN key of the component — deterministic, and expressible
 as a recursive CTE for the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from netbase_spark.plans.broadcast_gate import collect_limit, local_frame
-
-
-def _persistent_ids(spark) -> set[int]:
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in m.keySet().toArray()}
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """localCheckpoint an iteration result and remember which RDD blocks
-    it created.
-
-    Both halves matter, measured:
-    - lineage MUST be cut (plain persist leaves the pointer-jumping
-      self-join doubling the logical plan every round — by iteration 3
-      the driver spends minutes in analysis);
-    - superseded checkpoints MUST be freed (unbounded checkpoint blocks
-      poison every later query in the session with GC pressure).
-    """
-    spark = df.sparkSession
-    before = _persistent_ids(spark)
-    out = df.localCheckpoint()  # eager: materializes and truncates lineage
-    out._pin_ids = _persistent_ids(spark) - before  # type: ignore[attr-defined]
-    return out
-
-
-def _unpin(df: DataFrame) -> None:
-    """Free a superseded _pin'd iteration (safe only once nothing will
-    read it again — its lineage was truncated, there is no recompute)."""
-    ids = getattr(df, "_pin_ids", None)
-    if not ids:
-        return
-    m = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for k in m.keySet().toArray():
-        if int(k) in ids:
-            m.get(k).unpersist(False)
+from netbase_spark.operators.frontier import _pin, _unpin, driver_rows
+from netbase_spark.plans.broadcast_gate import local_frame
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, driver_threshold: int = 200_000
+    edges: DataFrame, driver_threshold: int = 200_000
 ) -> DataFrame:
     """edges(src, dst) undirected -> mapping(node, rep) for non-trivial
     components only (node != rep).
 
     Size-adaptive: below ``driver_threshold`` edges the component solve
     runs as plain union-find on the driver (the reference's ``mergeNode``
-    is O(E α); scheduling 25 distributed rounds for a dimension-sized
+    is O(E α); scheduling distributed rounds for a dimension-sized
     edge set costs orders of magnitude more than computing it) — same
     min-rep output, verified equal to the distributed path by tests.
-    Above it, iterative min-label propagation with pointer jumping.
+    Above it, iterative min-label propagation with pointer jumping,
+    run until no node's rep changes.
     sameAs-class edge sets are label-table-sized, not corpus-sized, so
     the driver path is the common case even at 10^12 docs; the
     distributed loop is the guarantee it stays correct when it isn't.
     The driver path reads ``edges`` once and returns a ``LocalRelation``.
     """
-    if driver_threshold:
-        # one read decides AND fetches: the +1 row proves overflow
-        got = collect_limit(edges.select("src", "dst"), driver_threshold + 1)
-    if driver_threshold and len(got) <= driver_threshold:
+    got = driver_rows(edges.select("src", "dst"), driver_threshold)
+    if got is not None:
         pairs = [(a, b) for a, b in got if a is not None and b is not None]
         parent: dict = {}
 
@@ -113,35 +81,39 @@ def connected_components(
         .select(F.col("a").alias("node"), "rep")
     )
 
-    for _ in range(max_iter):
-        # neighbor-min propagation: candidate rep via any neighbor's rep
+    while True:
+        # neighbor-min propagation: candidate rep via any neighbor's rep;
+        # every neighbor is a mapping node, so each node keeps its
+        # previous rep as ``prev`` (null on the neighbor rows)
         nbr = (
             sym.join(mapping, sym["b"] == mapping["node"])
             .select(F.col("a").alias("node"), "rep")
         )
         merged = (
-            mapping.unionByName(nbr)
+            mapping.withColumn("prev", F.col("rep"))
+            .unionByName(nbr, allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("rep").alias("rep"))
+            .agg(F.min("rep").alias("rep"), F.min("prev").alias("prev"))
         )
-        # pointer jumping: rep := rep(rep)
-        m2 = merged.select(F.col("node").alias("n2"), F.col("rep").alias("rep2"))
+        # pointer jumping: rep := rep(rep).  rep is never null, so
+        # coalesce(rep, prev) is rep; reading prev keeps this side's
+        # aggregate identical to the left side's, so both sides share
+        # one exchange instead of pruning prev into a second one
+        m2 = merged.select(
+            F.col("node").alias("n2"), F.coalesce("rep", "prev").alias("rep2")
+        )
+        # exact stop, counted in the job that pins the round: reps only
+        # ever decrease, so a round that changes no rep is the fixpoint
+        obs = Observation()
         jumped = _pin(
             merged.join(m2, merged["rep"] == m2["n2"], "left")
-            .select("node", F.coalesce("rep2", "rep").alias("rep"))
+            .select("node", F.coalesce("rep2", "rep").alias("rep"), "prev")
+            .observe(obs, F.count_if(F.col("rep") != F.col("prev")).alias("changed"))
+            .select("node", "rep")
         )
-        # convergence check: order-insensitive signature of (node, rep) —
-        # one scan of the checkpointed result, no join
-        sig = jumped.agg(
-            F.count(F.lit(1)).alias("n"),
-            # pmod-bounded so the sum cannot overflow long (ANSI mode)
-            F.sum(F.pmod(F.xxhash64("node", "rep"), F.lit(1 << 30))).alias("h"),
-        ).collect()[0]
-        prev_sig = getattr(mapping, "_cc_sig", None)
-        jumped._cc_sig = (sig["n"], sig["h"])  # type: ignore[attr-defined]
         _unpin(mapping)
         mapping = jumped
-        if prev_sig is not None and prev_sig == (sig["n"], sig["h"]):
+        if not obs.get["changed"]:
             break
 
     _unpin(sym)

@@ -94,7 +94,7 @@ def _materialize_release(out, *cached):
     caches (round-3 advice item).  The checkpoint blocks of the RESULT
     are context-cleaner-managed instead: freed when the caller drops
     the DataFrame, no session-lifetime registration (same discipline as
-    canonicalize._pin/_unpin).  Candidate-pair outputs are always
+    frontier._pin/_unpin).  Candidate-pair outputs are always
     cap-bounded (bucket caps / top-k), so the eager materialization is
     cheap next to the banded subtrees it lets go of."""
     out = out.localCheckpoint()
@@ -375,7 +375,8 @@ def near_dup_clusters(
     """
     from pyspark.sql import Window
 
-    from netbase_spark.operators.canonicalize import _pin, connected_components
+    from netbase_spark.operators.canonicalize import connected_components
+    from netbase_spark.operators.frontier import _pin
     from netbase_spark.plans.broadcast_gate import gated_broadcast
 
     # the pairs DAG is typically EXPENSIVE (shingle/signature joins);

@@ -44,7 +44,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from netbase_spark.plans.broadcast_gate import collect_limit, local_frame
+from netbase_spark.operators.frontier import (
+    _unpin,
+    driver_rows,
+    frontier_levels,
+    reach,
+    union_all,
+)
+from netbase_spark.plans.broadcast_gate import local_frame
 
 _POS = ("subj", "rel", "obj")
 
@@ -200,21 +207,21 @@ def path_closure(
     """(subj, obj) pairs connected by 1..max_hops (``+``) or
     0..max_hops (``*``) edges of ``path.rel``.  Size-adaptive like
     ``isa_closure``: below ``driver_threshold`` edges, one collect +
-    bounded Python BFS (rel-filtered edge sets are dimension-sized in a
-    KG — taxonomy/containment rels — so this is the common case); above
-    it, a checkpointed frontier-join loop, one shuffle per hop level,
-    anti-joined against the accumulated closure so each pair is found
-    at its shortest depth exactly once.  Cyclic edges are fine: a node
-    reachable from itself within the bound yields a (n, n) pair under
-    ``+`` (and every node yields one under ``*``).
+    bounded Python BFS (``frontier.reach``; rel-filtered edge sets are
+    dimension-sized in a KG — taxonomy/containment rels — so this is
+    the common case); above it, the semi-naive frontier loop
+    (``frontier.frontier_levels``), one pinned level per hop count,
+    each anti-joined against the earlier levels so each pair is found
+    at its shortest depth exactly once and the loop stops as soon as a
+    level adds nothing.  Cyclic edges are fine: a node reachable from
+    itself within the bound yields a (n, n) pair under ``+`` (and every
+    node yields one under ``*``).  ``path.strict`` allows both branches
+    one level past ``max_hops`` and raises if it is non-empty.
 
-    Lifetime: the distributed branch's result is localCheckpoint-backed;
-    its blocks are context-cleaner managed — freed when the caller drops
-    the query result — the same discipline as the dedup family's
-    materialized candidate tables (loop INTERMEDIATES are unpinned
-    eagerly inside the loop)."""
-    from netbase_spark.operators.canonicalize import _pin, _unpin
-
+    Lifetime: the distributed branch's result is the lazy union of the
+    pinned levels; their blocks are context-cleaner managed — freed
+    when the caller drops the query result — the same discipline as
+    the dedup family's materialized candidate tables."""
     rels = [
         r for r in path._rels()
         if _const_compatible(r, triples.schema["rel"].dataType)
@@ -255,106 +262,41 @@ def path_closure(
         # cannot compose across types, so the closure IS the edge set.
         return _with_identity(edges)
 
-    if driver_threshold:
-        pairs = collect_limit(edges, driver_threshold + 1)
-    if driver_threshold and len(pairs) <= driver_threshold:
-        adj: dict = {}
-        for a, b in pairs:
-            adj.setdefault(a, set()).add(b)
-        rows = []
-        for n in adj:
-            seen: set = set()
-            frontier = {n}
-            for _ in range(path.max_hops):
-                nxt = set()
-                for x in frontier:
-                    nxt |= adj.get(x, set())
-                nxt -= seen
-                if not nxt:
-                    break
-                seen |= nxt
-                frontier = nxt
-            if path.strict:
-                # loud-bound check: one extra expansion step; anything
-                # new means pairs beyond max_hops exist (a converged
-                # frontier expands to a subset of seen, costing nothing)
-                extra: set = set()
-                for x in frontier:
-                    extra |= adj.get(x, set())
-                if extra - seen:
-                    raise PathBoundExceeded(
-                        f"path closure still growing at max_hops="
-                        f"{path.max_hops} (node {n!r} reaches beyond the "
-                        "bound); raise max_hops or drop strict=True for "
-                        "the reference's truncating semantics"
-                    )
-            rows.extend((n, b) for b in seen)
+    # loud-bound check: one level past the bound; anything in it means
+    # pairs beyond max_hops exist (a converged walk stops before it)
+    hops = path.max_hops + 1 if path.strict else path.max_hops
+    beyond = PathBoundExceeded(
+        f"path closure still growing at max_hops={path.max_hops}; "
+        "raise max_hops or drop strict=True for the reference's "
+        "truncating semantics"
+    )
+    pairs = driver_rows(edges, driver_threshold)
+    if pairs is not None:
+        got = list(reach(pairs, max_hops=hops))
+        if any(d > path.max_hops for _, _, d in got):
+            raise beyond
+        rows = [(n, b) for n, b, _ in got]
         out = local_frame(triples.sparkSession, rows, f"subj {st}, obj {ot}")
         return _with_identity(out)
 
-    # Semi-naive frontier loop, LEVELS kept as separate pinned frames:
-    # the closure is a lazy union of the per-level checkpoints, never
-    # re-materialized.  The previous shape re-checkpointed the whole
-    # growing closure every level — O(levels x closure) block writes
-    # (~5x the closure size on a depth-7 taxonomy), which became the
-    # bottleneck AND an anti-scaling one (more threads = more memory
-    # pressure on the same heap; measured local[32] SLOWER than
-    # local[8] at 59M pairs).  Now each pair is written exactly once;
-    # the per-level dedup runs BEFORE the anti-join so the anti-join
-    # probe side is frontier-sized.
-    edges = _pin(edges)
-    e2 = edges.select(F.col("subj").alias("e_s"), F.col("obj").alias("e_o"))
-    levels = [edges]
-    frontier = edges
-    exhausted = True
+    e2 = None
 
-    def union_levels():
-        u = levels[0]
-        for l in levels[1:]:
-            u = u.unionByName(l)
-        return u
+    def expand(frontier: DataFrame, _depth: int) -> DataFrame:
+        nonlocal e2
+        if e2 is None:  # the first frontier is level 0, the edge set
+            e2 = frontier.select(
+                F.col("subj").alias("e_s"), F.col("obj").alias("e_o")
+            )
+        return frontier.join(e2, frontier["obj"] == e2["e_s"]).select(
+            frontier["subj"].alias("subj"), F.col("e_o").alias("obj")
+        )
 
-    # per-level guard: anti-join against the PREVIOUS level only (kills
-    # the period-2 oscillation of symmetric rels), not the whole
-    # closure — a pair rediscovered at a later depth re-enters the
-    # frontier (bounded by max_hops, per-level dedup caps each level at
-    # its distinct-pair count) and the single final dropDuplicates
-    # restores set semantics.  This trades 8 closure-sized sort-merge
-    # anti-joins for 1: the per-level shuffles are frontier-sized.
-    for _ in range(path.max_hops - 1):
-        nxt = _pin(
-            frontier.join(e2, frontier["obj"] == e2["e_s"])
-            .select(frontier["subj"].alias("subj"), F.col("e_o").alias("obj"))
-            .dropDuplicates(["subj", "obj"])
-            .join(frontier, ["subj", "obj"], "left_anti")
-        )
-        if nxt.isEmpty():
-            _unpin(nxt)
-            exhausted = False
-            break
-        levels.append(nxt)
-        frontier = nxt
-    closure = union_levels().dropDuplicates(["subj", "obj"])
-    truncated = False
-    if path.strict and exhausted:
-        # loud-bound check: the loop used its full budget with a live
-        # frontier — one extra expansion decides whether real pairs lie
-        # beyond the bound (an already-converged frontier adds nothing)
-        truncated = not (
-            frontier.join(e2, frontier["obj"] == e2["e_s"])
-            .select(frontier["subj"].alias("subj"), F.col("e_o").alias("obj"))
-            .join(closure, ["subj", "obj"], "left_anti")
-            .isEmpty()
-        )
-    if truncated:
-        for l in levels:
-            _unpin(l)
-        raise PathBoundExceeded(
-            f"path closure still growing at max_hops={path.max_hops}; "
-            "raise max_hops or drop strict=True for the reference's "
-            "truncating semantics"
-        )
-    return _with_identity(closure)
+    levels, _ = frontier_levels(edges, expand, ["subj", "obj"], max_levels=hops)
+    if len(levels) > path.max_hops:
+        for level in levels:
+            _unpin(level)
+        raise beyond
+    return _with_identity(union_all(levels))
 
 
 def _pos_terms(pat) -> list[tuple[str, object]]:

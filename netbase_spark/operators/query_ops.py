@@ -11,8 +11,11 @@ src/query.cpp:604-610); paging ``start/page/hitsPerPage``
 Spark-first: a triple pattern is a filter on the predicate-partitioned
 triple table (partition pruning does the index work of the reference's
 three intrusive statement chains); the inverse rewrite is a UNION of a
-second pruned filter, not a scan; BFS is a driver loop of broadcast-able
-frontier joins with localCheckpoint per level.
+second pruned filter, not a scan; every BFS/closure is the one
+semi-naive loop of ``frontier.frontier_levels`` (frontier joins, one
+pinned level per depth, anti-joined against the earlier levels, exact
+stop at the first empty level) with ``frontier.reach`` as its driver
+twin under the size gate.
 """
 
 from __future__ import annotations
@@ -20,7 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from netbase_spark.plans.broadcast_gate import collect_limit, local_frame
+from netbase_spark.operators.frontier import (
+    _pin,
+    _unpin,
+    driver_rows,
+    frontier_levels,
+    reach,
+    union_all,
+)
+from netbase_spark.plans.broadcast_gate import local_frame
 from netbase_spark.relations import (
     INSTANCE,
     INVERSE_PAIRS,
@@ -67,7 +78,6 @@ def upward_edges(triples: DataFrame) -> DataFrame:
 
 def isa_closure(
     triples: DataFrame,
-    max_iter: int = 10,
     driver_threshold: int = 200_000,
 ) -> DataFrame:
     """(node, anc): transitive subsumption closure — the materialized
@@ -82,90 +92,48 @@ def isa_closure(
     - ``(s, SubClass, o)`` -> o's ancestor is s;
     - Synonym edges connect both directions.
 
-    Iterative driver-loop frontier joins (Catalyst has no recursion);
-    each level localCheckpoints and frees superseded blocks.
-
     Size-adaptive like ``connected_components``: taxonomies are
     dimension-sized even at corpus scale, so below ``driver_threshold``
-    edges the closure is one collect + Python BFS (the distributed loop
-    costs ~4 scheduled jobs PER LEVEL); above it, the checkpointed
-    frontier loop guarantees it stays correct.  Paths proven equal by
+    edges the closure is one collect + Python BFS (``frontier.reach``);
+    above it, the semi-naive frontier loop (``frontier_levels``) runs to
+    its exact fixpoint, whatever the depth and through any cycle.  The
+    closure is the lazy union of the disjoint pinned levels (their
+    blocks are context-cleaner managed: freed when the result is
+    dropped).  Paths proven equal by
     tests/test_new_operators.py::test_isa_closure_driver_equals_distributed.
     """
-    from netbase_spark.operators.canonicalize import _pin, _unpin
-
-    if driver_threshold:
-        # one job decides AND fetches: the +1 row proves overflow
-        pairs = collect_limit(upward_edges(triples), driver_threshold + 1)
-    if driver_threshold and len(pairs) <= driver_threshold:
-        adj: dict = {}
-        for r in pairs:
-            adj.setdefault(r[0], set()).add(r[1])
-        rows = []
-        for n in adj:
-            seen: set = set()
-            stack = list(adj[n])
-            while stack:
-                a = stack.pop()
-                if a in seen:
-                    continue
-                seen.add(a)
-                stack.extend(adj.get(a, ()))
-            rows.extend((n, a) for a in seen if a != n)
+    edges = upward_edges(triples)
+    pairs = driver_rows(edges, driver_threshold)
+    if pairs is not None:
+        rows = [(n, a) for n, a, _ in reach(pairs) if a != n]
         f = triples.schema["subj"].dataType.simpleString()
         return local_frame(triples.sparkSession, rows, f"node {f}, anc {f}")
 
-    edges = _pin(upward_edges(triples))
-    # explicit column renames, not alias-qualified self-joins: a
-    # localCheckpointed plan self-joined through string aliases trips
-    # Catalyst attribute resolution (NoSuchElementException on exprIds)
-    e2 = edges.select(
-        F.col("node").alias("e_node"), F.col("anc").alias("e_anc")
-    )
-    # semi-naive with LEVELS kept as separate pinned frames — the
-    # closure is a lazy union of the per-level checkpoints, never
-    # re-materialized (the old shape re-checkpointed the whole growing
-    # closure every level: O(levels x closure) block writes, measured
-    # anti-scaling at 59M pairs — see path_closure).  Per-level dedup
-    # runs BEFORE the anti-join so its probe side is frontier-sized.
-    levels = [edges]
-    frontier = edges
+    e2 = None
 
-    def union_levels():
-        u = levels[0]
-        for l in levels[1:]:
-            u = u.unionByName(l)
-        return u
-
-    # per-level guard: anti-join against the PREVIOUS level only — the
-    # cheap period-2 cycle killer (Synonym edges go both ways, so
-    # 2-cycles are the common case), not the whole closure; a pair
-    # rediscovered at a later depth re-expands (bounded by max_iter,
-    # each level capped at its distinct-pair count by the per-level
-    # dedup) and ONE final dropDuplicates restores set semantics.
-    # Replaces max_iter closure-sized anti-join sorts with one.
-    for _ in range(max_iter):
-        nxt = _pin(
+    def expand(frontier: DataFrame, _depth: int) -> DataFrame:
+        nonlocal e2
+        if e2 is None:
+            # the first frontier is level 0, the pinned edge set itself;
+            # explicit column renames, not alias-qualified self-joins: a
+            # localCheckpointed plan self-joined through string aliases
+            # trips Catalyst attribute resolution (NoSuchElementException)
+            e2 = frontier.select(
+                F.col("node").alias("e_node"), F.col("anc").alias("e_anc")
+            )
+        return (
             frontier.join(e2, frontier["anc"] == e2["e_node"])
             .select(frontier["node"].alias("node"), F.col("e_anc").alias("anc"))
             .where(F.col("node") != F.col("anc"))
-            .dropDuplicates(["node", "anc"])
-            .join(frontier, ["node", "anc"], "left_anti")
         )
-        if nxt.isEmpty():
-            _unpin(nxt)
-            break
-        levels.append(nxt)
-        frontier = nxt
-    # blocks are context-cleaner managed: every level stays pinned
-    # while the returned union is alive and frees when it is dropped
-    return union_levels().dropDuplicates(["node", "anc"])
+
+    levels, _ = frontier_levels(edges, expand, ["node", "anc"])
+    return union_all(levels)
 
 
 def extend_closure(
     closure: DataFrame,
     new_edges: DataFrame,
-    max_iter: int = 10,
     driver_threshold: int = 200_000,
 ) -> DataFrame:
     """Incrementally extend a transitive closure with new upward edges
@@ -179,43 +147,27 @@ def extend_closure(
     batch of (node, anc) single steps.  Every NEW reachability pair
     contains at least one new edge, and consecutive old-closure steps
     collapse into one (C is closed), so new paths have the shape
-    ``C? (E C?)^k`` for k >= 1.  Semi-naive evaluation on k: the k=1
+    ``C? (E C?)^k`` for k >= 1.  Semi-naive evaluation on k
+    (``frontier_levels`` with the old closure as ``seen``): the k=1
     tier is E bracketed by optional closure segments (three delta-keyed
     joins); each next tier extends the FRONTIER (delta-sized) by one
     ``E C?`` segment — the big closure is only ever joined against
-    delta-sized sides, never re-iterated.  Below ``driver_threshold``
-    total pairs the whole union solves driver-side (one collect + BFS),
-    same answer — equality of the two paths and with a full recompute
-    is pinned by tests and the ``isa_incremental`` contract oracle."""
-    from netbase_spark.operators.canonicalize import _pin, _unpin
-
+    delta-sized sides, never re-iterated, and the loop runs until a
+    tier adds nothing.  Below ``driver_threshold`` total pairs the whole
+    union solves driver-side (one collect + BFS), same answer — equality
+    of the two paths and with a full recompute is pinned by tests and
+    the ``isa_incremental`` contract oracle."""
     e = (
         new_edges.select("node", "anc")
         .where(F.col("node") != F.col("anc"))
         .dropDuplicates(["node", "anc"])
     )
 
-    if driver_threshold:
-        both = collect_limit(
-            closure.select("node", "anc").unionByName(e), driver_threshold + 1
-        )
-        if len(both) <= driver_threshold:
-            adj: dict = {}
-            for n, a in both:
-                adj.setdefault(n, set()).add(a)
-            rows = []
-            for n in adj:
-                seen: set = set()
-                stack = list(adj[n])
-                while stack:
-                    x = stack.pop()
-                    if x in seen:
-                        continue
-                    seen.add(x)
-                    stack.extend(adj.get(x, ()))
-                rows.extend((n, a) for a in seen if a != n)
-            f = closure.schema["node"].dataType.simpleString()
-            return local_frame(closure.sparkSession, rows, f"node {f}, anc {f}")
+    both = driver_rows(closure.select("node", "anc").unionByName(e), driver_threshold)
+    if both is not None:
+        rows = [(n, a) for n, a, _ in reach(both) if a != n]
+        f = closure.schema["node"].dataType.simpleString()
+        return local_frame(closure.sparkSession, rows, f"node {f}, anc {f}")
 
     c = _pin(closure.select("node", "anc"))
     e = _pin(e)
@@ -227,33 +179,18 @@ def extend_closure(
             .select(left["node"].alias("node"), F.col("_a").alias("anc"))
         )
 
-    def clean(df: DataFrame, acc: DataFrame) -> DataFrame:
-        return (
-            df.where(F.col("node") != F.col("anc"))
-            .dropDuplicates(["node", "anc"])
-            .join(acc, ["node", "anc"], "left_anti")
-        )
+    def then_c(step: DataFrame) -> DataFrame:
+        # one optional closure segment after the step's last E edge
+        step = step.unionByName(compose(step, c))
+        return step.where(F.col("node") != F.col("anc"))
 
     # k=1 tier: C? E C?
-    ce = compose(c, e)
-    seed = e.unionByName(ce)
-    seed = seed.unionByName(compose(seed, c))
-    frontier = _pin(clean(seed, c))
-    acc = _pin(c.unionByName(frontier))
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        step = compose(frontier, e)
-        step = step.unionByName(compose(step, c))
-        nf = _pin(clean(step, acc))
-        new_acc = _pin(acc.unionByName(nf))
-        _unpin(frontier)
-        _unpin(acc)
-        frontier, acc = nf, new_acc
-    _unpin(frontier)
-    _unpin(c)
+    seed = then_c(e.unionByName(compose(c, e)))
+    levels, _ = frontier_levels(
+        seed, lambda f, _d: then_c(compose(f, e)), ["node", "anc"], seen=c
+    )
     _unpin(e)
-    return acc
+    return union_all([c] + levels)
 
 
 def _semantic_keys(spark, term: str, closure: DataFrame, colname: str) -> DataFrame:
@@ -408,69 +345,41 @@ def bfs_distances(
     """Multi-source BFS: edges(src, dst), sources(node) ->
     (node, root, depth) minimal hop count from each source.
 
-    Driver loop of frontier joins (Catalyst has no recursion); each
-    level persists + materializes, superseded levels unpersist (bounded
-    executor memory over long traversals).  ``getFurthest``/``findPath``
+    The distributed path is ``frontier_levels`` keyed on (node, root):
+    one pinned level per depth, each anti-joined against the earlier
+    levels, returned as their lazy union.  ``getFurthest``/``findPath``
     are wrappers over these distances.
 
     Size-adaptive like ``isa_closure``/``connected_components``: BFS
     runs on taxonomy/meronymy edge sets, which are dimension-sized, so
     below ``driver_threshold`` edges one collect + Python BFS replaces
-    ~4 scheduled jobs per level; the distributed loop remains the
+    several scheduled jobs per level; the distributed loop remains the
     large-graph guarantee.  Paths proven equal by
     test_bfs_driver_equals_distributed.
     """
-    from netbase_spark.operators.canonicalize import _pin, _unpin
-
-    if driver_threshold:
-        pairs = collect_limit(edges.select("src", "dst"), driver_threshold + 1)
-    if driver_threshold and len(pairs) <= driver_threshold:
-        adj: dict = {}
-        for r in pairs:
-            adj.setdefault(r[0], []).append(r[1])
-        rows = []
-        for (root,) in sources.select("node").collect():
-            seen = {root: 0}
-            frontier = [root]
-            for d in range(1, max_depth + 1):
-                nxt = []
-                for n in frontier:
-                    for m in adj.get(n, ()):
-                        if m not in seen:
-                            seen[m] = d
-                            nxt.append(m)
-                if not nxt:
-                    break
-                frontier = nxt
-            rows.extend((n, root, d) for n, d in seen.items())
+    pairs = driver_rows(edges.select("src", "dst"), driver_threshold)
+    if pairs is not None:
+        roots = {r for (r,) in sources.select("node").collect()}
+        rows = [(r, r, 0) for r in roots] + [
+            (n, r, d) for r, n, d in reach(pairs, roots, max_depth) if n != r
+        ]
         f = sources.schema["node"].dataType.simpleString()
         return local_frame(
             sources.sparkSession, rows, f"node {f}, root {f}, depth int"
         )
 
-    visited = _pin(
-        sources.select(
-            F.col("node"), F.col("node").alias("root"), F.lit(0).alias("depth")
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
+        return frontier.join(edges, frontier["node"] == edges["src"]).select(
+            F.col("dst").alias("node"), "root", F.lit(depth).alias("depth")
         )
+
+    seed = sources.select(
+        F.col("node"), F.col("node").alias("root"), F.lit(0).alias("depth")
     )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        nxt = _pin(
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"), "root", F.lit(d).alias("depth"))
-            .join(visited.select("node", "root"), ["node", "root"], "left_anti")
-            .dropDuplicates(["node", "root"])
-        )
-        if nxt.isEmpty():
-            _unpin(nxt)
-            break
-        new_visited = _pin(visited.unionByName(nxt))
-        if frontier is not visited:
-            _unpin(frontier)
-        _unpin(visited)
-        visited = new_visited
-        frontier = nxt
-    return visited
+    levels, _ = frontier_levels(
+        seed, expand, ["node", "root"], max_levels=max_depth + 1
+    )
+    return union_all(levels)
 
 
 def shortest_path_length(
@@ -496,56 +405,42 @@ def find_path(
     parent (``enqueued[d] = current``, src/query.cpp:1498-1507), then a
     backtrack from dst.  The reference's queue order leaves the parent
     arbitrary among same-level predecessors; min(parent) per node makes
-    the path deterministic here.  The frontier joins stay distributed;
-    only single parent rows reach the driver during the O(path-length)
-    backtrack, so the operator scales with the edge table, not the
-    visited set."""
-    from netbase_spark.operators.canonicalize import _pin, _unpin
-
-    spark = edges.sparkSession
+    the path deterministic here.  The frontier joins stay distributed
+    (``frontier_levels`` keyed on node, stopping at the level that
+    reaches dst); only single parent rows reach the driver during the
+    O(path-length) backtrack, so the operator scales with the edge
+    table, not the visited set."""
     if src == dst:
         return [src]
     e = edges.select("src", "dst")
-    visited = _pin(
-        local_frame(spark, [(src, None)], "node string, parent string")
-    )
-    frontier = visited
-    levels: list[DataFrame] = []
-    found_depth = None
-    for d in range(1, max_depth + 1):
+
+    def expand(frontier: DataFrame, _depth: int) -> DataFrame:
         f = frontier.select(F.col("node").alias("f_node"))
-        nxt = _pin(
+        return (
             f.join(e, f["f_node"] == e["src"])
-            .select(F.col("dst").alias("node"), F.col("f_node").alias("parent"))
-            .join(visited.select("node"), "node", "left_anti")
-            .groupBy("node")
-            .agg(F.min("parent").alias("parent"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("f_node").alias("parent"))
         )
-        if nxt.isEmpty():
-            _unpin(nxt)
-            break
-        levels.append(nxt)
-        new_visited = _pin(visited.unionByName(nxt))
-        _unpin(visited)
-        visited = new_visited
-        frontier = nxt
-        if nxt.where(F.col("node") == dst).take(1):
-            found_depth = d
-            break
-    path: list[str] | None = None
-    if found_depth is not None:
-        path = [dst]
-        cur = dst
-        for lvl in reversed(levels):
-            row = lvl.where(F.col("node") == cur).take(1)
-            cur = row[0]["parent"]
-            path.append(cur)
-        path.reverse()
-        assert path[0] == src
+
+    seed = local_frame(
+        edges.sparkSession, [(src, None)], "node string, parent string"
+    )
+    levels, converged = frontier_levels(
+        seed, expand, ["node"], max_levels=max_depth + 1,
+        stop=F.col("node") == dst,
+    )
+    path = [dst]
+    if not converged:
+        # the last level holds dst, or the depth bound cut the walk
+        # first; the backtrack's first lookup tells which
+        for lvl in reversed(levels[1:]):
+            row = lvl.where(F.col("node") == path[-1]).take(1)
+            if not row:
+                break
+            path.append(row[0]["parent"])
     for lvl in levels:
         _unpin(lvl)
-    _unpin(visited)
-    return path
+    return path[::-1] if path[-1] == src else None
 
 
 def topic_of(
@@ -785,39 +680,24 @@ def _topic_bfs(nodes, e, stop, max_depth):
     so without it any synonym pair ping-pongs the frontier to max_depth
     and the depth-desc furthest-ancestor pick returns a cycle member
     instead of the true topic (the reference's ``yetvisited`` set,
-    src/query.cpp:1511-1564)."""
-    from netbase_spark.operators.canonicalize import _pin, _unpin
+    src/query.cpp:1511-1564) — ``frontier_levels`` keyed on
+    (start, cur) is exactly that set."""
 
-    cur = _pin(
-        nodes.select(
-            F.col("node").alias("start"), F.col("node").alias("cur"),
-            F.lit(0).alias("depth"),
-        )
-    )
-    seen = cur
-    frontier = cur
-    for d in range(1, max_depth + 1):
-        probe = frontier
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
         if stop:
-            probe = probe.where(~F.col("cur").isin(list(stop)))
-        nxt = _pin(
-            probe.join(e, probe["cur"] == e["src"])
-            .select("start", F.col("dst").alias("cur"), F.lit(d).alias("depth"))
-            .dropDuplicates(["start", "cur"])
-            .join(seen.select("start", "cur"), ["start", "cur"], "left_anti")
+            frontier = frontier.where(~F.col("cur").isin(list(stop)))
+        return frontier.join(e, frontier["cur"] == e["src"]).select(
+            "start", F.col("dst").alias("cur"), F.lit(depth).alias("depth")
         )
-        if nxt.isEmpty():
-            _unpin(nxt)
-            break
-        new_seen = _pin(seen.unionByName(nxt))
-        if frontier is not seen:
-            _unpin(frontier)
-        _unpin(seen)
-        seen = new_seen
-        frontier = nxt
-    if frontier is not seen:  # free the last frontier's checkpoint
-        _unpin(frontier)
-    return seen
+
+    seed = nodes.select(
+        F.col("node").alias("start"), F.col("node").alias("cur"),
+        F.lit(0).alias("depth"),
+    )
+    levels, _ = frontier_levels(
+        seed, expand, ["start", "cur"], max_levels=max_depth + 1
+    )
+    return union_all(levels)
 
 
 # rel-class priority for statement listing (the Instance-gap ordering,

@@ -304,6 +304,19 @@ def test_extend_closure_equals_full_recompute(spark):
     # the chain s1 -> n1 -> r1 -> z0 -> top needs two E edges (k=2)
     assert ("s1", "top") in want and ("x9", "top") in want
 
+    # a 21-node chain whose longest path needs 16 new edges (every
+    # fifth link is in the base closure): the tiers run to the fixpoint
+    links = [(f"k{i}", f"k{i + 1}") for i in range(20)]
+    base, new = links[::5], [p for i, p in enumerate(links) if i % 5]
+    closure = isa_closure(t(base))
+    e_df = spark.createDataFrame(new, "node string, anc string")
+    for thr in (200_000, 0):
+        got = {
+            (r["node"], r["anc"])
+            for r in extend_closure(closure, e_df, driver_threshold=thr).collect()
+        }
+        assert len(got) == 21 * 20 // 2 and ("k0", "k20") in got, thr
+
 
 def test_apply_count_delta_matches_full_recount(spark):
     """apply_count_delta over a remove+add batch == a full recount over

@@ -243,27 +243,34 @@ def test_media_resize_and_frame_sampling(spark):
 
 def test_isa_closure_driver_equals_distributed(spark):
     """Driver BFS fast path emits the exact distributed-closure row
-    set, including through Synonym cycles and diamond shapes."""
+    set, including through Synonym cycles and diamond shapes, and on a
+    chain deeper than any fixed iteration budget (both walk to the
+    fixpoint)."""
     from netbase_spark.operators.query_ops import isa_closure
     from netbase_spark.relations import INSTANCE, SUB_CLASS, SUPER_CLASS, SYNONYM, TYPE
 
-    triples = spark.createDataFrame(
-        [
-            ("a", TYPE, "b"),
-            ("b", SUPER_CLASS, "c"),
-            ("c", SUB_CLASS, "b"),  # downward edge: b's anc is c (dup path)
-            ("c", SYNONYM, "d"),  # cycle c<->d
-            ("w", INSTANCE, "a"),  # a's anc is w
-            ("d", TYPE, "e"),
-        ],
-        "subj string, rel int, obj string",
-    )
-    fast = {(r.node, r.anc) for r in isa_closure(triples).collect()}
-    slow = {
-        (r.node, r.anc)
-        for r in isa_closure(triples, driver_threshold=0).collect()
-    }
-    assert fast == slow and ("a", "e") in fast
+    def both(rows):
+        triples = spark.createDataFrame(rows, "subj string, rel int, obj string")
+        fast = {(r.node, r.anc) for r in isa_closure(triples).collect()}
+        slow = {
+            (r.node, r.anc)
+            for r in isa_closure(triples, driver_threshold=0).collect()
+        }
+        assert fast == slow
+        return fast
+
+    fast = both([
+        ("a", TYPE, "b"),
+        ("b", SUPER_CLASS, "c"),
+        ("c", SUB_CLASS, "b"),  # downward edge: b's anc is c (dup path)
+        ("c", SYNONYM, "d"),  # cycle c<->d
+        ("w", INSTANCE, "a"),  # a's anc is w
+        ("d", TYPE, "e"),
+    ])
+    assert ("a", "e") in fast
+    # a 15-node SuperClass chain: every ordered pair, 14 hops deep
+    chain = both([(f"c{i}", SUPER_CLASS, f"c{i + 1}") for i in range(14)])
+    assert len(chain) == 15 * 14 // 2 and ("c0", "c14") in chain
 
 
 def test_bfs_driver_equals_distributed(spark):
