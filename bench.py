@@ -6,7 +6,8 @@ construction throughput job (triples/sec).  Prints ONE JSON line.
 Modes:
   python bench.py                    # full headline suite + pipeline
   python bench.py --pipeline-only    # just construction throughput
-  python bench.py --cpus 8           # override parallelism
+  python bench.py --cpus 8           # override parallelism (default: the
+                                     # affinity mask's cores)
 """
 
 from __future__ import annotations
@@ -217,8 +218,10 @@ def clear_persisted(spark):
 
 
 def main():
+    from netbase_spark.session import host_cpus
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--pipeline-only", action="store_true")
     ap.add_argument("--docs", type=int, default=int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "8000")))

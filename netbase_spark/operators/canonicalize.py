@@ -26,6 +26,32 @@ from netbase_spark.operators.frontier import _pin, _unpin, driver_rows
 from netbase_spark.plans.broadcast_gate import local_frame
 
 
+def _union_find(pairs) -> dict:
+    """``{node: rep}`` for every node of the undirected ``pairs`` whose
+    component's min key ``rep`` is not itself — the driver twin of the
+    min-label loop (the reference's ``mergeNode`` is O(E α)).  Pairs
+    with a None end are skipped."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # min-key representative == the distributed min-label result
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: r for n in list(parent) if (r := find(n)) != n}
+
+
 def connected_components(
     edges: DataFrame, driver_threshold: int = 200_000
 ) -> DataFrame:
@@ -46,25 +72,7 @@ def connected_components(
     """
     got = driver_rows(edges.select("src", "dst"), driver_threshold)
     if got is not None:
-        pairs = [(a, b) for a, b in got if a is not None and b is not None]
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # min-key representative == the distributed min-label result
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        rows = [(n, r) for n, r in rows if n != r]
+        rows = list(_union_find(got).items())
         f = edges.schema["src"].dataType.simpleString()
         return local_frame(edges.sparkSession, rows, f"node {f}, rep {f}")
 
@@ -120,8 +128,33 @@ def connected_components(
     return mapping.where(F.col("node") != F.col("rep"))
 
 
+def merge_mapping_rows(
+    mapping: DataFrame, new_edges: DataFrame, driver_threshold: int = 200_000
+) -> tuple[list, list] | None:
+    """The driver arm of :func:`merge_mapping`: when ``mapping`` and
+    ``new_edges`` each hold at most ``driver_threshold`` rows (one
+    bounded collect each, ``frontier.driver_rows``), route, solve and
+    fold back on the driver and return ``(new map rows, delta rows)`` —
+    the delta being exactly :func:`mapping_delta`'s ``(node, rep)``
+    rows, with no anti join.  None when either side is too large."""
+    old = driver_rows(mapping.select("node", "rep"), driver_threshold)
+    if old is None:
+        return None
+    edges = driver_rows(new_edges.select("src", "dst"), driver_threshold)
+    if edges is None:
+        return None
+    rep = dict(old)
+    delta = _union_find(
+        (rep.get(a, a), rep.get(b, b))
+        for a, b in edges if a is not None and b is not None
+    )
+    new = [(n, delta.get(r, r)) for n, r in old] + list(delta.items())
+    new = [(n, r) for n, r in new if n != r]
+    return new, [(n, r) for n, r in new if rep.get(n) != r]
+
+
 def merge_mapping(
-    mapping: DataFrame, new_edges: DataFrame, **cc_kwargs
+    mapping: DataFrame, new_edges: DataFrame, driver_threshold: int = 200_000
 ) -> DataFrame:
     """Incremental canonical-map maintenance: fold new sameAs/merge
     edges into an existing ``(node, rep)`` mapping WITHOUT recomputing
@@ -141,12 +174,24 @@ def merge_mapping(
        it (mapping side scanned once, delta side broadcast), and the
        delta's own entries (old reps / fresh nodes -> new reps) append.
 
+    Two arms, like :func:`connected_components`: when both inputs fit
+    ``driver_threshold`` rows, all three steps run on the driver
+    (:func:`merge_mapping_rows`, one union-find) and the result is a
+    ``LocalRelation``; otherwise the joins above run on Spark, with the
+    step-2 solve size-gated by the same threshold.
+    ``driver_threshold=0`` forces the Spark arm.
+
     The min-rep invariant is preserved: each old rep is already the min
     of its component, so the min over a merged set of reps IS the min
     over the merged components' full membership.  Equality with a full
     recompute over the edge union is pinned by tests and by the
     ``cc_incremental`` contract query (recursive-CTE DuckDB oracle).
     """
+    got = merge_mapping_rows(mapping, new_edges, driver_threshold)
+    if got is not None:
+        return local_frame(
+            mapping.sparkSession, got[0], mapping.select("node", "rep").schema
+        )
     m_src = mapping.select(F.col("node").alias("src"), F.col("rep").alias("_sr"))
     m_dst = mapping.select(F.col("node").alias("dst"), F.col("rep").alias("_dr"))
     rep_edges = (
@@ -158,7 +203,7 @@ def merge_mapping(
         )
         .where(F.col("src") != F.col("dst"))
     )
-    delta = connected_components(rep_edges, **cc_kwargs)
+    delta = connected_components(rep_edges, driver_threshold)
     # delta nodes are current reps or previously-unmapped nodes, so they
     # are disjoint from mapping's node column; the union needs no dedup.
     # Size-gated broadcast: correction batches are tiny, but a mergeAll-

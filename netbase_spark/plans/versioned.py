@@ -23,8 +23,18 @@ Semantics (each the small-scale twin of the Iceberg feature named):
   ``foreachBatch`` replay after a mid-commit crash cannot double-append
   (the engine replays with the same batch_id — the Iceberg
   write.wap/branch-commit equivalent for this loop).
+- **file bounds** — every manifest carries per-file ``subj``/``obj``
+  min/max taken from the footers of the files its commit wrote (Iceberg
+  keeps column bounds in its manifests the same way), so finding the
+  files a key set can touch (:func:`file_bounds`) reads no data.
 - **expire** — drop manifests older than N versions and delete data
   files no surviving manifest references.
+
+Every commit accepts either a Spark DataFrame (staged Spark write, the
+path at any scale) or Arrow tables (``pq.write_table`` on the driver,
+for maintenance inputs small enough that a Spark job train costs more
+than the work: streaming/construct's surgical merge and
+:func:`rewrite_data_files` choose it by input bytes).
 
 Writer discipline: ONE writer at a time (Structured Streaming's
 foreachBatch guarantees this for the construction loop; a cluster
@@ -42,11 +52,21 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from netbase_spark.plans.broadcast_gate import local_frame
+from netbase_spark.plans.broadcast_gate import broadcast_cap_bytes, local_frame
+
+BOUND_COLS = ("subj", "obj")
+"""Columns whose per-file min/max every manifest records."""
+
+METRICS_LOG = "_construct_metrics.jsonl"
+"""Per-table JSON-lines log: one record per stream batch, merge and
+compaction (the leading underscore keeps parquet readers off it)."""
 
 
 def _vdir(table: str) -> str:
@@ -74,19 +94,58 @@ def read_manifest(table: str, version: int | None = None) -> dict:
         return json.load(fh)
 
 
-def _schema_json(df: DataFrame) -> str:
-    return df.schema.json()
+def log_metrics(table: str, rec: dict) -> None:
+    """Append ``rec`` as one line of the table's :data:`METRICS_LOG`."""
+    with open(os.path.join(table, METRICS_LOG), "a") as fh:
+        fh.write(json.dumps(rec) + "\n")
 
 
-def _write_batch_files(df: DataFrame, table: str) -> list[str]:
+def _schema_json(data, man: dict | None = None) -> str:
+    """Spark schema (JSON) of a commit's input: a DataFrame's own; for
+    Arrow input the manifest's, else the Arrow schema's Spark twin."""
+    if isinstance(data, DataFrame):
+        return data.schema.json()
+    if man and man.get("schema"):
+        return man["schema"]
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    first = data if isinstance(data, pa.Table) else data[0]
+    return from_arrow_schema(first.schema).json()
+
+
+def arrow_schema(schema_json: str) -> pa.Schema:
+    """The Arrow twin of a manifest's Spark schema (``rel`` stays int32)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromJson(json.loads(schema_json)))
+
+
+def _write_batch_files(data, table: str, schema_json: str | None = None) -> list[str]:
     """Materialize a batch as immutable uniquely-named files under
-    data/ via a staging write + hardlink publish; returns the new
-    relative file names."""
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
+    data/; returns the new relative file names.  A DataFrame goes
+    through a staging write + hardlink publish.  A ``pyarrow.Table``
+    (or a list of them, one file each) is cast to ``schema_json``
+    (default: its own) and
+    written with ``pq.write_table`` straight into data/; an empty table
+    writes no file (the manifest's schema keeps the version
+    readable)."""
     data_dir = os.path.join(table, "data")
     os.makedirs(data_dir, exist_ok=True)
     prefix = uuid.uuid4().hex[:8]
+    if not isinstance(data, DataFrame):
+        schema = arrow_schema(schema_json or _schema_json(data))
+        tables = [data] if isinstance(data, pa.Table) else data
+        names = []
+        for t in tables:
+            if t.num_rows:
+                name = f"{prefix}-part-{len(names):05d}-{uuid.uuid4()}.parquet"
+                pq.write_table(t.select(schema.names).cast(schema),
+                               os.path.join(data_dir, name))
+                names.append(name)
+        return names
+    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
+    data.write.mode("overwrite").parquet(staging)
     names = []
     for f in sorted(os.listdir(staging)):
         if not (f.startswith("part-") and f.endswith(".parquet")):
@@ -96,6 +155,35 @@ def _write_batch_files(df: DataFrame, table: str) -> list[str]:
         names.append(name)
     shutil.rmtree(staging)
     return names
+
+
+def _footer_bounds(path: str) -> dict:
+    """``{column: [min, max]}`` of one data file over all its row groups,
+    for each :data:`BOUND_COLS` column whose footer statistics cover
+    every row group (a column without them is left out: unbounded)."""
+    md = pq.read_metadata(path)
+    names = [md.schema.column(j).name for j in range(md.num_columns)]
+    out = {}
+    for col in BOUND_COLS:
+        if col not in names or not md.num_row_groups:
+            continue
+        j = names.index(col)
+        stats = [md.row_group(g).column(j).statistics for g in range(md.num_row_groups)]
+        if all(s is not None and s.has_min_max for s in stats):
+            out[col] = [min(s.min for s in stats), max(s.max for s in stats)]
+    return out
+
+
+def file_bounds(table: str, man: dict) -> dict:
+    """Per-file ``{column: [min, max]}`` for ``man``'s files: the bounds
+    the writing commit recorded, else (a manifest older than bounds)
+    the file's footer.  No data is read."""
+    rec = man.get("bounds") or {}
+    data_dir = os.path.join(table, "data")
+    return {
+        f: rec[f] if f in rec else _footer_bounds(os.path.join(data_dir, f))
+        for f in man["files"]
+    }
 
 
 def _commit(table: str, manifest: dict) -> int:
@@ -111,11 +199,37 @@ def _commit(table: str, manifest: dict) -> int:
     return v
 
 
-def create(df: DataFrame, table: str) -> int:
-    """Initialize a versioned table at ``table`` as version 0."""
+def _replayed(man: dict, batch_id) -> bool:
+    return batch_id is not None and str(batch_id) in set(man.get("batch_ids") or [])
+
+
+def _commit_files(table, man, data, keep, batch_id, schema_json) -> int:
+    """Write ``data``'s files and commit the version listing ``keep``
+    (carried by name, with their recorded bounds) plus those files."""
+    files = _write_batch_files(data, table, schema_json)
+    data_dir = os.path.join(table, "data")
+    old = man.get("bounds") or {}
+    bounds = {f: old[f] for f in keep if f in old}
+    bounds.update({f: _footer_bounds(os.path.join(data_dir, f)) for f in files})
+    ids = set(man.get("batch_ids") or [])
+    return _commit(table, {
+        "version": _next_version(table),
+        "files": keep + files,
+        "batch_ids": sorted(ids | ({str(batch_id)} if batch_id is not None else set())),
+        "parent": man["version"],
+        "schema": schema_json,
+        "bounds": bounds,
+    })
+
+
+def create(data, table: str) -> int:
+    """Initialize a versioned table at ``table`` as version 0 from a
+    DataFrame or Arrow table."""
     if current_version(table) is not None:
         raise FileExistsError(f"versioned table already exists at {table}")
-    files = _write_batch_files(df, table)
+    schema_json = _schema_json(data)
+    files = _write_batch_files(data, table, schema_json)
+    data_dir = os.path.join(table, "data")
     return _commit(
         table,
         {
@@ -123,28 +237,21 @@ def create(df: DataFrame, table: str) -> int:
             "files": files,
             "batch_ids": [],
             "parent": None,
-            "schema": _schema_json(df),
+            "schema": schema_json,
+            "bounds": {f: _footer_bounds(os.path.join(data_dir, f)) for f in files},
         },
     )
 
 
-def append(df: DataFrame, table: str, batch_id: str | int | None = None) -> int:
-    """Fast-append ``df`` as a new version; returns the committed
-    version (or the current one unchanged when ``batch_id`` was already
-    committed — replay idempotence)."""
+def append(data, table: str, batch_id: str | int | None = None) -> int:
+    """Fast-append ``data`` (DataFrame or Arrow) as a new version;
+    returns the committed version (or the current one unchanged when
+    ``batch_id`` was already committed — replay idempotence)."""
     man = read_manifest(table)
-    committed = set(man.get("batch_ids") or [])
-    if batch_id is not None and str(batch_id) in committed:
+    if _replayed(man, batch_id):
         return man["version"]
-    files = _write_batch_files(df, table)
-    new = {
-        "version": _next_version(table),
-        "files": man["files"] + files,
-        "batch_ids": sorted(committed | ({str(batch_id)} if batch_id is not None else set())),
-        "parent": man["version"],
-        "schema": man.get("schema") or _schema_json(df),
-    }
-    return _commit(table, new)
+    return _commit_files(table, man, data, man["files"], batch_id,
+                         man.get("schema") or _schema_json(data))
 
 
 def _next_version(table: str) -> int:
@@ -158,61 +265,83 @@ def _next_version(table: str) -> int:
     return max(existing) + 1
 
 
-def replace(df: DataFrame, table: str, batch_id: str | int | None = None) -> int:
-    """Commit ``df`` as a new version whose file list is ONLY the new
+def replace(data, table: str, batch_id: str | int | None = None) -> int:
+    """Commit ``data`` (DataFrame, Arrow table or list of Arrow tables,
+    one file each) as a new version whose file list is ONLY the new
     files — a full-table rewrite commit (the Iceberg
-    overwrite/rewrite-snapshot analog).  Used when a late merge
-    re-canonicalizes existing rows (streaming/construct.apply_merges):
-    the old version's files are untouched and stay time-travel readable
-    until ``expire_versions``.  Same ``batch_id`` replay idempotence as
-    :func:`append`."""
+    overwrite/rewrite-snapshot analog).  Used by
+    :func:`rewrite_data_files`: the old version's files are untouched
+    and stay time-travel readable until ``expire_versions``.  Same
+    ``batch_id`` replay idempotence as :func:`append`."""
     man = read_manifest(table)
-    committed = set(man.get("batch_ids") or [])
-    if batch_id is not None and str(batch_id) in committed:
+    if _replayed(man, batch_id):
         return man["version"]
-    files = _write_batch_files(df, table)
-    new = {
-        "version": _next_version(table),
-        "files": files,
-        "batch_ids": sorted(committed | ({str(batch_id)} if batch_id is not None else set())),
-        "parent": man["version"],
-        "schema": _schema_json(df),
-    }
-    return _commit(table, new)
+    return _commit_files(table, man, data, [], batch_id, _schema_json(data, man))
 
 
 def replace_files(
-    df: DataFrame,
+    data,
     table: str,
     keep_files: list[str],
     batch_id: str | int | None = None,
 ) -> int:
     """Surgical rewrite commit: the new version's file list is
     ``keep_files`` (untouched data files, carried over by NAME — never
-    copied or rewritten) plus ``df``'s freshly-written files — the
+    copied or rewritten) plus ``data``'s freshly-written files — the
     Iceberg overwrite-files/rewrite-files analog.  This is what makes a
     delta maintenance pass cheap at scale: a full :func:`replace`
     re-WRITES the whole table even when only a few rows changed, while
     this commits O(touched files) new bytes and an O(manifest) swap.
-    Same ``batch_id`` replay idempotence as :func:`append`."""
+    ``data`` is a DataFrame or an Arrow table.  Same ``batch_id``
+    replay idempotence as :func:`append`."""
     man = read_manifest(table)
-    committed = set(man.get("batch_ids") or [])
-    if batch_id is not None and str(batch_id) in committed:
+    if _replayed(man, batch_id):
         return man["version"]
     unknown = set(keep_files) - set(man["files"])
     if unknown:
         raise ValueError(
             f"keep_files not in the current version: {sorted(unknown)[:5]}"
         )
-    files = _write_batch_files(df, table)
-    new = {
-        "version": _next_version(table),
-        "files": sorted(keep_files) + files,
-        "batch_ids": sorted(committed | ({str(batch_id)} if batch_id is not None else set())),
-        "parent": man["version"],
-        "schema": man.get("schema") or _schema_json(df),
-    }
-    return _commit(table, new)
+    return _commit_files(table, man, data, sorted(keep_files), batch_id,
+                         man.get("schema") or _schema_json(data))
+
+
+def read_arrow(table: str, files: list[str], man: dict,
+               columns: list[str] | None = None, filters=None) -> pa.Table:
+    """The rows of ``files`` (names under data/) as one Arrow table in
+    the manifest's schema, read on the driver; ``columns`` projects and
+    ``filters`` (``pq.read_table`` form) prunes row groups by their
+    statistics."""
+    schema = arrow_schema(man["schema"])
+    if not files:
+        empty = schema.empty_table()
+        return empty.select(columns) if columns else empty
+    paths = [os.path.join(table, "data", f) for f in files]
+    return pq.read_table(paths, schema=schema, columns=columns,
+                         filters=filters, partitioning=None)
+
+
+def _split_at_keys(tbl: pa.Table, n: int, keys: list[str] | None) -> list[pa.Table]:
+    """``tbl`` (sorted on ``keys``) as at most ``n`` slices of near-equal
+    row count; each cut moves forward to the next change of key, so no
+    key spans two slices."""
+    rows = tbl.num_rows
+    if n <= 1 or rows <= 1:
+        return [tbl]
+    import bisect
+
+    if keys:
+        vals = list(zip(*(tbl[c].to_pylist() for c in keys)))
+        starts = [i for i in range(1, rows) if vals[i] != vals[i - 1]]
+    else:
+        starts = range(1, rows)
+    cuts = set()
+    for k in range(1, n):
+        j = bisect.bisect_left(starts, k * rows // n)
+        if j < len(starts):
+            cuts.add(starts[j])
+    edges = [0, *sorted(cuts), rows]
+    return [tbl.slice(a, b - a) for a, b in zip(edges, edges[1:])]
 
 
 def rewrite_data_files(
@@ -229,38 +358,67 @@ def rewrite_data_files(
     The row multiset is unchanged (pure maintenance; time travel still
     reads the old layout); what changes is the LAYOUT:
 
-    - ``cluster_by`` columns drive a ``repartitionByRange`` + in-file
-      sort, so each key's rows land in O(1) files with tight parquet
-      min/max stats — this is what keeps the surgical merge path
-      (streaming/construct._surgical_recanonicalize) touching O(touched)
-      files: its isin predicate prunes on exactly those stats, and
-      streamed appends decay that property over time (every appended
-      batch scatters new rows for old keys into new files);
+    - ``cluster_by`` columns sort the rows and cut them into files at
+      key boundaries, so each key's rows land in exactly one file with
+      tight min/max bounds — this is what keeps the surgical merge path
+      (streaming/construct._surgical_recanonicalize) touching
+      O(touched) files: its candidate test reads exactly those bounds,
+      and streamed appends decay that property over time (every
+      appended batch scatters new rows for old keys into new files);
     - ``target_file_bytes`` bin-packs: the output file count is
       ceil(current data bytes / target), so a thousand small appended
       files compact into a few right-sized ones (small-file compaction,
       the other half of the Iceberg action).
 
+    Two arms, chosen by the live files' on-disk bytes against
+    ``broadcast_cap_bytes(spark)``: at most the cap, the rows are read,
+    sorted and cut in Arrow on the driver (no Spark job); above it, a
+    ``repartitionByRange`` + in-file sort on Spark.  Each run appends
+    one record (``path``, files, input bytes, cap, secs) to the table's
+    :data:`METRICS_LOG`.
+
     Runs as ONE writer (same discipline as every commit here); readers
     of older versions are unaffected, and ``expire_versions`` later
     reclaims the scattered layout's files.  Returns the new version."""
+    t0 = time.perf_counter()
     man = read_manifest(table)
-    committed = set(man.get("batch_ids") or [])
-    if batch_id is not None and str(batch_id) in committed:
+    if _replayed(man, batch_id):
         return man["version"]
-    df = read(spark, table)
     data_dir = os.path.join(table, "data")
     total_bytes = sum(
         os.path.getsize(os.path.join(data_dir, f)) for f in man["files"]
     )
     n_files = max(min_files, -(-total_bytes // max(1, target_file_bytes)))
-    if cluster_by:
-        packed = df.repartitionByRange(n_files, *cluster_by)
-        packed = packed.sortWithinPartitions(*cluster_by)
+    cap = broadcast_cap_bytes(spark)
+    arrow = total_bytes <= cap
+    if arrow:
+        tbl = read_arrow(table, man["files"], man)
+        if cluster_by:
+            tbl = tbl.sort_by([(c, "ascending") for c in cluster_by])
+        packed = _split_at_keys(tbl, n_files, cluster_by)
     else:
-        packed = df.coalesce(n_files) if df.rdd.getNumPartitions() > n_files \
-            else df.repartition(n_files)
-    return replace(packed, table, batch_id=batch_id)
+        df = read(spark, table)
+        if cluster_by:
+            packed = df.repartitionByRange(n_files, *cluster_by)
+            packed = packed.sortWithinPartitions(*cluster_by)
+        else:
+            packed = df.coalesce(n_files) if df.rdd.getNumPartitions() > n_files \
+                else df.repartition(n_files)
+    v = replace(packed, table, batch_id=batch_id)
+    n_before = len(man["files"])
+    log_metrics(table, {
+        "batch_id": batch_id,
+        "compaction": True,
+        "path": "arrow" if arrow else "spark",
+        "candidate_files": n_before,
+        "touched_files": n_before,
+        "files_before": n_before,
+        "files_after": len(read_manifest(table)["files"]),
+        "input_bytes": total_bytes,
+        "cap_bytes": cap,
+        "secs": round(time.perf_counter() - t0, 3),
+    })
+    return v
 
 
 def read(spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
@@ -305,14 +463,14 @@ def expire_versions(
     crashed appends included).  Versions ABOVE current — the branch left
     behind by a :func:`rollback` — survive by default (``keep_future``;
     a user may intend to roll FORWARD to them); pass
-    ``keep_future=False`` to reclaim that branch's disk.  A leftover
-    ``_staging-*`` directory is removed only once its mtime is older
-    than ``staging_grace_secs``: a fresh one is the normal state of an
-    IN-FLIGHT append/replace commit, and deleting it mid-write would
-    crash or truncate that commit — expiry may run beside a live writer
-    (the streaming loop itself never calls it; a caller runs it between
-    batches).  Returns the deleted data file names."""
-    import time
+    ``keep_future=False`` to reclaim that branch's disk.  An
+    unreferenced data file or a leftover ``_staging-*`` directory is
+    removed only once its mtime is older than ``staging_grace_secs``: a
+    fresh one is the normal state of an IN-FLIGHT commit (its files are
+    published into data/ before its manifest lists them), and deleting
+    it mid-write would corrupt that commit — expiry may run beside a
+    live writer (the streaming loop itself never calls it; a caller
+    runs it between batches).  Returns the deleted data file names."""
     cur = current_version(table)
     if cur is None:
         return []
@@ -326,23 +484,26 @@ def expire_versions(
     live: set[str] = set()
     for v in survivors:
         live |= set(read_manifest(table, v)["files"])
+    now = time.time()
+
+    def expired(path: str) -> bool:
+        try:
+            return now - os.path.getmtime(path) >= staging_grace_secs
+        except OSError:  # removed meanwhile
+            return False
+
     deleted = []
     data_dir = os.path.join(table, "data")
     for f in os.listdir(data_dir):
-        if f not in live:
-            os.remove(os.path.join(data_dir, f))
+        path = os.path.join(data_dir, f)
+        if f not in live and expired(path):
+            os.remove(path)
             deleted.append(f)
     for v in versions:
         if v not in survivors:
             os.remove(_manifest_path(table, v))
-    now = time.time()
     for f in os.listdir(table):
-        if f.startswith("_staging-"):
-            path = os.path.join(table, f)
-            try:
-                age = now - os.path.getmtime(path)
-            except OSError:
-                continue
-            if age >= staging_grace_secs:
-                shutil.rmtree(path, ignore_errors=True)
+        path = os.path.join(table, f)
+        if f.startswith("_staging-") and expired(path):
+            shutil.rmtree(path, ignore_errors=True)
     return sorted(deleted)

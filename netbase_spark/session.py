@@ -6,25 +6,44 @@ from __future__ import annotations
 import os
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the
+    machine's core count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_memory() -> str:
+    """A quarter of the host's RAM (MemTotal), at least 1 GB: in local
+    mode the driver JVM also hosts the executors, and the Python
+    workers live outside its heap."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1, kb // (4 << 20))}g"
+
+
 def get_spark(
     app: str = "netbase_spark",
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra: dict | None = None,
     inherit_master: bool = False,
 ):
     """``inherit_master=True`` leaves ``spark.master`` (and driver memory)
     to whatever launched the JVM — i.e. ``spark-submit --master ...`` per
     the north rule's cluster run mode; ``cpus`` then only sizes shuffle
-    parallelism."""
+    parallelism.  Unset ``cpus`` (and no ``SPARK_GRAFT_CPUS``) and
+    ``driver_memory`` size the session to the host: :func:`host_cpus`
+    and :func:`host_driver_memory`."""
     from pyspark.sql import SparkSession
 
     if cpus is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
     cpus = int(cpus)
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    if driver_memory is None:
+        driver_memory = host_driver_memory()
 
     b = SparkSession.builder
     if not inherit_master:

@@ -19,7 +19,14 @@ idempotent merge into the canonical triple table — as a
   from offsets, and a batch replayed after a mid-batch crash is
   deduplicated by the same anti-join, so the table converges to the
   batch-pipeline result (test_streaming_construct.py pins equality
-  with a full rebuild).
+  with a full rebuild);
+- late sameAs merges (:func:`apply_merges`) and periodic compaction
+  (``compact_every``) are delta-sized maintenance on the versioned
+  table, and they choose their plan from the size of their input: a
+  merge whose candidate files (known from the manifest's per-file
+  bounds) fit the broadcast cap, or a compaction whose live files do,
+  runs as a pyarrow rewrite on the driver; a larger one runs the Spark
+  plan.  Each run logs which arm ran to ``_construct_metrics.jsonl``.
 
 The doc side stays shuffle-free per batch on the broadcast path; the
 anti-join reads the current table with the delta keys broadcast
@@ -56,30 +63,43 @@ def apply_merges(
     Three delta-sized steps:
 
     1. canonical map: :func:`~netbase_spark.operators.canonicalize.
-       merge_mapping` re-solves ONLY the touched components;
-    2. the on-disk triple table: :func:`~netbase_spark.operators.
-       canonicalize.recanonicalize_delta` rewrites only rows touching
-       re-rooted nodes, committed as a ``versioned.replace`` rewrite
-       snapshot (or a staged parquet overwrite in plain mode);
+       merge_mapping` re-solves ONLY the touched components.  When the
+       map and the edges fit its driver threshold this runs on the
+       driver and hands back the rep delta directly; otherwise the
+       Spark arm's map is checkpointed and the delta (its
+       ``mapping_delta``) collected once under the cap;
+    2. the on-disk triple table: only rows touching re-rooted nodes are
+       rewritten — in a versioned table only the data FILES holding
+       them (:func:`_surgical_recanonicalize`, a ``replace_files``
+       commit), in plain mode through ``recanonicalize_delta`` and a
+       staged parquet overwrite;
     3. dimension artifacts: the gazetteer broadcast's alias->entity
        values remap through the (tiny, collected) rep delta — the
        automaton is reused, never rebuilt — and the shuffle-path
        alias_entity table takes the same remap as a broadcast join, so
        FUTURE batches link straight to the new representatives.
 
+    A merge that changes a rep appends one record to the table's
+    ``versioned.METRICS_LOG``: which arm rewrote the table (``path``),
+    candidate and touched files, input bytes, the cap and the secs up
+    to the table commit.
     Returns the refreshed ``ConstructionArtifacts``.  Equality with a
     from-scratch rebuild over (docs, edges ∪ late edges) is pinned by
     tests/test_streaming_construct.py.
     """
+    import time
+
     from pyspark.sql import functions as F
 
     from netbase_spark.operators.canonicalize import (
         mapping_delta,
         merge_mapping,
+        merge_mapping_rows,
         recanonicalize_delta,
         rewrite_triples,
     )
     from netbase_spark.operators.mentions import remap_scan_entities
+    from netbase_spark.plans import versioned as V
     from netbase_spark.plans.broadcast_gate import (
         collect_under_cap,
         gated_broadcast,
@@ -87,14 +107,21 @@ def apply_merges(
     )
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
 
+    t0 = time.perf_counter()
     old_map = artifacts.mapping
-    new_map = merge_mapping(old_map, merge_edges).localCheckpoint()
-    # the rep delta is collected ONCE: its rows become the LocalRelation
-    # every later step joins against, the isin list of the surgical
-    # rewrite and the gazetteer remap.  Only a delta over the collect
-    # cap stays a (checkpointed) DataFrame.
-    delta = mapping_delta(old_map, new_map).select("node", "rep")
-    rep_rows = collect_under_cap(delta)
+    map_schema = old_map.select("node", "rep").schema
+    got = merge_mapping_rows(old_map, merge_edges)
+    if got is not None:
+        new_map = local_frame(spark, got[0], map_schema)
+        rep_rows = got[1]
+    else:
+        new_map = merge_mapping(old_map, merge_edges).localCheckpoint()
+        # the rep delta is collected ONCE: its rows become the
+        # LocalRelation every later step joins against and the
+        # gazetteer remap.  Only a delta over the collect cap stays a
+        # (checkpointed) DataFrame.
+        delta = mapping_delta(old_map, new_map).select("node", "rep")
+        rep_rows = collect_under_cap(delta)
     if rep_rows is None:
         # failure atomicity: the broadcast-gazetteer remap (step 3)
         # needs the rep delta on the driver; refuse BEFORE the table
@@ -109,27 +136,33 @@ def apply_merges(
                 "modified)"
             )
         changed = delta.localCheckpoint()
+        rep_of = None
     elif not rep_rows:
         return artifacts
     else:
-        changed = local_frame(spark, rep_rows, delta.schema)
+        changed = local_frame(spark, rep_rows, map_schema)
+        rep_of = dict(rep_rows)
 
-    # 2. delta-rewrite the table.  Versioned tables get the SURGICAL
-    # path: only the data FILES containing touched rows are rewritten;
-    # untouched files carry into the new manifest by name (the Iceberg
-    # rewrite-files analog, versioned.replace_files).  A full-table
-    # rewrite commit would re-WRITE 100 TB to change a few components —
-    # the write, not the rewrite join, is the dominant cost at scale
-    # (measured: BENCH/incremental_merge_probe.json).
+    # 2. delta-rewrite the table.  A full-table rewrite commit would
+    # re-WRITE 100 TB to change a few components — the write, not the
+    # rewrite join, is the dominant cost at scale (measured:
+    # BENCH/incremental_merge_probe.json).
     if versioned:
-        nodes = None if rep_rows is None else [r["node"] for r in rep_rows]
-        _surgical_recanonicalize(spark, table_dir, changed, batch_id, nodes)
+        rec = _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of)
     else:
+        parts = [os.path.join(table_dir, f) for f in os.listdir(table_dir)
+                 if f.startswith("part-")]
+        rec = {"path": "spark", "candidate_files": len(parts),
+               "touched_files": len(parts),
+               "input_bytes": sum(os.path.getsize(f) for f in parts),
+               "cap_bytes": None}
         existing = spark.read.parquet(table_dir)
         updated = recanonicalize_delta(existing, changed)
         # materialize before overwriting the directory being read
         updated = updated.localCheckpoint()
         updated.write.mode("overwrite").parquet(table_dir)
+    V.log_metrics(table_dir, {"batch_id": batch_id, "merge": True, **rec,
+                              "secs": round(time.perf_counter() - t0, 3)})
 
     # 3. refresh the dimension artifacts through the rep delta
     label_triples = rewrite_triples(
@@ -139,7 +172,6 @@ def apply_merges(
     alias_entity = artifacts.alias_entity
     if scan_bc is not None:
         # rep_rows was collected (and gated) before the table commit
-        rep_of = {r["node"]: r["rep"] for r in rep_rows}
         scan_bc = remap_scan_entities(spark, scan_bc, rep_of)
     if alias_entity is not None:
         d = gated_broadcast(
@@ -167,42 +199,159 @@ time, and parquet In-pushdown degrades on huge lists — past this, the
 broadcast-marker join is strictly better."""
 
 
-def _surgical_recanonicalize(spark, table_dir, changed, batch_id, nodes=None):
-    """File-level delta rewrite of a versioned triple table: one
-    column-pruned scan finds the data files containing touched rows
-    (``nodes``: ``changed``'s node keys when the caller already holds
-    them, else collected here); ONLY those files are re-read, their
-    delta-touched ROWS rewritten through the mapping (untouched rows in
-    the same file carry verbatim — identical split to
+def _may_hold(bounds: dict, col: str, values: list) -> bool:
+    """Whether a file with ``bounds`` (``versioned.file_bounds``) can
+    hold a ``col`` value from the sorted ``values``; a file without
+    bounds for ``col`` always can."""
+    import bisect
+
+    if col not in bounds:
+        return True
+    lo, hi = bounds[col]
+    i = bisect.bisect_left(values, lo)
+    return i < len(values) and values[i] <= hi
+
+
+def _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of=None):
+    """File-level delta rewrite of a versioned triple table, committed
+    as a ``replace_files`` manifest swap: only the data files holding a
+    row whose subj or obj is a ``changed`` node are rewritten, their
+    delta-touched ROWS go through the mapping (untouched rows in the
+    same file carry verbatim — identical split to
     ``recanonicalize_delta``, so sameAs-class rels and self-loops
     already stored in untouched rows survive exactly as the plain path
-    keeps them), deduplicated against the untouched files' keys
-    (first-writer, via a key-only scan), and committed as a
-    ``replace_files`` manifest swap.  End-state equality with the full
-    ``recanonicalize_delta`` is pinned by
-    tests/test_streaming_construct.py."""
-    import os
+    keeps them), and the result is first-writer-deduplicated against
+    the untouched rows and the kept files' keys.
 
+    Candidate files come from the manifest's per-file bounds (no data
+    read, no job; every file when the delta's nodes are not on the
+    driver).  Two arms, the same rewrite:
+
+    - **arrow** — ``rep_of`` (the delta as a dict) is on the driver and
+      the candidates' on-disk bytes are at most
+      ``broadcast_cap_bytes(spark)``: pyarrow reads, splits, remaps and
+      writes on the driver, no Spark job;
+    - **spark** — the scale twin: a column-pruned scan of the candidate
+      files names the touched ones, ``recanonicalize_delta`` rewrites
+      them and ``fresh_triples`` dedups against the kept files.
+
+    Returns the merge's metrics record.  End-state equality of the arms
+    with each other and with the full ``recanonicalize_delta`` is pinned
+    by tests/test_merge_arms.py and tests/test_streaming_construct.py."""
+    from netbase_spark.plans import versioned as V
+    from netbase_spark.plans.broadcast_gate import broadcast_cap_bytes, collect_limit
+
+    man = V.read_manifest(table_dir)
+    data_dir = os.path.join(table_dir, "data")
+    if rep_of is not None:
+        nodes = sorted(rep_of)
+    else:
+        nodes = [r[0] for r in collect_limit(changed.select("node"), ISIN_NODE_CAP + 1)]
+        nodes = sorted(nodes) if len(nodes) <= ISIN_NODE_CAP else None
+    bounds = V.file_bounds(table_dir, man)
+    cands = [
+        f for f in man["files"]
+        if nodes is None or _may_hold(bounds[f], "subj", nodes)
+        or _may_hold(bounds[f], "obj", nodes)
+    ]
+    in_bytes = sum(os.path.getsize(os.path.join(data_dir, f)) for f in cands)
+    cap = broadcast_cap_bytes(spark)
+    arrow = rep_of is not None and in_bytes <= cap
+    if arrow:
+        touched = _arrow_rewrite(table_dir, man, bounds, cands, rep_of, batch_id)
+    else:
+        touched = _spark_rewrite(spark, table_dir, man, cands, changed, nodes,
+                                 batch_id)
+    return {"path": "arrow" if arrow else "spark",
+            "candidate_files": len(cands), "touched_files": touched,
+            "input_bytes": in_bytes, "cap_bytes": cap}
+
+
+def _arrow_rewrite(table_dir, man, bounds, cands, rep_of, batch_id) -> int:
+    """The arrow arm of :func:`_surgical_recanonicalize`; returns the
+    number of files rewritten."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from netbase_spark.plans import versioned as V
+    from netbase_spark.relations import SAMEAS_CLASS_RELS
+
+    nodes = sorted(rep_of)
+    keys = pa.array(nodes, V.arrow_schema(man["schema"]).field("subj").type)
+
+    def hit(t):
+        return pc.or_(pc.is_in(t["subj"], value_set=keys),
+                      pc.is_in(t["obj"], value_set=keys))
+
+    tables = {f: V.read_arrow(table_dir, [f], man) for f in cands}
+    touched = [f for f in cands if pc.any(hit(tables[f])).as_py()]
+    if not touched:
+        return 0
+    t = pa.concat_tables([tables[f] for f in touched])
+    mask = hit(t)
+    untouched = t.filter(pc.invert(mask))
+    moved = t.filter(mask)
+    # recanonicalize_delta's rewrite of the touched rows: drop
+    # sameAs-class rels, remap subj/obj through the delta, drop
+    # self-loops
+    moved = moved.filter(pc.invert(pc.is_in(
+        moved["rel"], value_set=pa.array(sorted(SAMEAS_CLASS_RELS), moved["rel"].type))))
+    reps = pa.array([rep_of[n] for n in nodes], keys.type)
+    for col in ("subj", "obj"):
+        idx = pc.index_in(moved[col], value_set=keys)
+        moved = moved.set_column(
+            moved.schema.get_field_index(col), col,
+            pc.if_else(pc.is_valid(idx), pc.take(reps, idx), moved[col]))
+    moved = moved.filter(pc.not_equal(moved["subj"], moved["obj"]))
+    # first-writer dedup: one row per key (the min of the other
+    # columns, nulls first), none on a key the untouched rows or the
+    # kept files already hold — read key-only, from the kept files
+    # whose bounds can hold a rewritten key
+    rows = sorted(moved.to_pylist(),
+                  key=lambda r: [(v is not None, v) for v in r.values()])
+    subs = sorted({r["subj"] for r in rows})
+    objs = sorted({r["obj"] for r in rows})
+    keep = [f for f in man["files"] if f not in set(touched)]
+    key_files = [f for f in keep if _may_hold(bounds[f], "subj", subs)
+                 and _may_hold(bounds[f], "obj", objs)]
+    key_cols = ["subj", "rel", "obj"]
+    held = set()
+    if subs:
+        for src in (untouched.select(key_cols),
+                    V.read_arrow(table_dir, key_files, man, key_cols,
+                                 filters=[("subj", "in", subs)])):
+            src = src.filter(pc.is_in(src["subj"], value_set=pa.array(subs, keys.type)))
+            held.update(zip(*(src[c].to_pylist() for c in key_cols)))
+    added = []
+    for r in rows:
+        k = (r["subj"], r["rel"], r["obj"])
+        if k not in held:
+            held.add(k)
+            added.append(r)
+    out = pa.concat_tables([untouched, pa.Table.from_pylist(added, schema=t.schema)])
+    V.replace_files(out, table_dir, keep, batch_id=batch_id)
+    return len(touched)
+
+
+def _spark_rewrite(spark, table_dir, man, cands, changed, nodes, batch_id) -> int:
+    """The spark arm of :func:`_surgical_recanonicalize`; returns the
+    number of files rewritten."""
     from pyspark.sql import functions as F
 
     from netbase_spark.operators.canonicalize import recanonicalize_delta
     from netbase_spark.operators.evaluate import fresh_triples
     from netbase_spark.plans import versioned as V
-    from netbase_spark.plans.broadcast_gate import collect_limit, gated_broadcast
+    from netbase_spark.plans.broadcast_gate import gated_broadcast
 
-    man = V.read_manifest(table_dir)
+    if not cands:
+        return 0
     data_dir = os.path.join(table_dir, "data")
-    full = V.read(spark, table_dir)
-    # touched-file discovery: when the delta is small, use an isin
-    # PREDICATE — it pushes into the parquet scan, so row-group
-    # min/max stats skip untouched files entirely (the whole point of a
-    # key-clustered layout: write_triples_bucketed / repartitionByRange
-    # keeps each node's rows in O(1) files).  Past ISIN_NODE_CAP, fall
-    # back to broadcast-marker joins (full scan, still column-pruned).
-    if nodes is None:
-        nodes = collect_limit(changed.select("node"), ISIN_NODE_CAP + 1)
-        nodes = [r[0] for r in nodes]
-    if len(nodes) <= ISIN_NODE_CAP:
+    full = spark.read.parquet(*[os.path.join(data_dir, f) for f in cands])
+    # touched-file discovery over the candidates: an isin PREDICATE
+    # when the delta's nodes are on the driver (it pushes into the
+    # parquet scan, so row-group min/max stats skip untouched row
+    # groups), broadcast-marker joins past ISIN_NODE_CAP
+    if nodes is not None:
         cond = F.col("subj").isin(nodes) | F.col("obj").isin(nodes)
         touched_q = (
             full.withColumn("_f", F.input_file_name())
@@ -227,7 +376,7 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id, nodes=None):
         os.path.basename(r["_f"]) for r in touched_q.distinct().collect()
     }
     if not touched_paths:
-        return
+        return 0
     keep = [f for f in man["files"] if f not in touched_paths]
     touched_df = spark.read.parquet(
         *[os.path.join(data_dir, f) for f in sorted(touched_paths)]
@@ -248,6 +397,7 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id, nodes=None):
     V.replace_files(
         final.select(*touched_df.columns), table_dir, keep, batch_id=batch_id
     )
+    return len(touched_paths)
 
 
 def start_incremental_construct(
@@ -285,7 +435,8 @@ def start_incremental_construct(
     without periodic compaction the file-level delta rewrite decays to
     a near-full rewrite — measured, BENCH/compaction_probe.json).  The
     compaction commit is batch-id-idempotent like every commit here, so
-    a replay after a crash cannot double-compact."""
+    a replay after a crash cannot double-compact, and it logs its own
+    record (files before/after, arm) next to the batch records."""
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import build_artifacts, scan_batch
 
@@ -303,7 +454,6 @@ def start_incremental_construct(
 
     def process_batch(docs: DataFrame, batch_id: int) -> None:
         import glob
-        import json
         import time
 
         from pyspark.sql import Observation
@@ -356,31 +506,17 @@ def start_incremental_construct(
                 for f in new_files
             ],
         }
-        with open(os.path.join(table_dir, "_construct_metrics.jsonl"), "a") as fh:
-            fh.write(json.dumps(rec) + "\n")
+        V.log_metrics(table_dir, rec)
         if (
             versioned and compact_every
             and batch_id > 0 and batch_id % compact_every == 0
         ):
-            t0 = time.time()
-            before_files = len(V.read_manifest(table_dir)["files"])
             V.rewrite_data_files(
                 spark, table_dir,
                 cluster_by=list(compact_cluster_by),
                 target_file_bytes=compact_target_file_bytes,
                 batch_id=f"compact-{batch_id}",
             )
-            crec = {
-                "batch_id": batch_id,
-                "compaction": True,
-                "files_before": before_files,
-                "files_after": len(V.read_manifest(table_dir)["files"]),
-                "secs": round(time.time() - t0, 3),
-            }
-            with open(
-                os.path.join(table_dir, "_construct_metrics.jsonl"), "a"
-            ) as fh:
-                fh.write(json.dumps(crec) + "\n")
 
     stream = (
         spark.readStream.schema(DOCS_SCHEMA)

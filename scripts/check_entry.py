@@ -10,10 +10,11 @@ Usage: python scripts/check_entry.py [names...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CHECK = "/root/testdata/sf0.01"

@@ -184,15 +184,19 @@ def test_merge_mapping_equals_full_recompute(spark):
         "src string, dst string",
     )
     mapping = connected_components(base)
-    got = {
-        (r["node"], r["rep"])
-        for r in merge_mapping(mapping, late).collect()
-    }
     want = {
         (r["node"], r["rep"])
         for r in connected_components(base.unionByName(late)).collect()
     }
-    assert got == want
+    # both arms: the driver union-find and the Spark joins
+    for driver_threshold in (200_000, 0):
+        got = {
+            (r["node"], r["rep"])
+            for r in merge_mapping(
+                mapping, late, driver_threshold=driver_threshold
+            ).collect()
+        }
+        assert got == want
     # spot-check the semantics: the bridge re-roots d/e/f under "a"
     assert ("d", "a") in got and ("f", "a") in got and ("q", "p") in got
     assert ("z", "x") in got

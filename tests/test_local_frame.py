@@ -178,7 +178,48 @@ def _lsh(keep_vec):
     return run
 
 
+def _merge_mapping(driver_threshold):
+    def run(df):
+        from netbase_spark.operators.canonicalize import merge_mapping
+
+        mapping = df.select(F.col("src").alias("node"), F.col("dst").alias("rep"))
+        return merge_mapping(mapping, df, driver_threshold=driver_threshold)
+
+    return run
+
+
+def _mapping_delta(df):
+    from netbase_spark.operators.canonicalize import mapping_delta
+
+    return mapping_delta(df.where(F.lit(False)), df)
+
+
+def _as_map(triples):
+    return triples.select(F.col("subj").alias("node"), F.col("obj").alias("rep"))
+
+
+def _rewrite_triples(df):
+    from netbase_spark.operators.canonicalize import rewrite_triples
+
+    return rewrite_triples(df, _as_map(df))
+
+
+def _recanonicalize_delta(df):
+    from netbase_spark.operators.canonicalize import recanonicalize_delta
+
+    return recanonicalize_delta(df, _as_map(df))
+
+
+def _fresh_triples(df):
+    from netbase_spark.operators.evaluate import fresh_triples
+
+    return fresh_triples(df.where(F.lit(False)), df)
+
+
 _EDGES = ([(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint")
+_PAIRS = ([("b", "a"), ("c", "b")], "src string, dst string")
+_MAP = ([("b", "a")], "node string, rep string")
+_TRIPLES = ([("b", 7, "x", "r", "d1"), ("a", 7, "b", "r", "d2")], TRIPLE_DDL)
 _VECS = ([(1, [1.0, 0.0]), (2, [0.9, 0.1])], "id int, v array<double>")
 _TAXO = ([("a", SUPER_CLASS, "b"), ("b", SUPER_CLASS, "c")],
          "subj string, rel int, obj string")
@@ -192,8 +233,16 @@ _TAXO = ([("a", SUPER_CLASS, "b"), ("b", SUPER_CLASS, "c")],
     (_neardup, _VECS),
     (_lsh(False), _VECS),
     (_lsh(True), _VECS),
+    (_merge_mapping(200_000), _PAIRS),
+    (_merge_mapping(0), _PAIRS),
+    (_mapping_delta, _MAP),
+    (_rewrite_triples, _TRIPLES),
+    (_recanonicalize_delta, _TRIPLES),
+    (_fresh_triples, _TRIPLES),
 ], ids=["cc", "isa_closure", "pagerank", "pagerank_resume",
-        "cosine_neardup_pairs", "ann_lsh_buckets", "ann_lsh_buckets_keep_vec"])
+        "cosine_neardup_pairs", "ann_lsh_buckets", "ann_lsh_buckets_keep_vec",
+        "merge_mapping_driver", "merge_mapping_spark", "mapping_delta",
+        "rewrite_triples", "recanonicalize_delta", "fresh_triples"])
 def test_empty_input_matches_nonempty_schema(spark, op, data):
     rows, ddl = data
     full = op(local_frame(spark, rows, ddl))

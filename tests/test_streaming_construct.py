@@ -10,6 +10,7 @@ import pathlib
 import pytest
 
 from pyspark.sql import functions as F
+from test_merge_arms import cap_bytes
 
 from netbase_spark.session import get_spark
 
@@ -173,6 +174,14 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
     )
     assert len(subs) >= 2
     late = spark.createDataFrame([(subs[1], subs[0])], "src string, dst string")
+    # the same merge on a copy of the table through the Spark arm
+    import shutil
+
+    shutil.copytree(table, tmp_path / "mtriples-spark")
+    with cap_bytes(spark, 1):
+        apply_merges(spark, str(tmp_path / "mtriples-spark"), late,
+                     build_artifacts(spark), versioned=True,
+                     batch_id="late-merge-1")
     arts2 = apply_merges(
         spark, str(table), late, arts, versioned=True, batch_id="late-merge-1"
     )
@@ -180,6 +189,9 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
     assert (
         V.read(spark, str(table)).where(F.col("subj") == subs[1]).count() == 0
     )
+    keyset = lambda df: {(r.subj, r.rel, r.obj) for r in df.collect()}
+    assert keyset(V.read(spark, str(table))) == keyset(
+        V.read(spark, str(tmp_path / "mtriples-spark")))
 
     # future batches link against the refreshed artifacts
     _land(spark, tmp_path, 25, start=40)
@@ -198,7 +210,6 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
         arts_ref.mapping, merge_mapping(arts_ref.mapping, late)
     )
     expected = rewrite_triples(full, changed)
-    keyset = lambda df: {(r.subj, r.rel, r.obj) for r in df.collect()}
     got = V.read(spark, str(table))
     assert keyset(got) == keyset(expected)
     # replay idempotence of the merge commit itself
@@ -242,15 +253,23 @@ def test_apply_merges_plain_parquet_table(spark, tmp_path: pathlib.Path):
     assert apply_merges(spark, table, noop, arts) is arts
 
     late = spark.createDataFrame([(subs[1], subs[0])], "src string, dst string")
-    apply_merges(spark, table, late, arts)
-    got = spark.read.parquet(table)
-    assert got.where(F.col("subj") == subs[1]).count() == 0
     expected = rewrite_triples(
         construct_from(spark, docs, arts_ref),
         mapping_delta(arts_ref.mapping, merge_mapping(arts_ref.mapping, late)),
     )
     keyset = lambda df: {(r.subj, r.rel, r.obj) for r in df.collect()}
-    assert keyset(got) == keyset(expected)
+    # under the default cap and under a 1-byte cap (every size gate
+    # takes its Spark side), each on its own copy of the table
+    import shutil
+
+    shutil.copytree(table, table + "-cap1")
+    for t, a, cap in ((table, arts, None),
+                      (table + "-cap1", build_artifacts(spark), 1)):
+        with cap_bytes(spark, cap):
+            apply_merges(spark, t, late, a)
+        got = spark.read.parquet(t)
+        assert got.where(F.col("subj") == subs[1]).count() == 0
+        assert keyset(got) == keyset(expected)
 
 
 def test_surgical_recanonicalize_rewrites_only_touched_files(
@@ -291,17 +310,21 @@ def test_surgical_recanonicalize_rewrites_only_touched_files(
         ),
         empty_map, None, None, frozenset(),
     )
-    apply_merges(spark, table, late, arts, versioned=True, batch_id="s1")
-
-    files_after = set(V.read_manifest(table)["files"])
-    carried = files_before & files_after
-    assert carried, "surgical replace must carry untouched files by name"
-    assert files_after != files_before  # touched files were replaced
+    import shutil
 
     m1 = merge_mapping(empty_map, late)
     want = rewrite_triples(df, mapping_delta(empty_map, m1))
     keyset = lambda d: {(r.subj, r.rel, r.obj) for r in d.collect()}
-    assert keyset(V.read(spark, table)) == keyset(want)
+    # both arms: Arrow on the driver under the cap, Spark above it
+    shutil.copytree(table, table + "-spark")
+    for t, cap in ((table, None), (table + "-spark", 1)):
+        with cap_bytes(spark, cap):
+            apply_merges(spark, t, late, arts, versioned=True, batch_id="s1")
+        files_after = set(V.read_manifest(t)["files"])
+        carried = files_before & files_after
+        assert carried, "surgical replace must carry untouched files by name"
+        assert files_after != files_before  # touched files were replaced
+        assert keyset(V.read(spark, t)) == keyset(want)
 
 
 def test_surgical_path_keeps_untouched_sameas_and_self_loops(

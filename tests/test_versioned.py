@@ -4,10 +4,12 @@ the north star's Iceberg snapshot checkpoints."""
 
 from __future__ import annotations
 
+import json
 import os
 import pathlib
 
 import pytest
+from test_merge_arms import cap_bytes
 
 from netbase_spark.session import get_spark
 
@@ -69,12 +71,35 @@ def test_versioned_replay_idempotence_and_expiry(spark, tmp_path: pathlib.Path):
 
     # a crashed append (data files written, no commit) leaves orphans...
     V._write_batch_files(_df(spark, [("junk", 9, "junk")]), t)
-    # ...which expiry reclaims, along with old manifests
-    deleted = V.expire_versions(t, keep=1)
+    # ...which expiry reclaims past the grace period, along with old
+    # manifests
+    deleted = V.expire_versions(t, keep=1, staging_grace_secs=0.0)
     assert deleted  # the orphan (at least) went away
     assert V.read(spark, t).count() == n_rows  # CURRENT unaffected
     with pytest.raises(FileNotFoundError):
         V.read_manifest(t, 0)  # expired
+
+
+def test_expiry_spares_a_fresh_unreferenced_data_file(spark, tmp_path: pathlib.Path):
+    """A commit publishes its data files before its manifest lists them,
+    so a fresh unreferenced file may be an in-flight commit's: expiry
+    leaves it alone until it is older than the grace period."""
+    import time
+
+    from netbase_spark.plans import versioned as V
+
+    t = str(tmp_path / "triples")
+    V.create(_df(spark, [("a", 1, "x")]), t)
+    data = os.path.join(t, "data")
+    live = V.read_manifest(t)["files"][0]
+    os.link(os.path.join(data, live), os.path.join(data, "inflight-part-0.parquet"))
+    os.utime(os.path.join(data, "inflight-part-0.parquet"))
+    assert V.expire_versions(t) == []
+    assert "inflight-part-0.parquet" in os.listdir(data)
+    old = time.time() - 7200
+    os.utime(os.path.join(data, "inflight-part-0.parquet"), (old, old))
+    assert V.expire_versions(t) == ["inflight-part-0.parquet"]
+    assert sorted(os.listdir(data)) == sorted(V.read_manifest(t)["files"])
 
 
 def test_versioned_holds_construction_batches(spark, tmp_path: pathlib.Path):
@@ -167,7 +192,13 @@ def test_rewrite_data_files_binpacks_and_preserves_rows(spark, tmp_path):
     and the pre-compaction layout stays time-travel readable."""
     from netbase_spark.plans import versioned as V
 
-    t = str(tmp_path / "triples")
+    # both arms: Arrow on the driver under the cap, Spark above it
+    for arm, cap in (("arrow", None), ("spark", 1)):
+        with cap_bytes(spark, cap):
+            _binpack_case(spark, str(tmp_path / arm), V, arm)
+
+
+def _binpack_case(spark, t, V, arm):
     V.create(_df(spark, [("a", 1, "x"), ("b", 2, "y")]).repartition(2), t)
     for i in range(5):
         rows = [(f"s{i}-{j}", 1, f"o{j}") for j in range(9)]
@@ -189,6 +220,8 @@ def test_rewrite_data_files_binpacks_and_preserves_rows(spark, tmp_path):
     # replay idempotence like every commit
     assert V.rewrite_data_files(spark, t, batch_id="c1") == v + 1
     assert V.rewrite_data_files(spark, t, batch_id="c1") == v + 1
+    with open(os.path.join(t, V.METRICS_LOG)) as fh:
+        assert [json.loads(l)["path"] for l in fh] == [arm] * 2
 
 
 def test_rewrite_data_files_restores_surgical_locality(spark, tmp_path):
@@ -246,9 +279,16 @@ def test_rewrite_data_files_restores_surgical_locality(spark, tmp_path):
     V.create(batch("b0"), t2)
     for k in range(1, 4):
         V.append(batch(f"b{k}"), t2, batch_id=k)
-    V.rewrite_data_files(spark, t2, cluster_by=["subj"],
-                         target_file_bytes=6000, min_files=8)
-    total_compacted = len(V.read_manifest(t2)["files"])
-    assert total_compacted >= 6
-    touched_compacted, _ = surgical_touch_count(t2)
-    assert touched_compacted <= 2
+    # both arms of the compaction and the merge: Arrow on the driver
+    # under the cap, Spark above it
+    import shutil
+
+    shutil.copytree(t2, t2 + "-spark")
+    for table, cap in ((t2, None), (t2 + "-spark", 1)):
+        with cap_bytes(spark, cap):
+            V.rewrite_data_files(spark, table, cluster_by=["subj"],
+                                 target_file_bytes=6000, min_files=8)
+            total_compacted = len(V.read_manifest(table)["files"])
+            assert total_compacted >= 6
+            touched_compacted, _ = surgical_touch_count(table)
+            assert touched_compacted <= 2
