@@ -137,11 +137,13 @@ def merge_mapping_rows(
     fold back on the driver and return ``(new map rows, delta rows)`` —
     the delta being exactly :func:`mapping_delta`'s ``(node, rep)``
     rows, with no anti join.  None when either side is too large."""
-    old = driver_rows(mapping.select("node", "rep"), driver_threshold)
-    if old is None:
-        return None
+    # the edges first: a correction batch is the small side, and when
+    # it is over the threshold the map is never collected
     edges = driver_rows(new_edges.select("src", "dst"), driver_threshold)
     if edges is None:
+        return None
+    old = driver_rows(mapping.select("node", "rep"), driver_threshold)
+    if old is None:
         return None
     rep = dict(old)
     delta = _union_find(
@@ -192,6 +194,13 @@ def merge_mapping(
         return local_frame(
             mapping.sparkSession, got[0], mapping.select("node", "rep").schema
         )
+    return _merge_mapping_spark(mapping, new_edges, driver_threshold)
+
+
+def _merge_mapping_spark(
+    mapping: DataFrame, new_edges: DataFrame, driver_threshold: int = 200_000
+) -> DataFrame:
+    """The Spark arm of :func:`merge_mapping` (its steps 1-3 as joins)."""
     m_src = mapping.select(F.col("node").alias("src"), F.col("rep").alias("_sr"))
     m_dst = mapping.select(F.col("node").alias("dst"), F.col("rep").alias("_dr"))
     rep_edges = (

@@ -55,7 +55,9 @@ import shutil
 import time
 import uuid
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,6 +65,15 @@ from netbase_spark.plans.broadcast_gate import broadcast_cap_bytes, local_frame
 
 BOUND_COLS = ("subj", "obj")
 """Columns whose per-file min/max every manifest records."""
+
+ARROW_ROW_BYTES = 64
+"""Decoded bytes assumed per data-file row when gating the driver-side
+Arrow arms (:func:`decoded_bytes` against ``broadcast_cap_bytes``): a
+triple row decodes to about 50 bytes of Arrow buffers, so the default
+256 MiB cap admits 4M rows.  At that size, on 4 cores, the Arrow arms
+still beat the Spark ones (compaction 7.7 vs 15.1 s, a merge touching
+every file 3.8 vs 31.8 s) with the driver's Python peaking under 1 GB
+(BENCH/arrow_arm_crossover.json)."""
 
 METRICS_LOG = "_construct_metrics.jsonl"
 """Per-table JSON-lines log: one record per stream batch, merge and
@@ -321,6 +332,31 @@ def read_arrow(table: str, files: list[str], man: dict,
                          filters=filters, partitioning=None)
 
 
+def decoded_bytes(table: str, files: list[str]) -> int:
+    """Estimated Arrow (decoded) size of ``files``: their footers' row
+    counts times :data:`ARROW_ROW_BYTES`.  On-disk bytes are no measure
+    of it — a dictionary-encoded, compressed column decodes many times
+    larger."""
+    data_dir = os.path.join(table, "data")
+    return ARROW_ROW_BYTES * sum(
+        pq.read_metadata(os.path.join(data_dir, f)).num_rows for f in files
+    )
+
+
+def key_starts(tbl: pa.Table, keys: list[str]) -> np.ndarray:
+    """Per row of ``tbl``: whether its ``keys`` differ from the previous
+    row's (row 0: True) — vectorized, no Python value is built.  Null
+    equals null."""
+    n = tbl.num_rows
+    out = np.zeros(n, dtype=bool)
+    out[:1] = True
+    for c in keys if n > 1 else ():
+        a, b = tbl[c].slice(1), tbl[c].slice(0, n - 1)
+        ne = pc.coalesce(pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b)))
+        out[1:] |= ne.to_numpy(zero_copy_only=False)
+    return out
+
+
 def _split_at_keys(tbl: pa.Table, n: int, keys: list[str] | None) -> list[pa.Table]:
     """``tbl`` (sorted on ``keys``) as at most ``n`` slices of near-equal
     row count; each cut moves forward to the next change of key, so no
@@ -328,19 +364,11 @@ def _split_at_keys(tbl: pa.Table, n: int, keys: list[str] | None) -> list[pa.Tab
     rows = tbl.num_rows
     if n <= 1 or rows <= 1:
         return [tbl]
-    import bisect
-
-    if keys:
-        vals = list(zip(*(tbl[c].to_pylist() for c in keys)))
-        starts = [i for i in range(1, rows) if vals[i] != vals[i - 1]]
-    else:
-        starts = range(1, rows)
-    cuts = set()
-    for k in range(1, n):
-        j = bisect.bisect_left(starts, k * rows // n)
-        if j < len(starts):
-            cuts.add(starts[j])
-    edges = [0, *sorted(cuts), rows]
+    starts = np.flatnonzero(key_starts(tbl, keys)[1:]) + 1 if keys \
+        else np.arange(1, rows)
+    j = np.searchsorted(starts, [k * rows // n for k in range(1, n)])
+    cuts = np.unique(starts[j[j < len(starts)]])
+    edges = [0, *cuts.tolist(), rows]
     return [tbl.slice(a, b - a) for a, b in zip(edges, edges[1:])]
 
 
@@ -370,12 +398,12 @@ def rewrite_data_files(
       files compact into a few right-sized ones (small-file compaction,
       the other half of the Iceberg action).
 
-    Two arms, chosen by the live files' on-disk bytes against
+    Two arms, chosen by the live files' :func:`decoded_bytes` against
     ``broadcast_cap_bytes(spark)``: at most the cap, the rows are read,
     sorted and cut in Arrow on the driver (no Spark job); above it, a
     ``repartitionByRange`` + in-file sort on Spark.  Each run appends
-    one record (``path``, files, input bytes, cap, secs) to the table's
-    :data:`METRICS_LOG`.
+    one record (``path``, files, on-disk and decoded input bytes, cap,
+    secs) to the table's :data:`METRICS_LOG`.
 
     Runs as ONE writer (same discipline as every commit here); readers
     of older versions are unaffected, and ``expire_versions`` later
@@ -390,7 +418,8 @@ def rewrite_data_files(
     )
     n_files = max(min_files, -(-total_bytes // max(1, target_file_bytes)))
     cap = broadcast_cap_bytes(spark)
-    arrow = total_bytes <= cap
+    decoded = decoded_bytes(table, man["files"])
+    arrow = decoded <= cap
     if arrow:
         tbl = read_arrow(table, man["files"], man)
         if cluster_by:
@@ -415,6 +444,7 @@ def rewrite_data_files(
         "files_before": n_before,
         "files_after": len(read_manifest(table)["files"]),
         "input_bytes": total_bytes,
+        "decoded_bytes": decoded,
         "cap_bytes": cap,
         "secs": round(time.perf_counter() - t0, 3),
     })
@@ -463,8 +493,9 @@ def expire_versions(
     crashed appends included).  Versions ABOVE current — the branch left
     behind by a :func:`rollback` — survive by default (``keep_future``;
     a user may intend to roll FORWARD to them); pass
-    ``keep_future=False`` to reclaim that branch's disk.  An
-    unreferenced data file or a leftover ``_staging-*`` directory is
+    ``keep_future=False`` to reclaim that branch's disk.  A data file
+    that only expiring manifests list is deleted at once.  A data file
+    that NO manifest lists, or a leftover ``_staging-*`` directory, is
     removed only once its mtime is older than ``staging_grace_secs``: a
     fresh one is the normal state of an IN-FLIGHT commit (its files are
     published into data/ before its manifest lists them), and deleting
@@ -484,6 +515,12 @@ def expire_versions(
     live: set[str] = set()
     for v in survivors:
         live |= set(read_manifest(table, v)["files"])
+    # files a committed (now expiring) version listed are no in-flight
+    # commit's: they go at once, whatever their age
+    listed: set[str] = set()
+    for v in versions:
+        if v not in survivors:
+            listed |= set(read_manifest(table, v)["files"])
     now = time.time()
 
     def expired(path: str) -> bool:
@@ -496,7 +533,7 @@ def expire_versions(
     data_dir = os.path.join(table, "data")
     for f in os.listdir(data_dir):
         path = os.path.join(data_dir, f)
-        if f not in live and expired(path):
+        if f not in live and (f in listed or expired(path)):
             os.remove(path)
             deleted.append(f)
     for v in versions:

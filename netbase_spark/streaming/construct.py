@@ -24,9 +24,10 @@ idempotent merge into the canonical triple table — as a
   (``compact_every``) are delta-sized maintenance on the versioned
   table, and they choose their plan from the size of their input: a
   merge whose candidate files (known from the manifest's per-file
-  bounds) fit the broadcast cap, or a compaction whose live files do,
-  runs as a pyarrow rewrite on the driver; a larger one runs the Spark
-  plan.  Each run logs which arm ran to ``_construct_metrics.jsonl``.
+  bounds) decode to within the broadcast cap
+  (``versioned.decoded_bytes``), or a compaction whose live files do,
+  runs as a vectorized pyarrow rewrite on the driver; a larger one runs
+  the Spark plan.  Each run logs which arm ran to ``_construct_metrics.jsonl``.
 
 The doc side stays shuffle-free per batch on the broadcast path; the
 anti-join reads the current table with the delta keys broadcast
@@ -65,7 +66,7 @@ def apply_merges(
     1. canonical map: :func:`~netbase_spark.operators.canonicalize.
        merge_mapping` re-solves ONLY the touched components.  When the
        map and the edges fit its driver threshold this runs on the
-       driver and hands back the rep delta directly; otherwise the
+       driver and hands back the rep delta directly; otherwise its
        Spark arm's map is checkpointed and the delta (its
        ``mapping_delta``) collected once under the cap;
     2. the on-disk triple table: only rows touching re-rooted nodes are
@@ -92,8 +93,8 @@ def apply_merges(
     from pyspark.sql import functions as F
 
     from netbase_spark.operators.canonicalize import (
+        _merge_mapping_spark,
         mapping_delta,
-        merge_mapping,
         merge_mapping_rows,
         recanonicalize_delta,
         rewrite_triples,
@@ -115,7 +116,7 @@ def apply_merges(
         new_map = local_frame(spark, got[0], map_schema)
         rep_rows = got[1]
     else:
-        new_map = merge_mapping(old_map, merge_edges).localCheckpoint()
+        new_map = _merge_mapping_spark(old_map, merge_edges).localCheckpoint()
         # the rep delta is collected ONCE: its rows become the
         # LocalRelation every later step joins against and the
         # gazetteer remap.  Only a delta over the collect cap stays a
@@ -228,9 +229,9 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of=None):
     driver).  Two arms, the same rewrite:
 
     - **arrow** — ``rep_of`` (the delta as a dict) is on the driver and
-      the candidates' on-disk bytes are at most
-      ``broadcast_cap_bytes(spark)``: pyarrow reads, splits, remaps and
-      writes on the driver, no Spark job;
+      the candidates' ``versioned.decoded_bytes`` are at most
+      ``broadcast_cap_bytes(spark)``: pyarrow reads, splits, remaps,
+      dedups and writes on the driver, vectorized, with no Spark job;
     - **spark** — the scale twin: a column-pruned scan of the candidate
       files names the touched ones, ``recanonicalize_delta`` rewrites
       them and ``fresh_triples`` dedups against the kept files.
@@ -255,16 +256,20 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of=None):
         or _may_hold(bounds[f], "obj", nodes)
     ]
     in_bytes = sum(os.path.getsize(os.path.join(data_dir, f)) for f in cands)
+    decoded = V.decoded_bytes(table_dir, cands)
     cap = broadcast_cap_bytes(spark)
-    arrow = rep_of is not None and in_bytes <= cap
+    arrow = rep_of is not None and decoded <= cap
     if arrow:
         touched = _arrow_rewrite(table_dir, man, bounds, cands, rep_of, batch_id)
     else:
-        touched = _spark_rewrite(spark, table_dir, man, cands, changed, nodes,
+        # an isin predicate only up to ISIN_NODE_CAP literals, however
+        # the nodes reached the driver
+        isin = nodes if nodes is not None and len(nodes) <= ISIN_NODE_CAP else None
+        touched = _spark_rewrite(spark, table_dir, man, cands, changed, isin,
                                  batch_id)
     return {"path": "arrow" if arrow else "spark",
             "candidate_files": len(cands), "touched_files": touched,
-            "input_bytes": in_bytes, "cap_bytes": cap}
+            "input_bytes": in_bytes, "decoded_bytes": decoded, "cap_bytes": cap}
 
 
 def _arrow_rewrite(table_dir, man, bounds, cands, rep_of, batch_id) -> int:
@@ -307,28 +312,25 @@ def _arrow_rewrite(table_dir, man, bounds, cands, rep_of, batch_id) -> int:
     # columns, nulls first), none on a key the untouched rows or the
     # kept files already hold — read key-only, from the kept files
     # whose bounds can hold a rewritten key
-    rows = sorted(moved.to_pylist(),
-                  key=lambda r: [(v is not None, v) for v in r.values()])
-    subs = sorted({r["subj"] for r in rows})
-    objs = sorted({r["obj"] for r in rows})
-    keep = [f for f in man["files"] if f not in set(touched)]
-    key_files = [f for f in keep if _may_hold(bounds[f], "subj", subs)
-                 and _may_hold(bounds[f], "obj", objs)]
     key_cols = ["subj", "rel", "obj"]
-    held = set()
-    if subs:
-        for src in (untouched.select(key_cols),
-                    V.read_arrow(table_dir, key_files, man, key_cols,
-                                 filters=[("subj", "in", subs)])):
-            src = src.filter(pc.is_in(src["subj"], value_set=pa.array(subs, keys.type)))
-            held.update(zip(*(src[c].to_pylist() for c in key_cols)))
-    added = []
-    for r in rows:
-        k = (r["subj"], r["rel"], r["obj"])
-        if k not in held:
-            held.add(k)
-            added.append(r)
-    out = pa.concat_tables([untouched, pa.Table.from_pylist(added, schema=t.schema)])
+    moved = moved.sort_by(
+        [(c, "ascending") for c in key_cols + [c for c in moved.column_names
+                                               if c not in key_cols]],
+        null_placement="at_start")
+    moved = moved.filter(pa.array(V.key_starts(moved, key_cols)))
+    subs = pc.unique(moved["subj"])
+    sub_list = sorted(subs.to_pylist())
+    obj_list = sorted(pc.unique(moved["obj"]).to_pylist())
+    keep = [f for f in man["files"] if f not in set(touched)]
+    key_files = [f for f in keep if _may_hold(bounds[f], "subj", sub_list)
+                 and _may_hold(bounds[f], "obj", obj_list)]
+    held = pa.concat_tables([
+        untouched.select(key_cols),
+        V.read_arrow(table_dir, key_files, man, key_cols,
+                     filters=pc.field("subj").isin(subs)),
+    ])
+    added = moved.join(held, key_cols, join_type="left anti")
+    out = pa.concat_tables([untouched, added.select(t.column_names)])
     V.replace_files(out, table_dir, keep, batch_id=batch_id)
     return len(touched)
 

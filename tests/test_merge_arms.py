@@ -234,7 +234,8 @@ def test_merge_records_which_arm_ran(spark, tmp_path):
                  arts, versioned=True, batch_id="m1")
     [rec] = _metrics(path)
     assert set(rec) == {"batch_id", "merge", "path", "candidate_files",
-                        "touched_files", "input_bytes", "cap_bytes", "secs"}
+                        "touched_files", "input_bytes", "decoded_bytes",
+                        "cap_bytes", "secs"}
     assert rec["batch_id"] == "m1" and rec["path"] == "arrow"
     # the E5 file's recorded bounds exclude E0/E1: one candidate
     assert rec["candidate_files"] == 1 and rec["touched_files"] == 1
@@ -242,7 +243,46 @@ def test_merge_records_which_arm_ran(spark, tmp_path):
     assert rec["input_bytes"] == min(
         os.path.getsize(os.path.join(data, f))
         for f in V.read_manifest(path, 1)["files"])
-    assert rec["cap_bytes"] > rec["input_bytes"] and rec["secs"] >= 0
+    # the gate reads the footer: one row at ARROW_ROW_BYTES
+    assert rec["decoded_bytes"] == V.ARROW_ROW_BYTES
+    assert rec["cap_bytes"] > rec["decoded_bytes"] and rec["secs"] >= 0
+
+
+def test_spark_arm_caps_the_isin_list(spark, tmp_path, monkeypatch):
+    """A rep delta on the driver that is longer than ISIN_NODE_CAP goes
+    to the Spark arm as broadcast-marker joins, not as an isin list, and
+    gives the same table as the Arrow arm."""
+    from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
+    from netbase_spark.streaming import construct as C
+
+    files, old_map, edges = FIXED_CASES["chain"]
+    base = str(tmp_path / "base")
+    _table_from_files(base, files)
+    seen = []
+    spark_rewrite = C._spark_rewrite
+
+    def spy(*args):
+        seen.append(args[5])
+        return spark_rewrite(*args)
+
+    monkeypatch.setattr(C, "_spark_rewrite", spy)
+    monkeypatch.setattr(C, "ISIN_NODE_CAP", 1)
+    got = {}
+    for arm, cap in (("arrow", None), ("spark", 1)):
+        path = str(tmp_path / arm)
+        shutil.copytree(base, path)
+        arts = ConstructionArtifacts(
+            local_frame(spark, [], TRIPLE_DDL),
+            local_frame(spark, old_map, "node string, rep string"),
+            None, None, frozenset(),
+        )
+        with cap_bytes(spark, cap):
+            C.apply_merges(spark, path,
+                           local_frame(spark, edges, "src string, dst string"),
+                           arts, versioned=True, batch_id="m")
+        got[arm] = sorted(_rows(spark, path))
+    assert seen == [None]  # the marker-join branch
+    assert got["arrow"] == got["spark"]
 
 
 def test_driver_arms_run_no_spark_job(spark, tmp_path):

@@ -83,7 +83,9 @@ def test_versioned_replay_idempotence_and_expiry(spark, tmp_path: pathlib.Path):
 def test_expiry_spares_a_fresh_unreferenced_data_file(spark, tmp_path: pathlib.Path):
     """A commit publishes its data files before its manifest lists them,
     so a fresh unreferenced file may be an in-flight commit's: expiry
-    leaves it alone until it is older than the grace period."""
+    leaves it alone until it is older than the grace period.  A fresh
+    file that only an expiring version lists is no in-flight commit's
+    and goes at once."""
     import time
 
     from netbase_spark.plans import versioned as V
@@ -95,6 +97,10 @@ def test_expiry_spares_a_fresh_unreferenced_data_file(spark, tmp_path: pathlib.P
     os.link(os.path.join(data, live), os.path.join(data, "inflight-part-0.parquet"))
     os.utime(os.path.join(data, "inflight-part-0.parquet"))
     assert V.expire_versions(t) == []
+    assert "inflight-part-0.parquet" in os.listdir(data)
+    v0_files = V.read_manifest(t)["files"]
+    V.replace(_df(spark, [("b", 1, "y")]), t)
+    assert V.expire_versions(t, keep=1) == sorted(v0_files)
     assert "inflight-part-0.parquet" in os.listdir(data)
     old = time.time() - 7200
     os.utime(os.path.join(data, "inflight-part-0.parquet"), (old, old))
