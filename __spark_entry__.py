@@ -413,59 +413,49 @@ def _shingles(spark, sf_dir):
 
 # contract parameterization for the hot-shingle stopword cap
 # (sandbox-sized so the cap is EXERCISED at sf0.01 — max df there is 7;
-# the operator default is 2000, dedup.JACCARD_HOT_SHINGLE_CAP)
+# the operator default is 2000, dedup.DEDUP_KEY_CAP)
 JACCARD_SHINGLE_CAP = 6
 
 
 def q_ngram_jaccard(spark, sf_dir):
     """Near-dup detection: 3-token-shingle Jaccard >= 0.5 pairs, with
-    the hot-shingle stopword cap (dedup.cap_hot_shingles — the same
+    the hot-shingle stopword cap (dedup.cap_keys — the same
     quadratic-bucket guard the simhash path has; round-2 verdict #3).
+    Capped shingles leave BOTH the intersection and the set sizes, so
+    the score stays a true Jaccard over the capped shingle space.
     Dropped shingles are reported by the jaccard_hot_shingles query.
 
-    The shingle table is persisted: it feeds BOTH self-join sides plus
-    the per-doc size aggregate, and Catalyst does not reuse the
-    exchange across the three consumers (audited: 4 scans + 4 shingle
-    recomputations without it)."""
-    from netbase_spark.operators.dedup import cap_hot_shingles
+    The intersection is dedup.shared_key_pairs, and the per-doc size
+    aggregate reads the same cached shingle table inside its ``finish``
+    step: one shingle scan feeds both self-join sides and the sizes
+    (audited: 4 scans + 4 shingle recomputations without the cache)."""
+    from netbase_spark.operators.dedup import cap_keys, shared_key_pairs
 
-    sh = cap_hot_shingles(
-        _shingles(spark, sf_dir), JACCARD_SHINGLE_CAP
-    ).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("nb"))
-    out = (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("uni", F.col("na") + F.col("nb") - F.col("inter"))
-        .withColumn("jac_e4", F.expr("(10000 * inter) div uni"))
-        .where(F.col("jac_e4") >= 2000)
-        .select("a", "b", "inter", "uni", "jac_e4")
-    )
-    # materialize, then release the shingle cache (no session-lifetime
-    # cache accumulation across repeated passes — see dedup.
-    # _materialize_release)
-    from netbase_spark.operators.dedup import _materialize_release
+    def jaccard(pairs, sh):
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+        sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("na"))
+        sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("nb"))
+        return (
+            pairs.withColumnRenamed("shared", "inter")
+            .join(sa, "a")
+            .join(sb, "b")
+            .withColumn("uni", F.col("na") + F.col("nb") - F.col("inter"))
+            .withColumn("jac_e4", F.expr("(10000 * inter) div uni"))
+            .where(F.col("jac_e4") >= 2000)
+            .select("a", "b", "inter", "uni", "jac_e4")
+        )
 
-    return _materialize_release(out, sh)
+    sh = cap_keys(_shingles(spark, sf_dir), ["shingle"], JACCARD_SHINGLE_CAP)
+    return shared_key_pairs(sh, ["shingle"], finish=jaccard)
 
 
 def q_jaccard_hot_shingles(spark, sf_dir):
     """No-silent-caps audit for ngram_jaccard: the shingles the
-    stopword cap drops, with their document frequency
-    (dedup.hot_shingles, mirroring simhash_oversized_buckets)."""
-    from netbase_spark.operators.dedup import hot_shingles
+    stopword cap drops, with their document frequency (dedup.over_cap,
+    the audit of every capped dedup join)."""
+    from netbase_spark.operators.dedup import over_cap
 
-    return hot_shingles(_shingles(spark, sf_dir), JACCARD_SHINGLE_CAP)
+    return over_cap(_shingles(spark, sf_dir), ["shingle"], JACCARD_SHINGLE_CAP)
 
 
 # contract parameterization for MinHash (sandbox-sized; the operator
@@ -925,7 +915,7 @@ def oracle_sql() -> dict[str, str]:
             ), sh_all AS (
                 SELECT DISTINCT doc_id, shingle FROM sh0
             ), sh AS (
-                -- hot-shingle stopword cap (cap_hot_shingles mirror)
+                -- hot-shingle stopword cap (dedup.cap_keys mirror)
                 SELECT doc_id, shingle FROM (
                     SELECT doc_id, shingle,
                            count(*) OVER (PARTITION BY shingle) AS df

@@ -10,16 +10,18 @@ Scale notes: every operator here is a pure DataFrame plan plus
 Arrow-batched numpy kernels — the only shuffles are the per-doc
 aggregations and the bucket joins, both keyed well for AQE.  Hash
 functions are md5-derived so the DuckDB oracle can reproduce them
-bit-for-bit.  Banded self-joins are guarded by bucket-size caps
-(oversized buckets are hub/boilerplate artifacts; quadratic blowup
-inside one bucket is the classic LSH failure at 10^9 docs).
+bit-for-bit.  Banded self-joins run on one capped shared-key join
+(:func:`cap_keys`, :func:`over_cap`, :func:`shared_key_pairs`), whose
+key caps drop oversized buckets (hub/boilerplate artifacts; quadratic
+blowup inside one bucket is the classic LSH failure at 10^9 docs) and
+whose audit reports every drop.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from netbase_spark.plans.broadcast_gate import local_frame
@@ -29,7 +31,10 @@ from netbase_spark.plans.broadcast_gate import local_frame
 # without signed overflow, and two ints band-split cleanly.
 SIMHASH_BITS = 64
 SIMHASH_BAND_BITS = 16
-SIMHASH_BUCKET_CAP = 2000  # max docs per (band, value) bucket
+DEDUP_KEY_CAP = 2000
+"""Default max rows per key in every capped dedup join: docs per
+simhash/minhash (band, value) bucket, per shingle, per winnowing
+fingerprint."""
 
 
 def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -103,29 +108,75 @@ def _materialize_release(out, *cached):
     return out
 
 
-def simhash_candidates(
-    sigs: DataFrame,
-    band_bits: int = SIMHASH_BAND_BITS,
-    bucket_cap: int | None = SIMHASH_BUCKET_CAP,
-) -> DataFrame:
-    """Near-dup candidate pairs: docs sharing any of the 64/band_bits
-    bands of their simhash (banded LSH — avoids the quadratic all-pairs
-    hamming scan).
+# --- capped shared-key join -------------------------------------------------
+# Every banded/bucketed dedup operator is the same plan: key rows
+# (id, key...) -> drop keys held by more than a cap of rows -> self-join
+# on the key, a < b.  A key held by k rows costs k^2/2 join rows, and
+# such keys are boilerplate hubs whose pairs are near-worthless.
 
-    16-bit bands give 65,536 distinct values per band: at n docs the
-    expected bucket size is n/65,536 per band (vs n/256 for the 8-bit
-    bands this replaced, whose within-band self-join degenerated toward
-    (n/256)^2 pairs at large n).  ``bucket_cap`` drops buckets larger
-    than the cap before the self-join — oversized buckets are
-    boilerplate hubs whose pairs are near-worthless and whose join cost
-    is quadratic; dropping is logged via the returned plan's
-    ``dropped_buckets`` accessible through
-    :func:`simhash_oversized_buckets`.
-    """
+
+def cap_keys(rows: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """``rows`` minus every row whose key is held by more than ``cap``
+    rows; ``cap=None`` passes ``rows`` through unchanged.  A window
+    count, not groupBy+join: one shuffle on the key and NO re-scan of
+    the subtree that built the rows (the join form recomputed the whole
+    signature aggregation once per reference).  What it drops is
+    exactly :func:`over_cap`'s report."""
+    if cap is None:
+        return rows
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return rows.withColumn("_key_n", n).where(F.col("_key_n") <= cap).drop("_key_n")
+
+
+def over_cap(rows: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """(keys..., n): every key :func:`cap_keys` drops at ``cap``, with
+    the number of rows holding it — the no-silent-caps audit of every
+    capped dedup operator (empty when ``cap`` is None)."""
+    n = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+    return n.where(F.col("n") > cap if cap is not None else F.lit(False))
+
+
+def _pair_ids(pairs: DataFrame, rows: DataFrame) -> DataFrame:
+    return pairs.select("a", "b")
+
+
+def shared_key_pairs(
+    rows: DataFrame, keys: list[str], id_col: str = "doc_id", finish=None
+) -> DataFrame:
+    """(a, b, shared): every pair of ids a < b whose rows hold a common
+    key, with the number of key matches between them (the
+    set-intersection self-join).  ``finish(pairs, rows)`` shapes the
+    result while ``rows`` is still cached — a projection, a threshold,
+    or a join against another aggregate of the same rows — and the
+    result comes back materialized with that cache released
+    (:func:`_materialize_release`)."""
+    # persist: the self-join reads the rows twice; columnar cache keeps
+    # codegen output (an RDD localCheckpoint here measured ~8x slower —
+    # the DataFrame->RDD conversion drops whole-stage codegen and
+    # columnar storage)
+    rows = rows.select(id_col, *keys).persist()
+    l = rows.select(F.col(id_col).alias("a"), *keys)
+    r = rows.select(F.col(id_col).alias("b"), *keys)
+    pairs = (
+        l.join(r, keys)
+        .where(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    out = finish(pairs, rows) if finish else pairs
+    return _materialize_release(out, rows)
+
+
+def simhash_bands(
+    sigs: DataFrame, band_bits: int = SIMHASH_BAND_BITS
+) -> DataFrame:
+    """(doc_id, band, bv): each 64-bit simhash split into 64/band_bits
+    band values — the key rows of :func:`simhash_candidates`, and of its
+    drop audit ``over_cap(simhash_bands(sigs), ["band", "bv"], cap)``."""
     half_bits = SIMHASH_BITS // 2
     bands_per_half = half_bits // band_bits
     mask = (1 << band_bits) - 1
-    banded = sigs.select(
+    return sigs.select(
         "doc_id",
         F.explode(
             F.array(
@@ -142,68 +193,28 @@ def simhash_candidates(
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bv")
-    if bucket_cap:
-        # window count, not groupBy+join: one shuffle on (band, bv) and
-        # NO re-scan of the signature subtree (the join form recomputed
-        # the whole simhash aggregation once per reference)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bv")
-        banded = (
-            banded.withColumn("_bucket_n", F.count(F.lit(1)).over(w))
-            .where(F.col("_bucket_n") <= bucket_cap)
-            .drop("_bucket_n")
-        )
-    # persist: the self-join reads this subtree twice; columnar cache
-    # keeps codegen output (an RDD localCheckpoint here measured ~8x
-    # slower — the DataFrame->RDD conversion drops whole-stage codegen
-    # and columnar storage).  The cache stays registered for the
-    # session; batch callers re-running many dedup passes can
-    # spark.catalog.clearCache() between them.
-    banded = banded.persist()
-    l = banded.select(F.col("doc_id").alias("a"), "band", "bv")
-    r = banded.select(F.col("doc_id").alias("b"), "band", "bv")
-    pairs = (
-        l.join(r, ["band", "bv"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    return _materialize_release(pairs, banded)
 
 
-def simhash_oversized_buckets(
+def simhash_candidates(
     sigs: DataFrame,
     band_bits: int = SIMHASH_BAND_BITS,
-    bucket_cap: int = SIMHASH_BUCKET_CAP,
+    bucket_cap: int | None = DEDUP_KEY_CAP,
 ) -> DataFrame:
-    """(band, bv, n) for buckets the candidate join dropped — the
-    no-silent-caps audit for :func:`simhash_candidates`."""
-    half_bits = SIMHASH_BITS // 2
-    bands_per_half = half_bits // band_bits
-    mask = (1 << band_bits) - 1
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(h * bands_per_half + b).alias("band"),
-                        F.shiftright(col, b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bv"),
-                    )
-                    for h, col in enumerate(("simhash_lo", "simhash_hi"))
-                    for b in range(bands_per_half)
-                ]
-            )
-        ).alias("bb"),
-    ).select("bb.band", "bb.bv")
-    return (
-        banded.groupBy("band", "bv")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > bucket_cap)
-    )
+    """Near-dup candidate pairs: docs sharing any of the 64/band_bits
+    bands of their simhash (banded LSH — avoids the quadratic all-pairs
+    hamming scan).
+
+    16-bit bands give 65,536 distinct values per band: at n docs the
+    expected bucket size is n/65,536 per band (vs n/256 for the 8-bit
+    bands this replaced, whose within-band self-join degenerated toward
+    (n/256)^2 pairs at large n).  ``bucket_cap`` drops buckets larger
+    than the cap before the self-join (:func:`cap_keys`; the dropped
+    buckets are ``over_cap(simhash_bands(sigs, band_bits), ["band",
+    "bv"], bucket_cap)``).
+    """
+    keys = ["band", "bv"]
+    rows = cap_keys(simhash_bands(sigs, band_bits), keys, bucket_cap)
+    return shared_key_pairs(rows, keys, finish=_pair_ids)
 
 
 # --- MinHash + LSH ----------------------------------------------------------
@@ -240,24 +251,15 @@ def minhash_signatures(
     )
 
 
-def minhash_lsh_pairs(
-    sigs: DataFrame,
-    bands: int = 16,
-    rows_per_band: int = 8,
-    bucket_cap: int | None = SIMHASH_BUCKET_CAP,
+def minhash_bands(
+    sigs: DataFrame, bands: int = 16, rows_per_band: int = 8
 ) -> DataFrame:
-    """Candidate pairs sharing any band of their MinHash signature.
-
-    Parameterized (bands x rows_per_band must cover the signature):
-    at 10^9 docs use >= 16 bands x 8 rows (128 hashes) — the round-1
-    toy 2x2 parameterization floods candidates at scale.  Bands hash to
-    one md5 band key (not a multi-column equi-join) so the shuffle key
-    is a single string; ``bucket_cap`` guards hot bands exactly like
-    :func:`simhash_candidates`.
-    """
-    # ONE pass over sigs: explode an array of (band, bv) structs — a
-    # per-band union would re-run the whole signature aggregation once
-    # per band
+    """(doc_id, band, bv): each MinHash signature cut into ``bands``
+    bands of ``rows_per_band`` slots, a band's value hashed to one md5
+    key — the key rows of :func:`minhash_lsh_pairs` and of its drop
+    audit ``over_cap(minhash_bands(...), ["band", "bv"], cap)``.  ONE
+    pass over sigs: an exploded array of (band, bv) structs (a per-band
+    union would re-run the whole signature aggregation once per band)."""
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -273,75 +275,29 @@ def minhash_lsh_pairs(
         )
         for b in range(bands)
     ]
-    band_rows = sigs.select(
+    return sigs.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bb")
     ).select("doc_id", "bb.band", "bb.bv")
-    if bucket_cap:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bv")
-        band_rows = (
-            band_rows.withColumn("_bucket_n", F.count(F.lit(1)).over(w))
-            .where(F.col("_bucket_n") <= bucket_cap)
-            .drop("_bucket_n")
-        )
-    band_rows = band_rows.persist()  # reused by self-join (see simhash note)
-    l = band_rows.select(F.col("doc_id").alias("a"), "band", "bv")
-    r = band_rows.select(F.col("doc_id").alias("b"), "band", "bv")
-    pairs = (
-        l.join(r, ["band", "bv"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    return _materialize_release(pairs, band_rows)
 
 
-JACCARD_HOT_SHINGLE_CAP = 2000  # max docs per shingle in the self-join
-
-
-def cap_hot_shingles(
-    shingles: DataFrame,
-    cap: int | None = JACCARD_HOT_SHINGLE_CAP,
-    shingle_col: str = "shingle",
+def minhash_lsh_pairs(
+    sigs: DataFrame,
+    bands: int = 16,
+    rows_per_band: int = 8,
+    bucket_cap: int | None = DEDUP_KEY_CAP,
 ) -> DataFrame:
-    """Stopword-drop shingles whose document frequency exceeds ``cap``
-    before a shingle self-join (the n-gram-Jaccard candidate path).
+    """Candidate pairs sharing any band of their MinHash signature.
 
-    One viral sentence shared by k documents makes its shingles produce
-    k^2/2 join rows — the same quadratic degeneration the simhash
-    bucket cap guards against (``SIMHASH_BUCKET_CAP``,
-    :func:`simhash_candidates`), fixed the same way: a window count on
-    the shingle key (ONE shuffle, no re-scan of the shingle subtree)
-    and a hard cap.  Capped shingles are treated as stopwords — removed
-    from BOTH the intersection join and the per-doc set sizes — so the
-    score stays a true Jaccard over the capped shingle space.  Dropped
-    shingles are reportable via :func:`hot_shingles` (no silent caps).
+    Parameterized (bands x rows_per_band must cover the signature):
+    at 10^9 docs use >= 16 bands x 8 rows (128 hashes) — the round-1
+    toy 2x2 parameterization floods candidates at scale.  Bands hash to
+    one md5 band key (not a multi-column equi-join) so the shuffle key
+    is a single string; ``bucket_cap`` guards hot bands exactly like
+    :func:`simhash_candidates`.
     """
-    if not cap:
-        return shingles
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(shingle_col)
-    return (
-        shingles.withColumn("_df", F.count(F.lit(1)).over(w))
-        .where(F.col("_df") <= cap)
-        .drop("_df")
-    )
-
-
-def hot_shingles(
-    shingles: DataFrame,
-    cap: int = JACCARD_HOT_SHINGLE_CAP,
-    shingle_col: str = "shingle",
-) -> DataFrame:
-    """(shingle, n) for shingles :func:`cap_hot_shingles` drops — the
-    no-silent-caps audit, mirroring :func:`simhash_oversized_buckets`."""
-    return (
-        shingles.groupBy(shingle_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > cap)
-    )
+    keys = ["band", "bv"]
+    rows = cap_keys(minhash_bands(sigs, bands, rows_per_band), keys, bucket_cap)
+    return shared_key_pairs(rows, keys, finish=_pair_ids)
 
 
 def near_dup_clusters(
@@ -420,6 +376,22 @@ def near_dup_clusters(
 # --- embedding cosine -------------------------------------------------------
 
 
+def _sim_e4(a_mat, b_mat):
+    """floor(cosine * 10^4) as int64 of every row of ``a_mat`` against
+    every row of ``b_mat`` (or against the one vector ``b_mat``):
+    floor(dot / (na * nb) * 10^4), a zero vector's norm read as 1 so it
+    scores 0, not NaN.  The one scoring kernel of the float paths — the
+    floor sits on exact boundaries, so every path keeps this order."""
+    import numpy as np
+
+    na = np.sqrt((a_mat * a_mat).sum(axis=1))
+    nb = np.sqrt((b_mat * b_mat).sum(axis=-1))
+    na[na == 0] = 1.0
+    nb = np.where(nb == 0, 1.0, nb)
+    sims = (a_mat @ b_mat.T) / np.multiply.outer(na, nb)
+    return np.floor(sims * 10000).astype(np.int64)
+
+
 def cosine_neardup_pairs(
     emb: DataFrame,
     threshold_e4: int = 9500,
@@ -457,16 +429,13 @@ def cosine_neardup_pairs(
 
     def make_block(bc):
         def block(batches):
-            b_ids, b_mat, b_norms = bc.value
+            b_ids, b_mat = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 a_ids = pdf[id_col].to_numpy()
                 a_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-                a_norms[a_norms == 0] = 1.0  # zero vectors: sim 0, not NaN
-                sims = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
-                e4 = np.floor(sims * 10000).astype(np.int64)
+                e4 = _sim_e4(a_mat, b_mat)
                 keep = (e4 >= thr) & (a_ids[:, None] < b_ids[None, :])
                 ai, bj = np.nonzero(keep)
                 yield pd.DataFrame(
@@ -489,9 +458,7 @@ def cosine_neardup_pairs(
             continue
         b_ids = np.array([r[0] for r in rows])
         b_mat = np.array([r[1] for r in rows], dtype=np.float64)
-        b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-        b_norms[b_norms == 0] = 1.0  # zero vectors: sim 0, not NaN
-        bc = spark.sparkContext.broadcast((b_ids, b_mat, b_norms))
+        bc = spark.sparkContext.broadcast((b_ids, b_mat))
         part = left.mapInPandas(
             make_block(bc), schema=f"a {id_t}, b {id_t}, sim_e4 long"
         )
@@ -512,22 +479,12 @@ def cosine_neardup_pairs(
 
 
 def _plane_weights(n_planes: int, dims: int):
-    """(dims x n_planes) hyperplane weight matrix: weight of plane j at
-    dimension i is md5-derived in [-0.5, 0.5) — deterministic, no RNG,
-    bit-reproducible in SQL.  Computed ONCE here (driver, numpy) — the
-    round-1 version re-derived every weight per ROW via interpreted
-    higher-order md5 expressions, O(n*d*planes) md5 calls and the
-    slowest query in the bench."""
-    import hashlib
-
-    import numpy as np
-
-    w = np.empty((dims, n_planes), dtype=np.float64)
-    for j in range(n_planes):
-        for i in range(dims):
-            h = hashlib.md5(f"{j}:{i}".encode()).hexdigest()[:6]
-            w[i, j] = int(h, 16) / float(1 << 24) - 0.5
-    return w
+    """(dims x n_planes) float hyperplane weights: the md5-derived
+    integer weights of :func:`_plane_weights_int` over 2^24, so weight
+    (j, i) is md5("j:i")'s first 24 bits / 2^24 - 0.5 in [-0.5, 0.5) —
+    bit-exact (a 24-bit integer over a power of two), deterministic and
+    reproducible in SQL."""
+    return _plane_weights_int(n_planes, dims) / float(1 << 24)
 
 
 # embedding fixed-point scale for the exact (bit-deterministic) paths:
@@ -537,11 +494,15 @@ EMB_FIXED_SCALE = 10_000
 
 
 def _plane_weights_int(n_planes: int, dims: int):
-    """Integer twin of :func:`_plane_weights`: the raw md5 24-bit value
-    minus 2^23, so sign(x . w) == sign(x_int . w_int) when x_int is any
-    positive rescale of x — the weight denominator 2^24 is positive and
-    cancels.  Used by the ``exact`` SRP mode: the bucket bit becomes a
-    pure int64 comparison with NO float summation anywhere."""
+    """(dims x n_planes) integer hyperplane weights: the raw md5 24-bit
+    value minus 2^23, so sign(x . w) == sign(x_int . w_int) when x_int
+    is any positive rescale of x — the float weights' denominator 2^24
+    is positive and cancels.  Used by the ``exact`` SRP mode: the bucket
+    bit becomes a pure int64 comparison with NO float summation
+    anywhere.  Computed ONCE here (driver, numpy) — the round-1 version
+    re-derived every weight per ROW via interpreted higher-order md5
+    expressions, O(n*d*planes) md5 calls and the slowest query in the
+    bench."""
     import hashlib
 
     import numpy as np
@@ -642,15 +603,8 @@ def ann_topk_bucketed(
                 continue
             mat = np.array(list(pdf["embedding"]), dtype=np.float64)
             qv = np.array(pdf["qv"].iloc[0], dtype=np.float64)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            norms[norms == 0] = 1.0  # zero vectors: sim 0, not NaN
-            qn = np.sqrt((qv * qv).sum()) or 1.0
-            sims = (mat @ qv) / (norms * qn)
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "sim_e4": np.floor(sims * 10000).astype(np.int64),
-                }
+                {"vec_id": pdf["vec_id"], "sim_e4": _sim_e4(mat, qv)}
             )
 
     id_t = emb.schema["vec_id"].dataType.simpleString()
@@ -761,10 +715,15 @@ def ivf_topk(
     partitioned by cell turns the probe into partition pruning."""
     import numpy as np
 
+    id_t = emb.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_t}, sim_e4 long"
+    qrow = emb.where(F.col(id_col) == query_id).select(vec_col).first()
+    if qrow is None:
+        # absent query id, or empty input: no neighbours
+        return local_frame(emb.sparkSession, [], out_schema)
+    qv = np.array(qrow[0], dtype=np.float64)
     cent = ivf_centroids(emb, n_cells, iters, id_col, vec_col)
     assigned = ivf_assign(emb, cent, id_col, vec_col).persist()
-    qrow = emb.where(F.col(id_col) == query_id).select(vec_col).first()
-    qv = np.array(qrow[0], dtype=np.float64)
     cn = np.sqrt((cent * cent).sum(axis=1))
     cn[cn == 0] = 1.0
     sims = (cent / cn[:, None]) @ (qv / max(np.sqrt((qv * qv).sum()), 1e-12))
@@ -782,23 +741,13 @@ def ivf_topk(
         import pandas as pd
 
         q = qb.value
-        qn = np.sqrt((q * q).sum())
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            s = (mat @ q) / (np.sqrt((mat * mat).sum(axis=1)) * qn)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sim_e4": np.floor(s * 10000).astype(np.int64),
-                }
-            )
+            yield pd.DataFrame({id_col: pdf[id_col], "sim_e4": _sim_e4(mat, q)})
 
-    id_t = emb.schema[id_col].dataType.simpleString()
-    scored = cands.select(id_col, vec_col).mapInPandas(
-        score, schema=f"{id_col} {id_t}, sim_e4 long"
-    )
+    scored = cands.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
     topk = scored.orderBy(
         F.col("sim_e4").desc(), F.col(id_col).asc()
     ).limit(k)
@@ -825,9 +774,11 @@ def cosine_neardup_bucketed(
     the bucket id, then a per-bucket pairwise numpy kernel inside
     applyInPandas (each bucket's similarity block is one BLAS gemm).
     ``bucket_cap`` drops buckets larger than the cap before the
-    quadratic step, same discipline as simhash_candidates — oversized
-    buckets are degenerate hubs (e.g. the all-zeros region) whose
-    within-bucket join cost is quadratic.  Each vector has exactly one
+    quadratic step (:func:`cap_keys`, as in simhash_candidates; the
+    dropped buckets are ``over_cap(ann_lsh_buckets(emb, n_planes, ...,
+    exact=exact), ["bucket"], bucket_cap)``) — oversized buckets are
+    degenerate hubs (e.g. the all-zeros region) whose within-bucket
+    join cost is quadratic.  Each vector has exactly one
     bucket (single SRP code, not banded), so no cross-bucket pair dedup
     is needed.
 
@@ -852,15 +803,7 @@ def cosine_neardup_bucketed(
         emb, n_planes, id_col=id_col, vec_col=vec_col, keep_vec=True,
         exact=exact,
     )
-    if bucket_cap is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("bucket")
-        with_b = (
-            with_b.withColumn("bsz", F.count("*").over(w))
-            .where(F.col("bsz") <= bucket_cap)
-            .drop("bsz")
-        )
+    with_b = cap_keys(with_b, ["bucket"], bucket_cap)
     thr = int(threshold_e4)
     if exact and thr < 1:
         raise ValueError(
@@ -906,10 +849,7 @@ def cosine_neardup_bucketed(
                 {"a": out_a, "b": out_b,
                  "sim_e4": pd.Series(out_s, dtype="int64")}
             )
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        norms[norms == 0] = 1.0  # zero vectors: sim 0, not NaN
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        e4 = np.floor(sims * 10000).astype(np.int64)
+        e4 = _sim_e4(mat, mat)
         keep = (e4 >= thr) & (ids[:, None] < ids[None, :])
         ai, bj = np.nonzero(keep)
         return pd.DataFrame({"a": ids[ai], "b": ids[bj], "sim_e4": e4[ai, bj]})

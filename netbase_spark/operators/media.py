@@ -355,13 +355,10 @@ def media_neardup_pairs(
     Returns (a, b, hamming); feed into ``near_dup_clusters`` for
     survivor selection.  Scale shape is the simhash path's: one
     band-keyed shuffle with the hot-bucket cap, no all-pairs join."""
-    from netbase_spark.operators.dedup import (
-        SIMHASH_BUCKET_CAP,
-        simhash_candidates,
-    )
+    from netbase_spark.operators.dedup import DEDUP_KEY_CAP, simhash_candidates
 
     if bucket_cap is None:
-        bucket_cap = SIMHASH_BUCKET_CAP
+        bucket_cap = DEDUP_KEY_CAP
     # persist: three consumers (banding + both hamming joins) would
     # otherwise re-run the upstream decode UDF once each
     sigs = media_phash(features, id_col=id_col).persist()

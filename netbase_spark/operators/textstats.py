@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from netbase_spark.operators.dedup import DEDUP_KEY_CAP, cap_keys, shared_key_pairs
+
 EN_STOPWORDS = ("the", "a", "and", "is", "of")
 DE_STOPWORDS = ("der", "die", "das", "und", "ist")
 QUALITY_STOPWORDS = ("the", "a", "and", "of", "value")
@@ -131,7 +133,7 @@ def winnow_fingerprints(
 
 
 def winnow_overlap_pairs(
-    fps: DataFrame, min_shared: int = 2, fp_cap: int | None = 2000
+    fps: DataFrame, min_shared: int = 2, fp_cap: int | None = DEDUP_KEY_CAP
 ) -> DataFrame:
     """Near-dup candidate pairs from shared winnowing fingerprints:
     docs sharing >= ``min_shared`` fingerprints, with the shared count.
@@ -142,36 +144,14 @@ def winnow_overlap_pairs(
     not: boilerplate (license headers, navigation chrome) puts one
     fingerprint in millions of docs, and the self-join is quadratic in
     that frequency.  ``fp_cap`` drops fingerprints shared by more than
-    that many docs — same hot-bucket guard as
-    :func:`netbase_spark.operators.dedup.simhash_candidates`; audit
-    what was dropped with :func:`winnow_hot_fps` (no silent caps).
+    that many docs — the hot-key guard of every dedup self-join
+    (:func:`~netbase_spark.operators.dedup.cap_keys`); audit what was
+    dropped with ``over_cap(fps, ["fp"], fp_cap)`` (no silent caps).
     Returns (a, b, shared) with a < b."""
-    if fp_cap is not None:
-        w = Window.partitionBy("fp")
-        fps = (
-            fps.withColumn("_fp_n", F.count(F.lit(1)).over(w))
-            .where(F.col("_fp_n") <= fp_cap)
-            .drop("_fp_n")
-        )
-    l = fps.select(F.col("doc_id").alias("a"), "fp")
-    r = fps.select(F.col("doc_id").alias("b"), "fp")
-    return (
-        l.join(r, "fp")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
-    )
-
-
-def winnow_hot_fps(fps: DataFrame, fp_cap: int = 2000) -> DataFrame:
-    """(fp, n) for fingerprints the pair join's ``fp_cap`` dropped —
-    the boilerplate audit trail (each is a substring shared by > cap
-    docs, worth a rule in :func:`clean_corpus`, not a dedup edge)."""
-    return (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > fp_cap)
+    return shared_key_pairs(
+        cap_keys(fps, ["fp"], fp_cap),
+        ["fp"],
+        finish=lambda pairs, _: pairs.where(F.col("shared") >= min_shared),
     )
 
 
@@ -341,7 +321,7 @@ def decontamination_pairs(
     corpus_fps: DataFrame,
     eval_fps: DataFrame,
     min_shared: int = 1,
-    fp_cap: int | None = 2000,
+    fp_cap: int | None = DEDUP_KEY_CAP,
 ) -> DataFrame:
     """Benchmark decontamination: (corpus doc, eval doc) pairs sharing
     >= ``min_shared`` winnowing fingerprints — training documents that
@@ -352,18 +332,14 @@ def decontamination_pairs(
     two-table form of :func:`winnow_overlap_pairs`): the eval side is
     benchmark-sized (broadcastable), so the corpus side joins map-side
     and never self-joins.  ``fp_cap`` drops boilerplate fingerprints by
-    CORPUS frequency first — a license header shared by millions of
-    training docs is noise, not contamination.
+    CORPUS frequency first (:func:`~netbase_spark.operators.dedup.
+    cap_keys`; audit: ``over_cap(corpus_fps, ["fp"], fp_cap)``) — a
+    license header shared by millions of training docs is noise, not
+    contamination.
 
     Returns (doc_id, eval_id, shared).
     """
-    if fp_cap is not None:
-        w = Window.partitionBy("fp")
-        corpus_fps = (
-            corpus_fps.withColumn("_n", F.count(F.lit(1)).over(w))
-            .where(F.col("_n") <= fp_cap)
-            .drop("_n")
-        )
+    corpus_fps = cap_keys(corpus_fps, ["fp"], fp_cap)
     ev = F.broadcast(
         eval_fps.select(F.col("doc_id").alias("eval_id"), "fp")
     )

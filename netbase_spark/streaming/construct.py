@@ -40,6 +40,7 @@ layout knob lives in plans/table_io.write_triples.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -161,7 +162,11 @@ def apply_merges(
         updated = recanonicalize_delta(existing, changed)
         # materialize before overwriting the directory being read
         updated = updated.localCheckpoint()
+        # the overwrite deletes the whole directory, metrics log included
+        log = Path(table_dir, V.METRICS_LOG)
+        kept = log.read_text() if log.exists() else ""
         updated.write.mode("overwrite").parquet(table_dir)
+        log.write_text(kept)
     V.log_metrics(table_dir, {"batch_id": batch_id, "merge": True, **rec,
                               "secs": round(time.perf_counter() - t0, 3)})
 

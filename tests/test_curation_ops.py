@@ -3,7 +3,9 @@ training-data curation operators (no reference twin; north-rule
 additions alongside dedup/quality/lang-id)."""
 
 import math
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from netbase_spark.operators.textstats import (
@@ -299,6 +301,7 @@ def test_dedup_ops_leave_no_session_cache(spark):
         simhash,
         simhash_candidates,
     )
+    from netbase_spark.operators.textstats import winnow_overlap_pairs
 
     shingles = spark.createDataFrame(
         [(f"d{i:02d}", f"tok{j}") for i in range(30)
@@ -322,3 +325,108 @@ def test_dedup_ops_leave_no_session_cache(spark):
     sc_pairs = simhash_candidates(simhash(texts))
     sc_pairs.count()
     assert cm.isEmpty(), "simhash_candidates leaked a session cache"
+
+    fps = shingles.select("doc_id", F.col("shingle").alias("fp"))
+    winnow_overlap_pairs(fps, min_shared=1).count()
+    assert cm.isEmpty(), "winnow_overlap_pairs leaked a session cache"
+
+
+def _simhash_band_rows(spark):
+    from netbase_spark.operators.dedup import simhash, simhash_bands
+
+    docs = spark.createDataFrame(
+        [(i, "boilerplate header the same on every single page") for i in range(6)]
+        + [(100 + i, f"rare document {i} about turbine bearings") for i in range(3)],
+        "doc_id long, text string",
+    )
+    return simhash_bands(simhash(docs)), ["band", "bv"], 3
+
+
+def _minhash_band_rows(spark):
+    from netbase_spark.operators.dedup import minhash_bands, minhash_signatures
+
+    sh = spark.createDataFrame(
+        [(d, s) for d in range(5) for s in ("a b c", "b c d", "c d e")]
+        + [(9, "p q r"), (10, "x y z")],
+        "doc_id long, shingle string",
+    )
+    return minhash_bands(minhash_signatures(sh, n_hashes=8), 4, 2), ["band", "bv"], 3
+
+
+def _shingle_rows(spark):
+    rows = spark.createDataFrame(
+        [(i, "viral quote here") for i in range(5)]
+        + [(i, f"rare {i}") for i in range(5)] + [(7, "rare 1")],
+        "doc_id long, shingle string",
+    )
+    return rows, ["shingle"], 3
+
+
+def _winnow_rows(spark):
+    from netbase_spark.operators.textstats import winnow_fingerprints
+
+    boiler = "standard license header tokens apply to this file"
+    docs = spark.createDataFrame(
+        [(i, f"{boiler} unique tail {i} x {i * 7}") for i in range(1, 6)],
+        "doc_id long, text string",
+    )
+    return winnow_fingerprints(docs, k=4, w=5), ["fp"], 4
+
+
+def _srp_bucket_rows(spark):
+    from netbase_spark.operators.dedup import ann_lsh_buckets
+
+    emb = spark.createDataFrame(
+        [(i, [1.0, 0.0, 0.5]) for i in range(6)]
+        + [(10 + i, [math.sin(i), math.cos(i), -0.3 * i]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    return ann_lsh_buckets(emb, 4), ["bucket"], 5
+
+
+@pytest.mark.parametrize(
+    "key_rows",
+    [_simhash_band_rows, _minhash_band_rows, _shingle_rows, _winnow_rows,
+     _srp_bucket_rows],
+    ids=["simhash_bands", "minhash_bands", "shingles", "winnow_fps",
+         "srp_buckets"],
+)
+def test_cap_keys_drops_exactly_what_over_cap_reports(spark, key_rows):
+    """For every capped key space, the rows cap_keys removes are exactly
+    the rows whose key over_cap reports, and each report counts them."""
+    from netbase_spark.operators.dedup import cap_keys, over_cap
+
+    rows, keys, cap = key_rows(spark)
+    key = lambda r: tuple(r[k] for k in keys)
+    every = Counter(rows.collect())
+    kept = Counter(cap_keys(rows, keys, cap).collect())
+    reported = {key(r): r.n for r in over_cap(rows, keys, cap).collect()}
+    assert not kept - every
+    removed = every - kept
+    assert removed, "the cap must drop something here"
+    assert removed == Counter({r: c for r, c in every.items() if key(r) in reported})
+    for k, n in reported.items():
+        assert n == sum(c for r, c in every.items() if key(r) == k) > cap
+
+
+def test_zero_vectors_score_zero_in_topk(spark):
+    """A zero vector, as candidate or as query, scores sim_e4 = 0 (not
+    the int64 floor of NaN) in both top-k paths; ivf_topk answers an
+    absent query id with no rows."""
+    from netbase_spark.operators.dedup import ann_topk_bucketed, ivf_topk
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.9, 0.1]), (4, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    ivf = lambda q: {
+        r.vec_id: r.sim_e4
+        for r in ivf_topk(emb, q, k=5, n_cells=1, nprobe=1).collect()
+    }
+    got = ivf(1)
+    assert got[2] == 0 and got[4] == 0 and got[3] > 0
+    assert ivf(2) == {1: 0, 3: 0, 4: 0}
+    ann = {r.vec_id: r.sim_e4 for r in ann_topk_bucketed(emb, 2, k=5).collect()}
+    assert 4 in ann and set(ann.values()) == {0}
+    # an absent query id has no neighbours
+    assert ivf_topk(emb, 99, k=5, n_cells=1, nprobe=1).count() == 0

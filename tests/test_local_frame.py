@@ -178,6 +178,42 @@ def _lsh(keep_vec):
     return run
 
 
+def _ivf(df):
+    from netbase_spark.operators.dedup import ivf_topk
+
+    return ivf_topk(df, 1, k=2, n_cells=2, nprobe=2, id_col="id", vec_col="v")
+
+
+def _bucketed(df):
+    from netbase_spark.operators.dedup import cosine_neardup_bucketed
+
+    return cosine_neardup_bucketed(df, 0, n_planes=2, id_col="id", vec_col="v")
+
+
+def _simhash_pairs(df):
+    from netbase_spark.operators.dedup import simhash_candidates
+
+    return simhash_candidates(df)
+
+
+def _minhash_pairs(df):
+    from netbase_spark.operators.dedup import minhash_lsh_pairs
+
+    return minhash_lsh_pairs(df, bands=2, rows_per_band=2)
+
+
+def _winnow_pairs(df):
+    from netbase_spark.operators.textstats import winnow_overlap_pairs
+
+    return winnow_overlap_pairs(df, min_shared=1)
+
+
+def _over_cap(df):
+    from netbase_spark.operators.dedup import over_cap
+
+    return over_cap(df, ["fp"], 1)
+
+
 def _merge_mapping(driver_threshold):
     def run(df):
         from netbase_spark.operators.canonicalize import merge_mapping
@@ -221,6 +257,10 @@ _PAIRS = ([("b", "a"), ("c", "b")], "src string, dst string")
 _MAP = ([("b", "a")], "node string, rep string")
 _TRIPLES = ([("b", 7, "x", "r", "d1"), ("a", 7, "b", "r", "d2")], TRIPLE_DDL)
 _VECS = ([(1, [1.0, 0.0]), (2, [0.9, 0.1])], "id int, v array<double>")
+_SIGS = ([(1, 5, 7), (2, 5, 7)], "doc_id bigint, simhash_hi bigint, simhash_lo bigint")
+_MINSIGS = ([(1, 1, 2, 3, 4), (2, 1, 2, 3, 4)],
+            "doc_id bigint, s0 bigint, s1 bigint, s2 bigint, s3 bigint")
+_FPS = ([(1, 10), (2, 10), (1, 11), (2, 11)], "doc_id bigint, fp bigint")
 _TAXO = ([("a", SUPER_CLASS, "b"), ("b", SUPER_CLASS, "c")],
          "subj string, rel int, obj string")
 
@@ -239,10 +279,18 @@ _TAXO = ([("a", SUPER_CLASS, "b"), ("b", SUPER_CLASS, "c")],
     (_rewrite_triples, _TRIPLES),
     (_recanonicalize_delta, _TRIPLES),
     (_fresh_triples, _TRIPLES),
+    (_ivf, _VECS),
+    (_simhash_pairs, _SIGS),
+    (_minhash_pairs, _MINSIGS),
+    (_winnow_pairs, _FPS),
+    (_bucketed, _VECS),
+    (_over_cap, _FPS),
 ], ids=["cc", "isa_closure", "pagerank", "pagerank_resume",
         "cosine_neardup_pairs", "ann_lsh_buckets", "ann_lsh_buckets_keep_vec",
         "merge_mapping_driver", "merge_mapping_spark", "mapping_delta",
-        "rewrite_triples", "recanonicalize_delta", "fresh_triples"])
+        "rewrite_triples", "recanonicalize_delta", "fresh_triples",
+        "ivf_topk", "simhash_candidates", "minhash_lsh_pairs",
+        "winnow_overlap_pairs", "cosine_neardup_bucketed", "over_cap"])
 def test_empty_input_matches_nonempty_schema(spark, op, data):
     rows, ddl = data
     full = op(local_frame(spark, rows, ddl))

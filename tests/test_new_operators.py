@@ -496,11 +496,11 @@ def test_winnow_guarantee_and_pairs(spark):
 
 def test_winnow_hot_fp_cap(spark):
     """fp_cap drops boilerplate fingerprints from the pair join (the
-    quadratic hot-bucket guard) and winnow_hot_fps reports exactly the
+    quadratic hot-bucket guard) and over_cap reports exactly the
     dropped ones — no silent caps."""
+    from netbase_spark.operators.dedup import over_cap
     from netbase_spark.operators.textstats import (
         winnow_fingerprints,
-        winnow_hot_fps,
         winnow_overlap_pairs,
     )
 
@@ -513,7 +513,7 @@ def test_winnow_hot_fp_cap(spark):
     uncapped = winnow_overlap_pairs(fps, min_shared=1, fp_cap=None).count()
     capped = winnow_overlap_pairs(fps, min_shared=1, fp_cap=4).count()
     assert uncapped > 0 and capped < uncapped
-    hot = {r.fp: r.n for r in winnow_hot_fps(fps, fp_cap=4).collect()}
+    hot = {r.fp: r.n for r in over_cap(fps, ["fp"], 4).collect()}
     assert hot and all(n == 5 for n in hot.values())
 
 

@@ -174,9 +174,10 @@ def test_simhash_hot_band_bucket_cap(spark):
     """Skew guard: one hot band value (many near-identical docs) is
     dropped once the bucket exceeds the cap; the remaining pairs stay."""
     from netbase_spark.operators.dedup import (
+        over_cap,
         simhash,
+        simhash_bands,
         simhash_candidates,
-        simhash_oversized_buckets,
     )
 
     # 30 near-identical docs (hot buckets) + 2 similar odd ones
@@ -195,7 +196,7 @@ def test_simhash_hot_band_bucket_cap(spark):
     # the 30-doc clique (435 pairs/band) is gone, the rare pair survives
     assert (0, 1) in uncapped and (0, 1) not in capped
     assert (100, 101) in capped
-    dropped = simhash_oversized_buckets(sigs, bucket_cap=10).collect()
+    dropped = over_cap(simhash_bands(sigs), ["band", "bv"], 10).collect()
     assert len(dropped) >= 1 and all(r.n == 30 for r in dropped)
 
 
@@ -203,19 +204,19 @@ def test_jaccard_hot_shingle_cap(spark):
     """The n-gram-Jaccard twin of the simhash bucket cap (round-2
     verdict #3): a viral shingle shared by many docs is stopword-dropped
     from the self-join AND the set sizes; rare shingles are untouched;
-    drops are reported by hot_shingles."""
-    from netbase_spark.operators.dedup import cap_hot_shingles, hot_shingles
+    drops are reported by over_cap."""
+    from netbase_spark.operators.dedup import cap_keys, over_cap
 
     rows = [(i, "viral quote here") for i in range(20)]
     rows += [(100, "rare one alpha"), (101, "rare one alpha")]
     sh = spark.createDataFrame(rows, "doc_id long, shingle string")
-    capped = {(r.doc_id, r.shingle) for r in cap_hot_shingles(sh, 10).collect()}
+    capped = {(r.doc_id, r.shingle) for r in cap_keys(sh, ["shingle"], 10).collect()}
     assert capped == {(100, "rare one alpha"), (101, "rare one alpha")}
-    dropped = hot_shingles(sh, 10).collect()
+    dropped = over_cap(sh, ["shingle"], 10).collect()
     assert [(r.shingle, r.n) for r in dropped] == [("viral quote here", 20)]
     # cap=None / generous cap are pass-throughs
-    assert cap_hot_shingles(sh, None).count() == 22
-    assert cap_hot_shingles(sh, 20).count() == 22
+    assert cap_keys(sh, ["shingle"], None).count() == 22
+    assert cap_keys(sh, ["shingle"], 20).count() == 22
 
 
 def test_media_neardup_end_to_end(spark):

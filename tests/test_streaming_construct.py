@@ -272,6 +272,42 @@ def test_apply_merges_plain_parquet_table(spark, tmp_path: pathlib.Path):
         assert keyset(got) == keyset(expected)
 
 
+def test_plain_merge_keeps_the_metrics_log(spark, tmp_path: pathlib.Path):
+    """A plain-mode merge overwrites the table directory; the batch
+    record logged before it survives, followed by the merge's record."""
+    import json
+
+    from netbase_spark.plans.synth_pipeline import build_artifacts
+    from netbase_spark.relations import MENTIONED_IN
+    from netbase_spark.streaming.construct import (
+        apply_merges,
+        start_incremental_construct,
+    )
+
+    arts = build_artifacts(spark)
+    table = tmp_path / "triples"
+    _land(spark, tmp_path, 20)
+    start_incremental_construct(
+        spark, str(tmp_path / "landing"), str(table), str(tmp_path / "ckpt"),
+        arts, available_now=True, max_files_per_trigger=1_000,
+    ).awaitTermination(180)
+    log = table / "_construct_metrics.jsonl"
+    before = log.read_text().splitlines()
+    assert len(before) == 1 and "merge" not in json.loads(before[0])
+
+    subs = sorted(
+        r["subj"]
+        for r in spark.read.parquet(str(table))
+        .where(F.col("rel") == MENTIONED_IN)
+        .select("subj").distinct().limit(2).collect()
+    )
+    late = spark.createDataFrame([(subs[1], subs[0])], "src string, dst string")
+    apply_merges(spark, str(table), late, arts)
+    after = log.read_text().splitlines()
+    assert len(after) == 2 and after[0] == before[0]
+    assert json.loads(after[1])["merge"] is True
+
+
 def test_surgical_recanonicalize_rewrites_only_touched_files(
     spark, tmp_path: pathlib.Path
 ):
