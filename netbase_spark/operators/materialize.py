@@ -312,45 +312,20 @@ def pagerank(
     here because ``iters`` stays small (salience needs 2-3 rounds, not
     convergence); for long runs compose with the checkpoint helper in
     canonicalize.py.  Returns (node, pr_e6 = pr_e12 div 1e6).
+
+    A cold start is a warm start from no prior ranks: this runs
+    :func:`pagerank_resume`'s step ``iters`` times from uniform.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
+    ranks, _ = pagerank_resume(
+        edges, None, iters=iters, damping_pct=damping_pct,
+        src_col=src_col, dst_col=dst_col,
     )
-    n = nodes.count()
-    if n == 0:
-        # empty edge set: same schema, no rows (no 1/N to divide by)
-        node_t = nodes.schema["node"].dataType.simpleString()
-        return local_frame(edges.sparkSession, [], f"node {node_t}, pr_e6 long")
-    d = int(damping_pct)
-    base = (PAGERANK_E12 * (100 - d) // 100) // n
-    out_deg = e.groupBy("src").agg(F.count("*").alias("outd"))
-    pr = nodes.withColumn("pr", F.lit(PAGERANK_E12 // n).cast("long"))
-    for _ in range(iters):
-        contrib = (
-            e.join(pr, e["src"] == pr["node"])
-            .join(out_deg, "src")
-            .select("dst", F.expr("pr div outd").alias("w"))
-            .groupBy("dst")
-            .agg(F.sum("w").alias("c"))
-        )
-        pr = nodes.join(
-            contrib, nodes["node"] == contrib["dst"], "left"
-        ).select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr(f"({d} * coalesce(c, 0L)) div 100")
-            ).cast("long").alias("pr"),
-        )
-    return pr.select("node", F.expr("pr div 1000000").cast("long").alias("pr_e6"))
+    return ranks.select("node", "pr_e6")
 
 
 def pagerank_resume(
     edges: DataFrame,
-    prev_pr_e12: DataFrame,
+    prev_pr_e12: DataFrame | None,
     iters: int | None = None,
     tol_e12: int = 1_000_000,
     max_iters: int = 50,
@@ -369,8 +344,9 @@ def pagerank_resume(
 
     ``prev_pr_e12`` is (node, pr_e12) from a previous run (see below);
     nodes new to ``edges`` enter at the uniform 1/N share and vanished
-    nodes drop out.  All-integer e12 fixed point
-    throughout — same bit-determinism contract as :func:`pagerank`
+    nodes drop out.  ``None`` is a cold start: every node at 1/N, which
+    is how :func:`pagerank` runs this same step.  All-integer e12 fixed
+    point throughout — same bit-determinism contract as :func:`pagerank`
     (each ROUND is deterministic; the round COUNT is data-dependent in
     tolerance mode, so resume-vs-cold equality is within tolerance, not
     bitwise — pinned by test).
@@ -407,15 +383,18 @@ def pagerank_resume(
     # whose fixed point is init-independent, and skipping it keeps one
     # warm round from a one-round init BIT-EQUAL to two cold rounds
     # (the pagerank_warm oracle)
-    pr = (
-        nodes.join(
-            prev_pr_e12.select("node", F.col("pr_e12").alias("_p")),
-            "node",
-            "left",
+    if prev_pr_e12 is None:
+        pr = nodes.withColumn("pr", F.lit(uniform).cast("long"))
+    else:
+        pr = (
+            nodes.join(
+                prev_pr_e12.select("node", F.col("pr_e12").alias("_p")),
+                "node",
+                "left",
+            )
+            .select("node", F.coalesce("_p", F.lit(uniform)).cast("long").alias("pr"))
+            .localCheckpoint()
         )
-        .select("node", F.coalesce("_p", F.lit(uniform)).cast("long").alias("pr"))
-        .localCheckpoint()
-    )
 
     def step(pr_df: DataFrame) -> DataFrame:
         contrib = (

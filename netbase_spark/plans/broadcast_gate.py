@@ -167,37 +167,19 @@ def gated_broadcast(
     return df
 
 
-def fits_driver_collect(
-    df: DataFrame, cap_bytes: int | None = None, sample_rows: int = 2000
-) -> bool:
-    """Gate for driver-side ``collect()`` into Python dict/set lookup
-    structures (the ``sc.broadcast`` gazetteer path): sampled pickled
-    size inflated by the live-object overhead factor must fit the cap.
-    Same Catalyst fast path as :func:`fits_broadcast` — when even the
-    (over)estimate times the overhead factor fits, the gate costs ZERO
-    jobs, keeping the construction hot path's per-run overhead nil for
-    ordinary dimension tables."""
-    cap = broadcast_cap_bytes(df.sparkSession, cap_bytes)
-    est = plan_size_bytes(df)
-    if est is not None and est * PY_OVERHEAD_FACTOR <= cap:
-        return True
-    n, sampled = sampled_size_bytes(df, sample_rows)
-    return sampled * PY_OVERHEAD_FACTOR + n * PY_PER_ROW_BYTES <= cap
-
-
 def collect_under_cap(
     df: DataFrame,
     cap_bytes: int | None = None,
     sample_rows: int = 2000,
 ) -> list | None:
     """Collect ``df`` for driver-dict use iff it fits the cap — in ONE
-    job.  ``fits_driver_collect`` + ``collect`` executes the dimension
-    lineage twice (and three times when Catalyst has no stats, e.g.
-    localCheckpoint-backed plans — measured ~0.7 s per construction at
-    fixture scale); this probe instead collects ``cap_rows + 1`` rows
-    via :func:`collect_limit`, where ``cap_rows = cap //
-    PY_PER_ROW_BYTES`` is the row count the cap could possibly admit at
-    the per-entry overhead floor.
+    job.  A size gate followed by ``collect`` would execute the
+    dimension lineage twice (and three times when Catalyst has no
+    stats, e.g. localCheckpoint-backed plans — measured ~0.7 s per
+    construction at fixture scale); this probe instead collects
+    ``cap_rows + 1`` rows via :func:`collect_limit`, where ``cap_rows =
+    cap // PY_PER_ROW_BYTES`` is the row count the cap could possibly
+    admit at the per-entry overhead floor.
     Returns the rows when they fit (the caller builds its dict from
     them — no second execution), or None when the limit was hit or the
     sampled estimate exceeds the cap (caller takes the shuffle path).

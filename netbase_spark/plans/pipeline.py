@@ -27,8 +27,10 @@ Every stage writes parquet under ``<out>/<stage>/``; a stage whose
 output already exists (``_SUCCESS``) is skipped on resume — the Iceberg
 snapshot-checkpoint analog in the sandbox (the reference's .bin snapshot
 + replay log, src/export.cpp:5-47, src/netbase.cpp:2521-2533).
-Per-stage metrics (rows in/out, wall seconds, partitions) append to
-``<out>/_metrics``; per-partition lineage rows to ``<out>/_lineage``.
+Each stage appends one record (run id, stage, resumed, rows, wall
+seconds, per-file rows) to ``<out>/_construct_metrics.jsonl`` through
+``table_io.log_metrics``, the log the stream, merges and compactions
+write too.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ from __future__ import annotations
 import glob
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,15 +55,19 @@ from netbase_spark.operators.materialize import (
     write_triples,
 )
 from netbase_spark.plans.synth_pipeline import label_side, scan_artifacts, scan_batch
-from netbase_spark.plans.table_io import link_partition_files, write_snapshot
+from netbase_spark.plans.table_io import (
+    link_partition_files,
+    log_metrics,
+    write_snapshot,
+)
 
 
 def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _file_stats(path: str) -> list[tuple[int, int]]:
-    """Per-output-partition (file_index, num_rows) from parquet FOOTERS —
+def _file_stats(path: str) -> list[tuple[str, int]]:
+    """Per-output-file (name under ``path``, num_rows) from parquet FOOTERS —
     driver-side metadata only, no scan.  At 100 TB this is the only
     affordable way to record per-partition lineage: re-reading every
     stage snapshot just to count rows per partition would double the
@@ -73,7 +80,7 @@ def _file_stats(path: str) -> list[tuple[int, int]]:
         glob.glob(os.path.join(path, "part-*.parquet"))
         or glob.glob(os.path.join(path, "*", "part-*.parquet"))
     )
-    return [(i, pq.read_metadata(f).num_rows) for i, f in enumerate(files)]
+    return [(os.path.relpath(f, path), pq.read_metadata(f).num_rows) for f in files]
 
 
 class Pipeline:
@@ -82,38 +89,33 @@ class Pipeline:
         self.out = out_dir
         self.resume = resume
         self.metrics: list[dict] = []
-        self._lineage: list[tuple[str, int, int]] = []
+        self.run_id: str | None = None
 
     def _stage(self, name: str, build, write=None) -> DataFrame:
-        """Run (or resume) a stage; record metrics + per-partition lineage.
-        Rows and lineage come from parquet footers (`_file_stats`), so a
-        stage costs exactly one Spark job: its own write.  ``write``
-        overrides the plain parquet snapshot (e.g. the rel-partitioned
-        final layout) — resume re-reads whatever layout was written."""
+        """Run (or resume) a stage; append its record to ``metrics`` and
+        the construction log.  Rows and per-file rows come from parquet
+        footers (`_file_stats`), so a stage costs exactly one Spark job:
+        its own write.  ``write`` overrides the plain parquet snapshot
+        (e.g. the rel-partitioned final layout) — resume re-reads
+        whatever layout was written."""
         path = os.path.join(self.out, name)
         t0 = time.time()
-        if self.resume and _done(path):
-            rows = sum(n for _, n in _file_stats(path))
-            self.metrics.append(
-                {"stage": name, "resumed": True, "rows": rows, "secs": 0.0}
-            )
-            return self.spark.read.parquet(path)
-        df = build()
-        if write is not None:
-            write(df, path)
-        else:
-            write_snapshot(df, path, fmt="parquet")
+        resumed = self.resume and _done(path)
+        if not resumed:
+            df = build()
+            if write is not None:
+                write(df, path)
+            else:
+                write_snapshot(df, path, fmt="parquet")
         stats = _file_stats(path)
-        secs = time.time() - t0
-        self._lineage.extend((name, pid, n) for pid, n in stats)
-        self.metrics.append(
-            {
-                "stage": name,
-                "resumed": False,
-                "rows": sum(n for _, n in stats),
-                "secs": round(secs, 3),
-            }
-        )
+        rec = {
+            "stage": name,
+            "resumed": resumed,
+            "rows": sum(n for _, n in stats),
+            "secs": 0.0 if resumed else round(time.time() - t0, 3),
+        }
+        self.metrics.append(rec)
+        log_metrics(self.out, {"run": self.run_id, **rec, "partitions": stats})
         return self.spark.read.parquet(path)
 
     def run(
@@ -125,7 +127,9 @@ class Pipeline:
         german: bool = False,
     ) -> DataFrame:
         """Full construction; returns the canonical triple table.  Every
-        stage body is a construction-core step (plans/synth_pipeline)."""
+        stage body is a construction-core step (plans/synth_pipeline).
+        Each call is one ``run`` in the construction log."""
+        self.run_id = uuid.uuid4().hex[:12]
         aliases = self._stage("aliases", lambda: build_alias_table(labels))
         side = self._stage(
             "extract_triples", lambda: label_side(labels, raw_triples, german)
@@ -194,50 +198,4 @@ class Pipeline:
             lambda: degrees_from_adjacency(adjacency_view(triples, rev)),
         )
 
-        self._flush_run_metadata()
         return triples
-
-    def _flush_run_metadata(self) -> None:
-        """Append this run's lineage + metrics as parquet, written
-        driver-side with pyarrow (both tables are O(stages) rows — no
-        reason to spin Spark jobs for them)."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        run_id = uuid.uuid4().hex[:12]
-        if self._lineage:
-            ldir = os.path.join(self.out, "_lineage")
-            os.makedirs(ldir, exist_ok=True)
-            pq.write_table(
-                pa.table(
-                    {
-                        "stage": [s for s, _, _ in self._lineage],
-                        "partition_id": pa.array(
-                            [p for _, p, _ in self._lineage], pa.int32()
-                        ),
-                        "output_rows": pa.array(
-                            [n for _, _, n in self._lineage], pa.int64()
-                        ),
-                    }
-                ),
-                os.path.join(ldir, f"part-{run_id}.parquet"),
-            )
-        mdir = os.path.join(self.out, "_metrics")
-        os.makedirs(mdir, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "stage": [m["stage"] for m in self.metrics],
-                    "resumed": pa.array(
-                        [bool(m["resumed"]) for m in self.metrics], pa.bool_()
-                    ),
-                    "rows": pa.array([int(m["rows"]) for m in self.metrics], pa.int64()),
-                    "secs": pa.array(
-                        [float(m["secs"]) for m in self.metrics], pa.float64()
-                    ),
-                }
-            ),
-            os.path.join(mdir, f"part-{run_id}.parquet"),
-        )

@@ -31,11 +31,25 @@ single switch point.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 ICEBERG_CATALOG_PREFIX = "org.apache.iceberg.spark.Spark"  # SparkCatalog / SparkSessionCatalog
+
+METRICS_LOG = "_construct_metrics.jsonl"
+"""The construction log, one JSON line per record, kept in the output
+directory it describes: a ``Pipeline`` stage (``run``, ``stage``,
+``resumed``, ``rows``, ``secs``, ``partitions``) under ``Pipeline``'s
+out dir; a stream batch, merge or compaction under the versioned
+table's (the leading underscore keeps parquet readers off it)."""
+
+
+def log_metrics(out: str, rec: dict) -> None:
+    """Append ``rec`` as one line of ``out``'s :data:`METRICS_LOG`."""
+    with open(os.path.join(out, METRICS_LOG), "a") as fh:
+        fh.write(json.dumps(rec) + "\n")
 
 
 def iceberg_catalogs(spark: SparkSession) -> list[str]:

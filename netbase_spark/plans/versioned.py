@@ -62,6 +62,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from netbase_spark.plans.broadcast_gate import broadcast_cap_bytes, local_frame
+from netbase_spark.plans.table_io import log_metrics
 
 BOUND_COLS = ("subj", "obj")
 """Columns whose per-file min/max every manifest records."""
@@ -74,11 +75,6 @@ triple row decodes to about 50 bytes of Arrow buffers, so the default
 still beat the Spark ones (compaction 7.7 vs 15.1 s, a merge touching
 every file 3.8 vs 31.8 s) with the driver's Python peaking under 1 GB
 (BENCH/arrow_arm_crossover.json)."""
-
-METRICS_LOG = "_construct_metrics.jsonl"
-"""Per-table JSON-lines log: one record per stream batch, merge and
-compaction (the leading underscore keeps parquet readers off it)."""
-
 
 def _vdir(table: str) -> str:
     return os.path.join(table, "_versions")
@@ -103,12 +99,6 @@ def read_manifest(table: str, version: int | None = None) -> dict:
         raise FileNotFoundError(f"no versioned table at {table}")
     with open(_manifest_path(table, v)) as fh:
         return json.load(fh)
-
-
-def log_metrics(table: str, rec: dict) -> None:
-    """Append ``rec`` as one line of the table's :data:`METRICS_LOG`."""
-    with open(os.path.join(table, METRICS_LOG), "a") as fh:
-        fh.write(json.dumps(rec) + "\n")
 
 
 def _schema_json(data, man: dict | None = None) -> str:
@@ -403,7 +393,7 @@ def rewrite_data_files(
     sorted and cut in Arrow on the driver (no Spark job); above it, a
     ``repartitionByRange`` + in-file sort on Spark.  Each run appends
     one record (``path``, files, on-disk and decoded input bytes, cap,
-    secs) to the table's :data:`METRICS_LOG`.
+    secs) to the table's ``table_io.METRICS_LOG``.
 
     Runs as ONE writer (same discipline as every commit here); readers
     of older versions are unaffected, and ``expire_versions`` later
@@ -500,8 +490,8 @@ def expire_versions(
     fresh one is the normal state of an IN-FLIGHT commit (its files are
     published into data/ before its manifest lists them), and deleting
     it mid-write would corrupt that commit — expiry may run beside a
-    live writer (the streaming loop itself never calls it; a caller
-    runs it between batches).  Returns the deleted data file names."""
+    live writer (the construction stream runs it after each of its
+    compactions).  Returns the deleted data file names."""
     cur = current_version(table)
     if cur is None:
         return []

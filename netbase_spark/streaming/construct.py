@@ -3,8 +3,8 @@
 This module runs the WHOLE construction — the construction core's
 ``scan_batch`` (fused scan -> link -> canonicalize) against prebuilt
 dimension artifacts (plans/synth_pipeline.build_artifacts), then an
-idempotent merge into the canonical triple table — as a
-``foreachBatch`` loop:
+idempotent merge into the canonical triple table, a snapshot-versioned
+table (plans/versioned) — as a ``foreachBatch`` loop:
 
 - the gazetteer automaton is broadcast ONCE (artifacts), not per
   micro-batch: at 10^7-10^8 aliases a per-batch rebuild would dominate
@@ -27,25 +27,39 @@ idempotent merge into the canonical triple table — as a
   bounds) decode to within the broadcast cap
   (``versioned.decoded_bytes``), or a compaction whose live files do,
   runs as a vectorized pyarrow rewrite on the driver; a larger one runs
-  the Spark plan.  Each run logs which arm ran to ``_construct_metrics.jsonl``.
+  the Spark plan.  Each run logs which arm ran to ``_construct_metrics.jsonl``,
+  and each compaction expires all but the newest ``KEEP_VERSIONS``
+  versions, so disk stays bounded however long the stream runs.
 
 The doc side stays shuffle-free per batch on the broadcast path; the
 anti-join reads the current table with the delta keys broadcast
 (existing scanned, never shuffled), which at a 100-TB table should be
-further narrowed by partition pruning on rel — the append writer keeps
-the table partitioned by nothing here (sandbox parquet), and the
-layout knob lives in plans/table_io.write_triples.
+further narrowed by partition pruning on rel — the versioned table's
+data files are unpartitioned here, and compaction clusters them on
+``subj``.
 """
 
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from netbase_spark.schemas import DOCS_SCHEMA
+
+KEEP_VERSIONS = 2
+"""Versions the stream keeps after each compaction (``expire_versions``'
+``keep``): the compaction and its parent, so one compaction can still be
+rolled back while the files no kept version lists leave the disk."""
+
+
+def _require_versioned(versioned: bool) -> None:
+    if not versioned:
+        raise ValueError(
+            "the construction table is always a versioned table "
+            "(plans/versioned); versioned=False is not supported"
+        )
 
 
 def apply_merges(
@@ -53,7 +67,7 @@ def apply_merges(
     table_dir: str,
     merge_edges: DataFrame,
     artifacts,
-    versioned: bool = False,
+    versioned: bool = True,
     batch_id: str | None = None,
 ):
     """Console ``:merge`` analog for the incremental/streaming loop: fold
@@ -70,19 +84,20 @@ def apply_merges(
        driver and hands back the rep delta directly; otherwise its
        Spark arm's map is checkpointed and the delta (its
        ``mapping_delta``) collected once under the cap;
-    2. the on-disk triple table: only rows touching re-rooted nodes are
-       rewritten — in a versioned table only the data FILES holding
-       them (:func:`_surgical_recanonicalize`, a ``replace_files``
-       commit), in plain mode through ``recanonicalize_delta`` and a
-       staged parquet overwrite;
+    2. the on-disk triple table: only the data FILES holding rows that
+       touch re-rooted nodes are rewritten
+       (:func:`_surgical_recanonicalize`, a ``replace_files`` commit);
     3. dimension artifacts: the gazetteer broadcast's alias->entity
        values remap through the (tiny, collected) rep delta — the
        automaton is reused, never rebuilt — and the shuffle-path
        alias_entity table takes the same remap as a broadcast join, so
        FUTURE batches link straight to the new representatives.
 
+    ``table_dir`` is a versioned table (plans/versioned); ``versioned``
+    stays only for callers that pass it, and ``False`` raises
+    ``ValueError`` before anything is read or written.
     A merge that changes a rep appends one record to the table's
-    ``versioned.METRICS_LOG``: which arm rewrote the table (``path``),
+    ``table_io.METRICS_LOG``: which arm rewrote the table (``path``),
     candidate and touched files, input bytes, the cap and the secs up
     to the table commit.
     Returns the refreshed ``ConstructionArtifacts``.  Equality with a
@@ -97,18 +112,18 @@ def apply_merges(
         _merge_mapping_spark,
         mapping_delta,
         merge_mapping_rows,
-        recanonicalize_delta,
         rewrite_triples,
     )
     from netbase_spark.operators.mentions import remap_scan_entities
-    from netbase_spark.plans import versioned as V
     from netbase_spark.plans.broadcast_gate import (
         collect_under_cap,
         gated_broadcast,
         local_frame,
     )
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
+    from netbase_spark.plans.table_io import log_metrics
 
+    _require_versioned(versioned)
     t0 = time.perf_counter()
     old_map = artifacts.mapping
     map_schema = old_map.select("node", "rep").schema
@@ -149,26 +164,9 @@ def apply_merges(
     # re-WRITE 100 TB to change a few components — the write, not the
     # rewrite join, is the dominant cost at scale (measured:
     # BENCH/incremental_merge_probe.json).
-    if versioned:
-        rec = _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of)
-    else:
-        parts = [os.path.join(table_dir, f) for f in os.listdir(table_dir)
-                 if f.startswith("part-")]
-        rec = {"path": "spark", "candidate_files": len(parts),
-               "touched_files": len(parts),
-               "input_bytes": sum(os.path.getsize(f) for f in parts),
-               "cap_bytes": None}
-        existing = spark.read.parquet(table_dir)
-        updated = recanonicalize_delta(existing, changed)
-        # materialize before overwriting the directory being read
-        updated = updated.localCheckpoint()
-        # the overwrite deletes the whole directory, metrics log included
-        log = Path(table_dir, V.METRICS_LOG)
-        kept = log.read_text() if log.exists() else ""
-        updated.write.mode("overwrite").parquet(table_dir)
-        log.write_text(kept)
-    V.log_metrics(table_dir, {"batch_id": batch_id, "merge": True, **rec,
-                              "secs": round(time.perf_counter() - t0, 3)})
+    rec = _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of)
+    log_metrics(table_dir, {"batch_id": batch_id, "merge": True, **rec,
+                            "secs": round(time.perf_counter() - t0, 3)})
 
     # 3. refresh the dimension artifacts through the rep delta
     label_triples = rewrite_triples(
@@ -225,8 +223,8 @@ def _surgical_recanonicalize(spark, table_dir, changed, batch_id, rep_of=None):
     delta-touched ROWS go through the mapping (untouched rows in the
     same file carry verbatim — identical split to
     ``recanonicalize_delta``, so sameAs-class rels and self-loops
-    already stored in untouched rows survive exactly as the plain path
-    keeps them), and the result is first-writer-deduplicated against
+    already stored in untouched rows survive exactly as
+    ``recanonicalize_delta`` keeps them), and the result is first-writer-deduplicated against
     the untouched rows and the kept files' keys.
 
     Candidate files come from the manifest's per-file bounds (no data
@@ -415,52 +413,54 @@ def start_incremental_construct(
     artifacts=None,
     available_now: bool = True,
     max_files_per_trigger: int = 8,
-    versioned: bool = False,
+    versioned: bool = True,
     compact_every: int | None = None,
-    compact_cluster_by: tuple = ("subj",),
-    compact_target_file_bytes: int = 128 * 1024 * 1024,
 ) -> StreamingQuery:
     """Start (or resume, via checkpoint) the full-construction stream:
     new doc files under ``landing_dir`` -> canonical triples appended
-    to the parquet table at ``table_dir``.  ``available_now=True``
-    drains the backlog then stops (batch-equivalent semantics).
+    to the snapshot-versioned table (plans/versioned) at ``table_dir``.
+    ``available_now=True`` drains the backlog then stops
+    (batch-equivalent semantics).
 
-    ``versioned=True`` makes ``table_dir`` a snapshot-versioned table
-    (plans/versioned): each micro-batch commits one manifest version
-    tagged with its foreachBatch id — replay after a mid-commit crash
-    is a manifest-level no-op (on TOP of the key anti-join, which
-    dedups re-ingested documents), any intermediate graph state stays
-    time-travel readable, and rollback is O(1).
+    Each micro-batch commits one manifest version tagged with its
+    foreachBatch id — replay after a mid-commit crash is a
+    manifest-level no-op (on TOP of the key anti-join, which dedups
+    re-ingested documents), any intermediate graph state stays
+    time-travel readable, and rollback is O(1).  ``versioned`` stays
+    only for callers that pass it; ``False`` raises ``ValueError``
+    before anything is read or written.
 
-    ``compact_every=N`` (versioned only) runs
+    ``compact_every=N`` runs
     :func:`~netbase_spark.plans.versioned.rewrite_data_files` after
-    every Nth micro-batch, re-clustering on ``compact_cluster_by`` and
-    bin-packing to ``compact_target_file_bytes`` — the automatic layout
-    maintenance that keeps the surgical late-merge path
-    (:func:`apply_merges`) touching O(touched-subject) files no matter
-    how long the stream runs (appends scatter keys across batch files;
-    without periodic compaction the file-level delta rewrite decays to
-    a near-full rewrite — measured, BENCH/compaction_probe.json).  The
-    compaction commit is batch-id-idempotent like every commit here, so
-    a replay after a crash cannot double-compact, and it logs its own
-    record (files before/after, arm) next to the batch records."""
+    every Nth micro-batch, re-clustering on ``subj`` (the bound the
+    surgical merge's candidate test reads) at the default target file
+    size — the automatic layout maintenance that keeps the surgical
+    late-merge path (:func:`apply_merges`) touching O(touched-subject)
+    files no matter how long the stream runs (appends scatter keys
+    across batch files; without periodic compaction the file-level
+    delta rewrite decays to a near-full rewrite — measured,
+    BENCH/compaction_probe.json).  The compaction commit is
+    batch-id-idempotent like every commit here, so a replay after a
+    crash cannot double-compact, and it logs its own record (files
+    before/after, arm) next to the batch records.  Each compaction is
+    followed by ``expire_versions(keep=KEEP_VERSIONS)``, so the disk
+    holds the live layout and one rollback step, not one table copy
+    per compaction."""
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import build_artifacts, scan_batch
+    from netbase_spark.plans.table_io import log_metrics
 
+    _require_versioned(versioned)
     if artifacts is None:
         artifacts = build_artifacts(spark)
 
     # seed the table with the label-side triples exactly once, BEFORE
     # the stream starts: they are docs-independent, and seeding them
     # here keeps every micro-batch append doc-derived only
-    if versioned:
-        if V.current_version(table_dir) is None:
-            V.create(artifacts.label_triples, table_dir)
-    elif not os.path.exists(os.path.join(table_dir, "_SUCCESS")):
-        artifacts.label_triples.write.mode("overwrite").parquet(table_dir)
+    if V.current_version(table_dir) is None:
+        V.create(artifacts.label_triples, table_dir)
 
     def process_batch(docs: DataFrame, batch_id: int) -> None:
-        import glob
         import time
 
         from pyspark.sql import Observation
@@ -473,34 +473,20 @@ def start_incremental_construct(
         # is scanned, never shuffled
         from netbase_spark.operators.evaluate import fresh_triples
 
-        existing = (
-            V.read(spark, table_dir) if versioned
-            else spark.read.parquet(table_dir)
-        )
+        existing = V.read(spark, table_dir)
         fresh = fresh_triples(existing, batch).select(*existing.columns)
         # north-rule metrics + lineage, at zero extra jobs: row count via
         # an Observation on the write itself; per-partition lineage from
-        # the parquet footers of the files THIS batch appended (manifest
-        # diff in versioned mode, file-list diff otherwise — same
-        # discipline as plans/pipeline._file_stats)
+        # the parquet footers of the files THIS batch appended (the
+        # manifest diff — same discipline as plans/pipeline._file_stats)
         obs = Observation(f"construct_batch_{batch_id}")
         observed = fresh.observe(obs, F.count(F.lit(1)).alias("rows"))
         t0 = time.time()
-        if versioned:
-            parent = V.read_manifest(table_dir)
-            v = V.append(observed, table_dir, batch_id=batch_id)
-            if v == parent["version"]:  # replayed batch: no-op commit
-                return
-            added = set(V.read_manifest(table_dir)["files"]) - set(parent["files"])
-            new_files = sorted(
-                os.path.join(table_dir, "data", f) for f in added
-            )
-        else:
-            before = set(glob.glob(os.path.join(table_dir, "part-*.parquet")))
-            observed.write.mode("append").parquet(table_dir)
-            new_files = sorted(
-                set(glob.glob(os.path.join(table_dir, "part-*.parquet"))) - before
-            )
+        parent = V.read_manifest(table_dir)
+        v = V.append(observed, table_dir, batch_id=batch_id)
+        if v == parent["version"]:  # replayed batch: no-op commit
+            return
+        added = set(V.read_manifest(table_dir)["files"]) - set(parent["files"])
         secs = round(time.time() - t0, 3)
         import pyarrow.parquet as pq
 
@@ -509,21 +495,17 @@ def start_incremental_construct(
             "fresh_rows": obs.get["rows"],
             "secs": secs,
             "partitions": [
-                (os.path.basename(f), pq.read_metadata(f).num_rows)
-                for f in new_files
+                (f, pq.read_metadata(os.path.join(table_dir, "data", f)).num_rows)
+                for f in sorted(added)
             ],
         }
-        V.log_metrics(table_dir, rec)
-        if (
-            versioned and compact_every
-            and batch_id > 0 and batch_id % compact_every == 0
-        ):
+        log_metrics(table_dir, rec)
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             V.rewrite_data_files(
-                spark, table_dir,
-                cluster_by=list(compact_cluster_by),
-                target_file_bytes=compact_target_file_bytes,
+                spark, table_dir, cluster_by=["subj"],
                 batch_id=f"compact-{batch_id}",
             )
+            V.expire_versions(table_dir, keep=KEEP_VERSIONS)
 
     stream = (
         spark.readStream.schema(DOCS_SCHEMA)

@@ -92,7 +92,7 @@ def main():
     from netbase_spark.plans.synth_pipeline import materialize_corpus
     from netbase_spark.session import get_spark
 
-    spark = get_spark(app="kr_corpus", cpus=16,
+    spark = get_spark(app="kr_corpus", cpus=args.cores,
                       extra={"spark.ui.showConsoleProgress": "false"})
     materialize_corpus(spark, args.docs, seed=42, partitions=256,
                        skew=args.skew)
@@ -139,16 +139,18 @@ def main():
     if rc != 0:
         raise RuntimeError(f"resumed run failed rc={rc}")
 
-    # which stages did the resume skip?
-    import pyarrow.parquet as pq
+    # which stages did the resume skip?  One list per run in the
+    # construction log (the killed run logged only its finished stages)
+    from netbase_spark.plans.table_io import METRICS_LOG
 
-    resumed = []
-    for f in glob.glob(os.path.join(out_b, "_metrics", "part-*.parquet")):
-        t = pq.read_table(f).to_pylist()
-        resumed.append([(m["stage"], bool(m["resumed"])) for m in t])
-    rec["metrics_runs"] = resumed
+    runs: dict[str, list] = {}
+    with open(os.path.join(out_b, METRICS_LOG)) as fh:
+        for line in fh:
+            m = json.loads(line)
+            runs.setdefault(m["run"], []).append((m["stage"], m["resumed"]))
+    rec["metrics_runs"] = list(runs.values())
 
-    spark = get_spark(app="kr_compare", cpus=16,
+    spark = get_spark(app="kr_compare", cpus=args.cores,
                       extra={"spark.ui.showConsoleProgress": "false"})
     fa = table_fingerprint(spark, os.path.join(out_a, "triples"))
     fb = table_fingerprint(spark, os.path.join(out_b, "triples"))

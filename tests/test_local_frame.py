@@ -128,7 +128,7 @@ def test_apply_merges_builds_no_python_rdd(spark, tmp_path, monkeypatch):
             _init(self, *a, **k)
 
         monkeypatch.setattr(cls, "__init__", spy)
-    out = apply_merges(spark, table, late, arts, versioned=True, batch_id="m1")
+    out = apply_merges(spark, table, late, arts, batch_id="m1")
     monkeypatch.undo()
 
     assert made == []

@@ -255,7 +255,6 @@ def test_broadcast_gate_estimates(spark):
 
     from netbase_spark.plans.broadcast_gate import (
         fits_broadcast,
-        fits_driver_collect,
         gated_broadcast,
         sampled_size_bytes,
     )
@@ -267,8 +266,6 @@ def test_broadcast_gate_estimates(spark):
     assert n == 100 and 0 < est < 100_000
     assert fits_broadcast(small)  # default 256 MiB cap
     assert not fits_broadcast(small, cap_bytes=1)
-    assert fits_driver_collect(small)
-    assert not fits_driver_collect(small, cap_bytes=1)
     # gated_broadcast keeps/drops the hint accordingly
     probe = spark.range(10_000).select(F.col("id").alias("k"))
     hinted = probe.join(gated_broadcast(small.withColumnRenamed("id", "k")), "k")
@@ -280,7 +277,6 @@ def test_broadcast_gate_estimates(spark):
     # empty table: zero estimate, fits any positive cap
     empty = spark.createDataFrame([], "id long")
     assert sampled_size_bytes(empty) == (0, 0)
-    assert fits_driver_collect(empty, cap_bytes=10)
     # one-job collect probe: rows under the cap, None above it
     from netbase_spark.plans.broadcast_gate import collect_under_cap
 

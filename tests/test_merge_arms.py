@@ -69,9 +69,9 @@ def _rows(spark, path):
 
 
 def _metrics(path):
-    from netbase_spark.plans import versioned as V
+    from netbase_spark.plans.table_io import METRICS_LOG
 
-    with open(os.path.join(path, V.METRICS_LOG)) as fh:
+    with open(os.path.join(path, METRICS_LOG)) as fh:
         return [json.loads(line) for line in fh]
 
 
@@ -147,7 +147,7 @@ def test_surgical_merge_arms_agree(spark, tmp_path, case):
         with cap_bytes(spark, cap):
             out = apply_merges(spark, path,
                                local_frame(spark, edges, "src string, dst string"),
-                               arts, versioned=True, batch_id="m")
+                               arts, batch_id="m")
         got[arm] = _rows(spark, path)
         old = dict(old_map)
         changed = {n for n, r in (tuple(x) for x in out.mapping.collect())
@@ -231,7 +231,7 @@ def test_merge_records_which_arm_ran(spark, tmp_path):
         None, None, frozenset(),
     )
     apply_merges(spark, path, local_frame(spark, [("E1", "E0")], "src string, dst string"),
-                 arts, versioned=True, batch_id="m1")
+                 arts, batch_id="m1")
     [rec] = _metrics(path)
     assert set(rec) == {"batch_id", "merge", "path", "candidate_files",
                         "touched_files", "input_bytes", "decoded_bytes",
@@ -279,7 +279,7 @@ def test_spark_arm_caps_the_isin_list(spark, tmp_path, monkeypatch):
         with cap_bytes(spark, cap):
             C.apply_merges(spark, path,
                            local_frame(spark, edges, "src string, dst string"),
-                           arts, versioned=True, batch_id="m")
+                           arts, batch_id="m")
         got[arm] = sorted(_rows(spark, path))
     assert seen == [None]  # the marker-join branch
     assert got["arrow"] == got["spark"]
@@ -315,6 +315,6 @@ def test_driver_arms_run_no_spark_job(spark, tmp_path):
     late = local_frame(spark, [("E3", "E2"), ("E4", "E2"), ("E5", "F1")],
                        "src string, dst string")
     _, jobs = _jobs(spark, lambda: apply_merges(
-        spark, path, late, arts, versioned=True, batch_id="m"))
+        spark, path, late, arts, batch_id="m"))
     assert jobs <= 8
     assert not {r.subj for r in V.read(spark, path).collect()} & {"E1", "E3", "E4", "F1"}

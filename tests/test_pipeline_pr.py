@@ -94,6 +94,24 @@ def test_resume_skips_stages(spark, built):
     assert len(names) == 7
     assert [m["stage"] for m in pipe2.metrics] == names
     assert [m["stage"] for m in built[3].metrics] == names
+    # both runs are in the one construction log: the second all resumed,
+    # with the first's rows per stage
+    import json
+    import os
+
+    from netbase_spark.plans.table_io import METRICS_LOG
+
+    with open(os.path.join(out, METRICS_LOG)) as fh:
+        recs = [json.loads(line) for line in fh]
+    runs = {}
+    for r in recs:
+        runs.setdefault(r["run"], []).append(r)
+    assert len(runs) == 2
+    first, second = runs.values()
+    assert [r["stage"] for r in first] == [r["stage"] for r in second] == names
+    assert all(r["resumed"] for r in second)
+    assert [r["rows"] for r in second] == [r["rows"] for r in first]
+    assert all(r["rows"] == sum(n for _, n in r["partitions"]) for r in recs)
 
 
 def _perfbench_stage_names() -> list[str]:

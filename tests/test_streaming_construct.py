@@ -31,57 +31,13 @@ def _land(spark, tmp, n_docs, start=0):
     docs.write.mode("append").parquet(str(tmp / "landing"))
 
 
-def test_streaming_construct_matches_batch_rebuild(spark, tmp_path: pathlib.Path):
-    from netbase_spark.plans.synth_pipeline import build_artifacts, construct_from
-    from netbase_spark.streaming.construct import start_incremental_construct
-
-    arts = build_artifacts(spark)
-    table = tmp_path / "triples"
-    ckpt = tmp_path / "ckpt"
-
-    # drain 1: 40 docs
-    _land(spark, tmp_path, 40)
-    q = start_incremental_construct(
-        spark, str(tmp_path / "landing"), str(table), str(ckpt), arts,
-        available_now=True, max_files_per_trigger=2,
-    )
-    q.awaitTermination(180)
-
-    # drain 2 (checkpoint restart): 25 more docs
-    _land(spark, tmp_path, 25, start=40)
-    q2 = start_incremental_construct(
-        spark, str(tmp_path / "landing"), str(table), str(ckpt), arts,
-        available_now=True, max_files_per_trigger=2,
-    )
-    q2.awaitTermination(180)
-
-    streamed = spark.read.parquet(str(table))
-    full = construct_from(
-        spark, spark.read.parquet(str(tmp_path / "landing")), arts
-    )
-    keyset = lambda df: {(r.subj, r.rel, r.obj) for r in df.collect()}
-    assert keyset(streamed) == keyset(full)
-    # no key duplicates despite multi-batch appends + the label seed
-    assert (
-        streamed.count()
-        == streamed.dropDuplicates(["subj", "rel", "obj"]).count()
-    )
-    # per-batch metrics + per-partition lineage were recorded, and the
-    # lineage row counts reconcile with the appended table
+def test_streaming_construct_versioned_sink(spark, tmp_path: pathlib.Path):
+    """Each micro-batch commits a manifest version; across a checkpoint
+    restart the final state equals a full rebuild with no duplicate
+    key, intermediate versions stay time-travel readable, and the
+    per-batch metrics and lineage reconcile with the table."""
     import json
 
-    with open(table / "_construct_metrics.jsonl") as fh:
-        recs = [json.loads(l) for l in fh]
-    assert len(recs) >= 2  # multiple micro-batches ran
-    assert all(r["fresh_rows"] == sum(n for _, n in r["partitions"]) for r in recs)
-    label_rows = arts.label_triples.count()
-    assert label_rows + sum(r["fresh_rows"] for r in recs) == streamed.count()
-
-
-def test_streaming_construct_versioned_sink(spark, tmp_path: pathlib.Path):
-    """versioned=True: each micro-batch commits a manifest version; the
-    final state equals a full rebuild, intermediate versions stay
-    time-travel readable, and metrics reconcile with the manifests."""
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import build_artifacts, construct_from
     from netbase_spark.streaming.construct import start_incremental_construct
@@ -90,19 +46,21 @@ def test_streaming_construct_versioned_sink(spark, tmp_path: pathlib.Path):
     table = tmp_path / "vtriples"
     ckpt = tmp_path / "vckpt"
 
+    # drain 1: 40 docs
     _land(spark, tmp_path, 40)
     q = start_incremental_construct(
         spark, str(tmp_path / "landing"), str(table), str(ckpt), arts,
-        available_now=True, max_files_per_trigger=2, versioned=True,
+        available_now=True, max_files_per_trigger=2,
     )
     q.awaitTermination(180)
     v_mid = V.current_version(str(table))
     assert v_mid >= 1
 
+    # drain 2 (checkpoint restart): 25 more docs
     _land(spark, tmp_path, 25, start=40)
     q2 = start_incremental_construct(
         spark, str(tmp_path / "landing"), str(table), str(ckpt), arts,
-        available_now=True, max_files_per_trigger=2, versioned=True,
+        available_now=True, max_files_per_trigger=2,
     )
     q2.awaitTermination(180)
     assert V.current_version(str(table)) > v_mid
@@ -113,6 +71,7 @@ def test_streaming_construct_versioned_sink(spark, tmp_path: pathlib.Path):
     )
     keyset = lambda df: {(r.subj, r.rel, r.obj) for r in df.collect()}
     assert keyset(streamed) == keyset(full)
+    # no key duplicates despite multi-batch appends + the label seed
     assert (
         streamed.count()
         == streamed.dropDuplicates(["subj", "rel", "obj"]).count()
@@ -120,11 +79,12 @@ def test_streaming_construct_versioned_sink(spark, tmp_path: pathlib.Path):
     # time travel: the mid-stream version is a strict subset of final
     mid = V.read(spark, str(table), v_mid)
     assert keyset(mid) < keyset(streamed)
-    # metrics reconcile against the versioned table too
-    import json
-
+    # per-batch metrics + per-file lineage were recorded, and the
+    # lineage row counts reconcile with the appended table
     with open(table / "_construct_metrics.jsonl") as fh:
         recs = [json.loads(l) for l in fh]
+    assert len(recs) >= 2  # multiple micro-batches ran
+    assert all(r["fresh_rows"] == sum(n for _, n in r["partitions"]) for r in recs)
     label_rows = arts.label_triples.count()
     assert label_rows + sum(r["fresh_rows"] for r in recs) == streamed.count()
 
@@ -156,7 +116,7 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
     _land(spark, tmp_path, 40)
     q = start_incremental_construct(
         spark, str(tmp_path / "landing"), str(table), str(ckpt), arts,
-        available_now=True, max_files_per_trigger=2, versioned=True,
+        available_now=True, max_files_per_trigger=2,
     )
     q.awaitTermination(180)
 
@@ -180,10 +140,10 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
     shutil.copytree(table, tmp_path / "mtriples-spark")
     with cap_bytes(spark, 1):
         apply_merges(spark, str(tmp_path / "mtriples-spark"), late,
-                     build_artifacts(spark), versioned=True,
+                     build_artifacts(spark),
                      batch_id="late-merge-1")
     arts2 = apply_merges(
-        spark, str(table), late, arts, versioned=True, batch_id="late-merge-1"
+        spark, str(table), late, arts, batch_id="late-merge-1"
     )
     # prior batches' rows were rewritten on disk
     assert (
@@ -197,7 +157,7 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
     _land(spark, tmp_path, 25, start=40)
     q2 = start_incremental_construct(
         spark, str(tmp_path / "landing"), str(table), str(ckpt), arts2,
-        available_now=True, max_files_per_trigger=2, versioned=True,
+        available_now=True, max_files_per_trigger=2,
     )
     q2.awaitTermination(180)
 
@@ -215,35 +175,36 @@ def test_late_merge_recanonicalizes_prior_batches(spark, tmp_path: pathlib.Path)
     # replay idempotence of the merge commit itself
     v_now = V.current_version(str(table))
     apply_merges(
-        spark, str(table), late, arts2, versioned=True, batch_id="late-merge-1"
+        spark, str(table), late, arts2, batch_id="late-merge-1"
     )
     assert V.current_version(str(table)) == v_now
 
 
-def test_apply_merges_plain_parquet_table(spark, tmp_path: pathlib.Path):
-    """apply_merges on a PLAIN parquet table (versioned=False): the
-    staged-overwrite path rewrites touched rows in place and refreshed
-    artifacts keep working (no-op merge returns artifacts unchanged)."""
+def test_apply_merges_noop_and_cap_arms(spark, tmp_path: pathlib.Path):
+    """apply_merges on a constructed table: a no-op merge returns the
+    artifacts unchanged, and a real one rewrites touched rows under the
+    default cap and under a 1-byte cap alike."""
     from netbase_spark.operators.canonicalize import (
         mapping_delta,
         merge_mapping,
         rewrite_triples,
     )
+    from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import build_artifacts, construct_from
     from netbase_spark.data.synth import docs_df
     from netbase_spark.streaming.construct import apply_merges
 
     arts = build_artifacts(spark)
     arts_ref = build_artifacts(spark)
-    table = str(tmp_path / "plain_triples")
+    table = str(tmp_path / "triples")
     docs = docs_df(spark, 30, seed=11, partitions=2)
-    construct_from(spark, docs, arts).write.mode("overwrite").parquet(table)
+    V.create(construct_from(spark, docs, arts), table)
 
     from netbase_spark.relations import MENTIONED_IN
 
     subs = sorted(
         r["subj"]
-        for r in spark.read.parquet(table)
+        for r in V.read(spark, table)
         .where(F.col("rel") == MENTIONED_IN)
         .select("subj").distinct().limit(2).collect()
     )
@@ -266,46 +227,32 @@ def test_apply_merges_plain_parquet_table(spark, tmp_path: pathlib.Path):
     for t, a, cap in ((table, arts, None),
                       (table + "-cap1", build_artifacts(spark), 1)):
         with cap_bytes(spark, cap):
-            apply_merges(spark, t, late, a)
-        got = spark.read.parquet(t)
+            apply_merges(spark, t, late, a, batch_id="m1")
+        got = V.read(spark, t)
         assert got.where(F.col("subj") == subs[1]).count() == 0
         assert keyset(got) == keyset(expected)
 
 
-def test_plain_merge_keeps_the_metrics_log(spark, tmp_path: pathlib.Path):
-    """A plain-mode merge overwrites the table directory; the batch
-    record logged before it survives, followed by the merge's record."""
-    import json
-
-    from netbase_spark.plans.synth_pipeline import build_artifacts
-    from netbase_spark.relations import MENTIONED_IN
+def test_plain_mode_raises_before_touching_disk(spark, tmp_path: pathlib.Path):
+    """The construction table is always versioned: ``versioned=False``
+    raises ValueError before the table, checkpoint or artifacts are
+    touched."""
+    from netbase_spark.plans.broadcast_gate import local_frame
     from netbase_spark.streaming.construct import (
         apply_merges,
         start_incremental_construct,
     )
 
-    arts = build_artifacts(spark)
     table = tmp_path / "triples"
-    _land(spark, tmp_path, 20)
-    start_incremental_construct(
-        spark, str(tmp_path / "landing"), str(table), str(tmp_path / "ckpt"),
-        arts, available_now=True, max_files_per_trigger=1_000,
-    ).awaitTermination(180)
-    log = table / "_construct_metrics.jsonl"
-    before = log.read_text().splitlines()
-    assert len(before) == 1 and "merge" not in json.loads(before[0])
-
-    subs = sorted(
-        r["subj"]
-        for r in spark.read.parquet(str(table))
-        .where(F.col("rel") == MENTIONED_IN)
-        .select("subj").distinct().limit(2).collect()
-    )
-    late = spark.createDataFrame([(subs[1], subs[0])], "src string, dst string")
-    apply_merges(spark, str(table), late, arts)
-    after = log.read_text().splitlines()
-    assert len(after) == 2 and after[0] == before[0]
-    assert json.loads(after[1])["merge"] is True
+    with pytest.raises(ValueError, match="versioned"):
+        start_incremental_construct(
+            spark, str(tmp_path / "landing"), str(table),
+            str(tmp_path / "ckpt"), None, versioned=False,
+        )
+    late = local_frame(spark, [("E1", "E0")], "src string, dst string")
+    with pytest.raises(ValueError, match="versioned"):
+        apply_merges(spark, str(table), late, None, versioned=False)
+    assert not table.exists() and not (tmp_path / "ckpt").exists()
 
 
 def test_surgical_recanonicalize_rewrites_only_touched_files(
@@ -355,7 +302,7 @@ def test_surgical_recanonicalize_rewrites_only_touched_files(
     shutil.copytree(table, table + "-spark")
     for t, cap in ((table, None), (table + "-spark", 1)):
         with cap_bytes(spark, cap):
-            apply_merges(spark, t, late, arts, versioned=True, batch_id="s1")
+            apply_merges(spark, t, late, arts, batch_id="s1")
         files_after = set(V.read_manifest(t)["files"])
         carried = files_before & files_after
         assert carried, "surgical replace must carry untouched files by name"
@@ -369,9 +316,13 @@ def test_surgical_path_keeps_untouched_sameas_and_self_loops(
     """ADVICE r4: the surgical (versioned) merge path must NOT push
     untouched rows of touched files through rewrite_triples — rows with
     a sameAs-class rel or a self-loop that the delta did not touch
-    survive verbatim, exactly as the plain recanonicalize_delta path
-    keeps them.  Pins versioned == plain end state on such a table."""
-    from netbase_spark.operators.canonicalize import recanonicalize_delta
+    survive verbatim, exactly as recanonicalize_delta keeps them.  Pins
+    the surgical end state == recanonicalize_delta's on such a table."""
+    from netbase_spark.operators.canonicalize import (
+        mapping_delta,
+        merge_mapping,
+        recanonicalize_delta,
+    )
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.relations import SYNONYM
@@ -401,19 +352,13 @@ def test_surgical_path_keeps_untouched_sameas_and_self_loops(
     arts_v = ConstructionArtifacts(
         spark.createDataFrame([], schema), empty_map, None, None, frozenset()
     )
-    apply_merges(spark, tv, late, arts_v, versioned=True, batch_id="adv1")
+    apply_merges(spark, tv, late, arts_v, batch_id="adv1")
 
-    tp = str(tmp_path / "plain")
-    df.write.mode("overwrite").parquet(tp)
-    arts_p = ConstructionArtifacts(
-        spark.createDataFrame([], schema), empty_map, None, None, frozenset()
-    )
-    apply_merges(spark, tp, late, arts_p, versioned=False)
-
+    want = recanonicalize_delta(
+        df, mapping_delta(empty_map, merge_mapping(empty_map, late)))
     keyset = lambda d: {(r.subj, r.rel, r.obj) for r in d.collect()}
     got_v = keyset(V.read(spark, tv))
-    got_p = keyset(spark.read.parquet(tp))
-    assert got_v == got_p
+    assert got_v == keyset(want)
     # the untouched sameAs row and self-loop survived
     assert ("K1", SYNONYM, "K2") in got_v
     assert ("K3", 7, "K3") in got_v
@@ -424,8 +369,9 @@ def test_surgical_path_keeps_untouched_sameas_and_self_loops(
 def test_streaming_auto_compaction_bounds_layout(spark, tmp_path: pathlib.Path):
     """compact_every: the stream runs rewrite_data_files after every Nth
     micro-batch — the final key set still equals a full rebuild, the
-    compaction is recorded in the metrics log, and the file count stays
-    bounded instead of growing one batch-file-set per micro-batch."""
+    compaction is recorded in the metrics log, the live file count stays
+    bounded instead of growing one batch-file-set per micro-batch, and
+    expiry keeps the files on disk to the versions still kept."""
     import json
 
     from netbase_spark.plans import versioned as V
@@ -449,7 +395,7 @@ def test_streaming_auto_compaction_bounds_layout(spark, tmp_path: pathlib.Path):
         ).coalesce(1).write.mode("append").parquet(str(tmp_path / "landing"))
     q = start_incremental_construct(
         spark, str(tmp_path / "landing"), str(table), str(ckpt), arts,
-        available_now=True, max_files_per_trigger=1, versioned=True,
+        available_now=True, max_files_per_trigger=1,
         compact_every=3,
     )
     q.awaitTermination(240)
@@ -464,6 +410,21 @@ def test_streaming_auto_compaction_bounds_layout(spark, tmp_path: pathlib.Path):
     assert all(c["files_after"] <= c["files_before"] for c in compactions)
     n_files = len(V.read_manifest(str(table))["files"])
     assert n_files < sum(len(r["partitions"]) for r in appends) + 1
+    # expiry after each compaction: the disk holds the files of the two
+    # versions the last compaction kept (it and its parent) plus those
+    # of the appends since, and no older version's
+    from netbase_spark.streaming.construct import KEEP_VERSIONS
+
+    last = max(int(c["batch_id"].split("-")[1]) for c in compactions)
+    later = [r for r in appends if r["batch_id"] > last]
+    versions = sorted(
+        int(f.name[1:9]) for f in (table / "_versions").glob("v*.json"))
+    assert len(versions) == KEEP_VERSIONS + len(later)
+    kept = set()
+    for v in versions[:KEEP_VERSIONS]:
+        kept |= set(V.read_manifest(str(table), v)["files"])
+    on_disk = set(f.name for f in (table / "data").iterdir())
+    assert len(on_disk) <= len(kept) + sum(len(r["partitions"]) for r in later)
 
     # correctness unchanged: equality with a full batch rebuild
     streamed = V.read(spark, str(table))

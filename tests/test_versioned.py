@@ -226,7 +226,9 @@ def _binpack_case(spark, t, V, arm):
     # replay idempotence like every commit
     assert V.rewrite_data_files(spark, t, batch_id="c1") == v + 1
     assert V.rewrite_data_files(spark, t, batch_id="c1") == v + 1
-    with open(os.path.join(t, V.METRICS_LOG)) as fh:
+    from netbase_spark.plans.table_io import METRICS_LOG
+
+    with open(os.path.join(t, METRICS_LOG)) as fh:
         assert [json.loads(l)["path"] for l in fh] == [arm] * 2
 
 
@@ -268,7 +270,7 @@ def test_rewrite_data_files_restores_surgical_locality(spark, tmp_path):
         apply_merges(
             spark, table,
             spark.createDataFrame([("E01", "E00")], "src string, dst string"),
-            arts, versioned=True,
+            arts,
         )
         after = set(V.read_manifest(table)["files"])
         total = len(before)
