@@ -22,7 +22,7 @@ from netbase_spark.relations import MENTIONED_IN
 def alias_canonical_map(aliases: DataFrame, mapping: DataFrame) -> dict[str, str]:
     """Compose rank-1 alias->entity selection (``best_entity_per_alias``)
     with the union-find canonical map into ONE driver dict, ready for
-    ``sc.broadcast`` into the fused scan (``prepare_triple_scan``).
+    ``sc.broadcast`` into the fused scan (``mentions.Gazetteer``).
 
     Both inputs are label-side dimensions (gazetteer-bounded, never
     corpus-bounded), so the collect is the same memory class as the
@@ -41,10 +41,10 @@ def alias_canonical_map(aliases: DataFrame, mapping: DataFrame) -> dict[str, str
 def alias_entity_table(aliases: DataFrame, mapping: DataFrame) -> DataFrame:
     """DataFrame twin of :func:`alias_canonical_map`: the same rank-1 x
     union-find composition, but as a JOIN — nothing reaches the driver.
-    Returns (alias_key, entity), one row per surface form.  This is the
-    scale path: when the gazetteer exceeds the broadcast cap
-    (plans/broadcast_gate), the fused scan joins THIS table instead of
-    collecting a dict (plans/synth_pipeline.scan_artifacts).
+    Returns (alias_key, entity), one row per surface form.  It is what
+    ``mentions.Gazetteer.prepare`` gates: under the broadcast cap it is
+    collected into the scan's dict, above it the fused scan joins THIS
+    table.
     The union-find mapping is merge-edge-bounded (far smaller than the
     alias table), so IT still broadcasts."""
     best = best_entity_per_alias(aliases).select("name_norm", "key")

@@ -11,9 +11,10 @@ salting for hub keys per north_rule.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from netbase_spark.operators.frontier import _pin, _unpin
 from netbase_spark.plans.broadcast_gate import local_frame
 
 
@@ -386,14 +387,12 @@ def pagerank_resume(
     if prev_pr_e12 is None:
         pr = nodes.withColumn("pr", F.lit(uniform).cast("long"))
     else:
-        pr = (
+        pr = _pin(
             nodes.join(
                 prev_pr_e12.select("node", F.col("pr_e12").alias("_p")),
                 "node",
                 "left",
-            )
-            .select("node", F.coalesce("_p", F.lit(uniform)).cast("long").alias("pr"))
-            .localCheckpoint()
+            ).select("node", F.coalesce("_p", F.lit(uniform)).cast("long").alias("pr"))
         )
 
     def step(pr_df: DataFrame) -> DataFrame:
@@ -419,19 +418,23 @@ def pagerank_resume(
             pr = step(pr)
             rounds += 1
     else:
+        # each round is pinned and the one it supersedes freed; max |Δ|
+        # is observed in the pinning job, so the stop test costs no job
         for _ in range(max_iters):
-            nxt = step(pr).localCheckpoint()
-            rounds += 1
-            delta = (
-                nxt.join(
-                    pr.select("node", F.col("pr").alias("_o")), "node", "left"
+            obs = Observation()
+            nxt = _pin(
+                step(pr)
+                .join(pr.select("node", F.col("pr").alias("_o")), "node", "left")
+                .observe(
+                    obs,
+                    F.max(F.abs(F.col("pr") - F.coalesce("_o", F.lit(0)))).alias("m"),
                 )
-                .agg(
-                    F.max(F.abs(F.col("pr") - F.coalesce("_o", F.lit(0)))).alias("m")
-                )
-                .collect()[0]["m"]
+                .select("node", "pr")
             )
+            _unpin(pr)
             pr = nxt
+            rounds += 1
+            delta = obs.get["m"]
             if delta is not None and delta <= tol_e12:
                 break
     out = pr.select(

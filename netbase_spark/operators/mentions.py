@@ -3,43 +3,45 @@
 Reference: ``findEntites`` sliding-window hash probes + minimal stemming
 + blacklist + longest-match filter (src/query.cpp:1980-2063, 1912-1942).
 
-Spark-first design: the document side NEVER shuffles — the scan is a
-``mapInPandas`` over doc partitions.  Text assembly per doc (ordered
-concat of kind='text' spans) happens JVM-side with array functions so
-only the final string crosses into Arrow.  The per-batch scan uses the
-same rule module as the oracle (single source of truth for semantics).
+Spark-first design: text assembly per doc (ordered concat of
+kind='text' spans) happens JVM-side with array functions so only the
+final string crosses into Arrow, and every arm uses the same rule
+module as the oracle (single source of truth for semantics).
 
-The gazetteer travels as a ``sc.broadcast`` of (alias structure, token
-trie): serialized ONCE per executor via the block manager, NOT per task
-closure.  Round 1 embedded the alias map in the UDF closure — at the
-10^7-10^8-alias WikiData target that re-serializes a multi-GB closure
-with every task and OOMs the driver;
+A :class:`Gazetteer` is prepared ONCE from the alias table, the
+blacklist and ``german`` and owns the one broadcast-vs-shuffle choice
+(the ``collect_under_cap`` gate in :meth:`Gazetteer.prepare`):
+
+- under the broadcast cap the arm is a ``sc.broadcast`` of (alias
+  structure, token trie, blacklist, max alias words): serialized ONCE
+  per executor via the block manager, NOT per task closure, and the
+  doc side is one ``mapInPandas`` with no join and no shuffle.  The
+  kernel is ``rules.find_mentions_trie``, a token-level goto trie — the
+  Aho-Corasick goto function for this window grammar, property-tested
+  equal to the naive transcription ``rules.find_mentions_naive``.
+  Anchored starts + the MAX_WORDS cap make failure links useless (a
+  per-start walk of depth <= 6 IS the automaton); span-level
+  normalization can merge/collapse tokens, so matching stays
+  span-keyed.
+- above it the alias table stays a partitioned DataFrame and the same
+  rules run as a probe-key shuffle join (the fallback section below).
+
+Both arms hand per-document candidate lists to one output stage
+(:func:`_emit`): mention rows, or the fused scan -> link -> canonicalize
+MENTIONED_IN triples.  The UDF closures capture only broadcast handles
+and scalars, never the gazetteer object: round 1 embedded the alias map
+in the closure, which at 10^7-10^8 aliases re-serializes a multi-GB
+closure with every task;
 tests/test_pipeline_pr.py::test_scan_closure_stays_small_at_100k_aliases
 pins the fix.
-
-One scan kernel fills the automaton role: ``rules.find_mentions_trie``,
-a token-level goto trie — the Aho-Corasick goto function for this
-window grammar, property-tested equal to the naive transcription
-``rules.find_mentions_naive``.  Anchored starts + the MAX_WORDS cap make
-failure links useless (a per-start walk of depth <= 6 IS the
-automaton); what the trie buys is O(1) transition per safe-word
-extension and early termination on dead prefixes.  A full AC automaton
-over raw token streams would change semantics — span-level
-normalization can merge/collapse tokens, so matching stays span-keyed.
-
-Past the broadcast cap the same rules run as a probe-key shuffle join
-(the fallback section below); ``plans/synth_pipeline.scan_batch`` is
-the one place that picks between the two.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from netbase_spark.schemas import MENTIONS_SCHEMA
+from netbase_spark.schemas import MENTIONS_SCHEMA, TRIPLES_SCHEMA
 
 
 def doc_text(docs: DataFrame) -> DataFrame:
@@ -64,226 +66,242 @@ def doc_text(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", txt.alias("text"))
 
 
-def _broadcast_gazetteer(spark, alias_struct, blacklist):
-    """One broadcast per scan: (alias struct, token trie, blacklist,
-    max alias words).  The trie (rules.build_token_trie) is built on the
-    driver so every executor deserializes the finished structure; for
-    dict alias_structs (the fused triple scan) the alias->entity map
-    rides along."""
-    from netbase_spark.oracle.rules import build_token_trie, max_alias_word_count
+class Gazetteer:
+    """A prepared gazetteer: one arm of the scan, built once and reused
+    across any number of document batches (the reference loads its
+    shared-memory DB once at startup, src/init.cpp:362, and scans any
+    number of queries against it).
 
-    keys = alias_struct.keys() if isinstance(alias_struct, dict) else alias_struct
-    return spark.sparkContext.broadcast(
-        (alias_struct, build_token_trie(keys), frozenset(blacklist),
-         max_alias_word_count(keys))
-    )
+    Exactly one arm is set:
+
+    - ``bc``: the broadcast payload (alias structure, token trie,
+      blacklist, max alias words).  The alias structure is a dict
+      alias -> entity, or a set of names for mention-only scans;
+    - ``table``: the (alias_key[, entity]) DataFrame of the shuffle
+      arm, with ``ft_bc``, its first-token pre-filter (None when even
+      the filter is over the cap), and ``max_words``, the longest
+      alias's word count, computed here once rather than per scan."""
+
+    __slots__ = ("blacklist", "german", "bc", "table", "ft_bc", "max_words")
+
+    def __init__(self, blacklist, german=False, bc=None, table=None,
+                 ft_bc=None, max_words=0):
+        self.blacklist = frozenset(blacklist)
+        self.german = german
+        self.bc = bc
+        self.table = table
+        self.ft_bc = ft_bc
+        self.max_words = max_words
+
+    @classmethod
+    def prepare(cls, alias_entity: DataFrame, blacklist, german=False,
+                cap_bytes: int | None = None) -> Gazetteer:
+        """The size gate over an (alias_key, entity) table, in ONE job
+        (``broadcast_gate.collect_under_cap``): under the cap the rows
+        become the broadcast arm's dict; above it the table is
+        checkpointed for the shuffle arm — the reference's fixed
+        2*maxNodes Ahash assumption (src/netbase.cpp:159-228) does not
+        survive 10^8 aliases."""
+        from netbase_spark.plans.broadcast_gate import collect_under_cap
+
+        rows = collect_under_cap(alias_entity, cap_bytes)
+        if rows is None:
+            return cls.shuffle(alias_entity.localCheckpoint(), blacklist, german)
+        amap = {r["alias_key"]: r["entity"] for r in rows}
+        return cls.broadcast(alias_entity.sparkSession, amap, blacklist, german)
+
+    @classmethod
+    def broadcast(cls, spark, aliases, blacklist, german=False) -> Gazetteer:
+        """The broadcast arm over a driver-side dict alias -> entity (or
+        a set of alias names).  The trie (rules.build_token_trie) is
+        built on the driver so every executor deserializes the finished
+        structure."""
+        from netbase_spark.oracle.rules import build_token_trie, max_alias_word_count
+
+        keys = aliases.keys() if isinstance(aliases, dict) else aliases
+        bc = spark.sparkContext.broadcast(
+            (aliases, build_token_trie(keys), frozenset(blacklist),
+             max_alias_word_count(keys))
+        )
+        return cls(blacklist, german, bc=bc)
+
+    @classmethod
+    def shuffle(cls, table: DataFrame, blacklist, german=False) -> Gazetteer:
+        """The shuffle arm over an alias table with an ``alias_key``
+        column (and ``entity`` for triple scans) that NEVER reaches the
+        driver: two dimension-sized jobs, the first-token filter and the
+        max alias word count."""
+        row = table.select(
+            F.max(F.size(F.split(F.col("alias_key"), " "))).alias("m")
+        ).first()
+        return cls(blacklist, german, table=table,
+                   ft_bc=first_token_hash_filter(table),
+                   max_words=int(row["m"] or 0))
+
+    def scan(self, texts: DataFrame, triples: bool = False,
+             distinct_per_doc: bool = False) -> DataFrame:
+        """texts(doc_id, text) -> mentions(doc_id, alias_key, start_word,
+        n_words), or with ``triples`` the canonical MENTIONED_IN triples
+        (subj=entity, obj=doc_id), per-doc distinct on the entity.
+
+        Longest-match filtering (filterCandidates) is applied per
+        document, exactly as the reference does per query string.
+        ``distinct_per_doc`` dedupes (doc, alias) mentions INSIDE the
+        scan (first occurrence kept): a doc's mentions all live in its
+        own batch, so per-doc dedup IS global dedup and no downstream
+        ``dropDuplicates`` shuffle is needed."""
+        schema = TRIPLES_SCHEMA if triples else MENTIONS_SCHEMA
+        texts = texts.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+        if self.bc is not None:
+            return texts.mapInPandas(
+                _trie_scan(self.bc, self.german, triples, distinct_per_doc),
+                schema=schema,
+            )
+        keys = self.table.select(
+            F.col("alias_key").alias("probe_key"), *(["entity"] if triples else [])
+        ).where(F.col("probe_key").isNotNull() & (F.col("probe_key") != ""))
+        if not triples:
+            keys = keys.distinct()
+        probes = _probe_frame(texts, self.german, self.max_words, self.ft_bc)
+        return _per_doc_stream(
+            probes.join(keys, "probe_key"),
+            _resolve(self.blacklist, self.german, triples, distinct_per_doc),
+            schema,
+        )
+
+    def remap(self, changed: DataFrame, rep_of: dict | None) -> Gazetteer:
+        """The gazetteer after a canonical-map delta (``changed``: (node,
+        rep) rows; ``rep_of``: the same delta on the driver): alias ->
+        entity values route through it, untouched entities stay.  The
+        broadcast arm remaps its dict and REUSES the trie — the alias key
+        set is unchanged, and rebuilding it is the O(gazetteer) driver
+        cost the incremental loop exists to avoid (minutes at 10^7-10^8
+        aliases, BENCH/gazetteer_scale_probe.json); the old broadcast is
+        released, so that arm needs ``rep_of``.  The shuffle arm joins
+        the delta (size-gated broadcast) and checkpoints; its first-token
+        filter survives, since alias KEYS are unchanged.
+        Reference semantics: ``mergeNode`` rewrites ids in place and
+        later lookups see the merged node (src/netbase.cpp:2610-2638)."""
+        if self.bc is not None:
+            if rep_of is None:
+                raise ValueError("the broadcast gazetteer remaps from a driver-side delta")
+            amap, *rest = self.bc.value
+            bc = changed.sparkSession.sparkContext.broadcast(
+                ({k: rep_of.get(v, v) for k, v in amap.items()}, *rest)
+            )
+            self.bc.unpersist()
+            return Gazetteer(self.blacklist, self.german, bc=bc)
+        from netbase_spark.plans.broadcast_gate import gated_broadcast
+
+        d = gated_broadcast(
+            changed.select(F.col("node").alias("entity"), F.col("rep").alias("_r"))
+        )
+        table = (
+            self.table.join(d, "entity", "left")
+            .select("alias_key", F.coalesce("_r", "entity").alias("entity"))
+            .localCheckpoint()
+        )
+        return Gazetteer(self.blacklist, self.german, table=table,
+                         ft_bc=self.ft_bc, max_words=self.max_words)
 
 
-def _scan_candidates(text, payload, german):
-    """Run the broadcast trie over one text; returns the
-    longest-match-filtered candidate list."""
-    from netbase_spark.oracle.rules import filter_candidates, find_mentions_trie
-
-    _struct, trie, bl, maxw = payload
-    return filter_candidates(
-        find_mentions_trie(text or "", trie, bl, german, max_span_words=maxw)
-    )
-
-
-def _make_mention_scan(bc, german: bool, distinct_per_doc: bool):
-    """Build the mapInPandas scan function.  The returned closure
-    captures ONLY the broadcast handle (asserted small by
-    test_scan_closure_stays_small_at_100k_aliases)."""
+def _emit(docs, triples: bool, distinct_per_doc: bool):
+    """The one output stage of both arms: ``docs`` yields (doc_id,
+    candidates, alias -> entity map) per document; returns the pandas
+    batch of mention rows, or of MENTIONED_IN triples."""
     import pandas as pd
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payload = bc.value
+    if triples:
+        from netbase_spark.relations import MENTIONED_IN
+
+        out_s, out_o = [], []
+        for doc_id, cands, ent_of in docs:
+            seen: set[str] = set()
+            for key, _i, _n in cands:
+                ent = ent_of[key]
+                # self-loop guard: parity with rewrite_triples' subj !=
+                # obj filter on the staged path
+                if ent != doc_id and ent not in seen:
+                    seen.add(ent)
+                    out_s.append(ent)
+                    out_o.append(doc_id)
+        n = len(out_s)
+        return pd.DataFrame(
+            {
+                "subj": out_s,
+                "rel": pd.Series([MENTIONED_IN] * n, dtype="int32"),
+                "obj": out_o,
+                "rule": ["mention"] * n,
+                "doc_id": out_o,
+            }
+        )
+    out_doc, out_key, out_start, out_n = [], [], [], []
+    for doc_id, cands, _ in docs:
+        if distinct_per_doc:
+            seen = set()
+            cands = [c for c in cands if c[0] not in seen and not seen.add(c[0])]
+        for key, i, n in cands:
+            out_doc.append(doc_id)
+            out_key.append(key)
+            out_start.append(i)
+            out_n.append(n)
+    return pd.DataFrame(
+        {
+            "doc_id": out_doc,
+            "alias_key": out_key,
+            "start_word": pd.Series(out_start, dtype="int32"),
+            "n_words": pd.Series(out_n, dtype="int32"),
+        }
+    )
+
+
+def _trie_scan(bc, german: bool, triples: bool, distinct_per_doc: bool):
+    """The broadcast arm's mapInPandas body: the trie walk per doc.
+    Captures ONLY the broadcast handle and scalars."""
+
+    def scan(batches):
+        from netbase_spark.oracle.rules import filter_candidates, find_mentions_trie
+
+        amap, trie, bl, maxw = bc.value
         # NOTE: window growth must stay at the reference's MAX_WORDS —
         # capping at the longest alias token count is NOT safe because
         # punctuation-produced empty tokens collapse at normalization
         # (a 3-token window can match a 2-token alias).
         for pdf in batches:
-            out_doc, out_key, out_start, out_n = [], [], [], []
-            for doc_id, text in zip(
-                pdf["doc_id"].tolist(), pdf["text"].tolist()
-            ):
-                cands = _scan_candidates(text, payload, german)
-                if distinct_per_doc:
-                    seen: set[str] = set()
-                    cands = [
-                        c for c in cands
-                        if c[0] not in seen and not seen.add(c[0])
-                    ]
-                for key, i, n in cands:
-                    out_doc.append(doc_id)
-                    out_key.append(key)
-                    out_start.append(i)
-                    out_n.append(n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "alias_key": out_key,
-                    "start_word": pd.Series(out_start, dtype="int32"),
-                    "n_words": pd.Series(out_n, dtype="int32"),
-                }
+            yield _emit(
+                (
+                    (doc_id, filter_candidates(find_mentions_trie(
+                        text or "", trie, bl, german, max_span_words=maxw
+                    )), amap)
+                    for doc_id, text in zip(
+                        pdf["doc_id"].tolist(), pdf["text"].tolist()
+                    )
+                ),
+                triples, distinct_per_doc,
             )
 
     return scan
 
 
-def detect_mentions(
-    docs: DataFrame,
-    alias_names: list[str],
-    blacklist: set[str],
-    german: bool = False,
-    distinct_per_doc: bool = False,
-) -> DataFrame:
-    """docs(doc_id, spans) -> mentions(doc_id, alias_key, start_word, n_words)."""
-    return detect_mentions_text(
-        doc_text(docs), alias_names, blacklist, german, distinct_per_doc
-    )
-
-
-def detect_mentions_text(
-    texts: DataFrame,
-    alias_names: list[str],
-    blacklist: set[str],
-    german: bool = False,
-    distinct_per_doc: bool = False,
-) -> DataFrame:
-    """texts(doc_id, text) -> mentions(doc_id, alias_key, start_word, n_words).
-
-    Longest-match filtering (filterCandidates) is applied per document
-    inside the batch, exactly as the reference does per query string.
-
-    ``distinct_per_doc`` dedupes (doc, alias) INSIDE the scan (first
-    occurrence kept) — the linking path needs only distinct pairs, and
-    deduping here instead of a downstream ``dropDuplicates`` removes the
-    only shuffle on the doc side (a doc's mentions all live in its own
-    scan batch, so per-doc dedup IS global dedup).
-    """
-    bc = _broadcast_gazetteer(texts.sparkSession, frozenset(alias_names), blacklist)
-    scan = _make_mention_scan(bc, german, distinct_per_doc)
-    return texts.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInPandas(scan, schema=MENTIONS_SCHEMA)
-
-
-def _make_triple_scan(bc, german: bool = False):
-    """Fused scan->link->canonicalize closure; captures only the
-    broadcast handle (plus the german flag)."""
-    import pandas as pd
-
-    from netbase_spark.relations import MENTIONED_IN
-
-    def scan(batches):
-        payload = bc.value
-        amap = payload[0]  # alias -> final-entity map rides the payload
-        for pdf in batches:
-            out_s, out_o = [], []
-            for doc_id, text in zip(
-                pdf["doc_id"].tolist(), pdf["text"].tolist()
-            ):
-                cands = _scan_candidates(text, payload, german)
-                seen: set[str] = set()
-                for key, _i, _n in cands:
-                    ent = amap[key]
-                    # self-loop guard: parity with rewrite_triples'
-                    # subj != obj filter on the staged path
-                    if ent != doc_id and ent not in seen:
-                        seen.add(ent)
-                        out_s.append(ent)
-                        out_o.append(doc_id)
-            n = len(out_s)
-            yield pd.DataFrame(
-                {
-                    "subj": out_s,
-                    "rel": pd.Series([MENTIONED_IN] * n, dtype="int32"),
-                    "obj": out_o,
-                    "rule": ["mention"] * n,
-                    "doc_id": out_o,
-                }
-            )
-
-    return scan
-
-
-def prepare_triple_scan(
-    spark,
-    alias_to_entity: dict[str, str],
-    blacklist: set[str],
-):
-    """Build the fused-scan gazetteer broadcast ONCE and return the
-    handle for reuse across :func:`scan_mention_triples_prepared` calls.
-
-    Building the automaton (trie over every surface form) and shipping
-    the broadcast is O(gazetteer) work — trivial at fixture scale but
-    minutes of driver CPU + multi-GB of broadcast traffic at the
-    WikiData north-star (10^7-10^8 aliases).  A deployment constructs
-    over a STREAM of document batches against a fixed gazetteer (the
-    reference loads its shared-memory DB once at startup,
-    src/init.cpp:362, and scans any number of queries against it);
-    re-broadcasting per batch would dominate micro-batch latency, so
-    the prepared handle is the batch-loop API."""
-    return _broadcast_gazetteer(spark, dict(alias_to_entity), blacklist)
-
-
-def remap_scan_entities(spark, bc, rep_of: dict[str, str]):
-    """Refresh a :func:`prepare_triple_scan` broadcast after a canonical-
-    map delta: alias -> entity values route through ``rep_of`` (old rep
-    -> new rep); aliases whose entity is untouched keep it.  The token
-    trie is REUSED — the alias key set is unchanged, and rebuilding it
-    is the O(gazetteer) driver cost the incremental loop exists to avoid
-    (minutes at 10^7-10^8 aliases, BENCH/gazetteer_scale_probe.json).  The old broadcast is released.
-    Reference semantics: ``mergeNode`` rewrites ids in place and later
-    lookups see the merged node (src/netbase.cpp:2610-2638)."""
-    payload = bc.value
-    amap = payload[0]
-    if not isinstance(amap, dict):
-        raise ValueError("broadcast does not carry an alias->entity map")
-    new_map = {k: rep_of.get(v, v) for k, v in amap.items()}
-    new_payload = (new_map,) + tuple(payload[1:])
-    out = spark.sparkContext.broadcast(new_payload)
-    bc.unpersist()
-    return out
-
-
-def scan_mention_triples_prepared(
-    docs: DataFrame, bc, german: bool = False
-) -> DataFrame:
-    """Fused scan against a :func:`prepare_triple_scan` handle — the
-    per-batch half of the split: one mapInPandas over doc partitions,
-    zero doc-side joins/shuffles, no driver work besides plan assembly."""
-    from netbase_spark.schemas import TRIPLES_SCHEMA
-
-    scan = _make_triple_scan(bc, german)
-    return (
-        doc_text(docs)
-        .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-        .mapInPandas(scan, schema=TRIPLES_SCHEMA)
-    )
-
-
-# --- shuffle-join fallback (gazetteer too large to broadcast) ---------------
+# --- shuffle-join arm (gazetteer too large to broadcast) --------------------
 #
-# Every path above assumes the gazetteer fits one ``sc.broadcast`` — the
+# The broadcast arm assumes the gazetteer fits one ``sc.broadcast`` — the
 # reference's own assumption (Ahash sized 2*maxNodes in RAM,
 # src/netbase.cpp:159-228).  At the WikiData north-star (10^7-10^8
-# aliases) the broadcast is multi-GB; the fallback decomposes findEntites
+# aliases) the broadcast is multi-GB; this arm decomposes findEntites
 # into a JOIN so the alias table stays a partitioned DataFrame:
 #
 #   docs --mapInPandas--> probe keys (alias-set-independent enumeration,
 #        rules.enumerate_probe_keys; ~max_words probes per word)
 #        --shuffle join--> partitioned alias table (hits only survive)
-#        --groupBy(doc_id).applyInPandas--> per-doc precedence/blacklist/
+#        --doc_id repartition + mapInPandas--> per-doc precedence/blacklist/
 #        bigram resolution + longest-match filter (rules.resolve_probe_hits
-#        + filter_candidates: same rule module as the broadcast path).
+#        + filter_candidates: same rule module as the broadcast arm).
 #
 # Cost: one corpus-sized shuffle (probes) + one doc_id shuffle
-# (resolution) that the broadcast path avoids — the price of an unbounded
-# gazetteer.  Both paths are property-tested identical
-# (tests/test_mention_shuffle.py); plans/synth_pipeline.scan_artifacts
-# picks per input size via plans.broadcast_gate.
+# (resolution) that the broadcast arm avoids — the price of an unbounded
+# gazetteer.  Both arms are property-tested identical
+# (tests/test_mention_shuffle.py).
 
 _PROBE_SCHEMA = (
     "doc_id string, variant string, probe_key string, "
@@ -291,24 +309,22 @@ _PROBE_SCHEMA = (
 )
 
 
-def first_token_hash_filter(
-    aliases: DataFrame, alias_col: str = "alias_key", cap_bytes: int | None = None
-):
+def first_token_hash_filter(aliases: DataFrame, cap_bytes: int | None = None):
     """Executor-side pre-filter for the shuffle-join scan: the CRC-32
-    hashes of every alias's FIRST token, as an ``sc.broadcast`` sorted
-    int64 numpy array (8 bytes/entry — it fits a broadcast long after
-    the full alias->entity table doesn't; distinct first tokens run
-    10-100x fewer than aliases on real gazetteers).
+    hashes of every ``alias_key``'s FIRST token, as an ``sc.broadcast``
+    sorted int64 numpy array (8 bytes/entry — it fits a broadcast long
+    after the full alias->entity table doesn't; distinct first tokens
+    run 10-100x fewer than aliases on real gazetteers).
 
     Soundness: the join matches ``probe_key == alias_key``, which
     implies equal first tokens, which implies equal CRC-32 (JVM
     ``F.crc32`` and Python ``zlib.crc32`` are both standard CRC-32 over
     the UTF-8 bytes — parity pinned by test).  A hash collision only
     lets a doomed probe through to the join; it can never drop a live
-    one.  Returns None when even the hash set exceeds the cap (callers
-    then shuffle unfiltered, the previous behavior).
+    one.  Returns None when even the hash set exceeds the cap (the scan
+    then shuffles unfiltered).
 
-    This is the probe-side answer to the shuffle path's cost gap vs the
+    This is the probe-side answer to the shuffle arm's cost gap vs the
     broadcast scan: ``enumerate_probe_keys`` emits ~max_words probes
     per token, nearly all of which miss the alias table; dropping them
     executor-side cuts the corpus-sized probe shuffle to the plausible
@@ -319,16 +335,11 @@ def first_token_hash_filter(
 
     spark = aliases.sparkSession
     cap_rows = broadcast_cap_bytes(spark, cap_bytes) // 8
+    key = F.col("alias_key")
     h = (
-        aliases.where(
-            F.col(alias_col).isNotNull() & (F.col(alias_col) != "")
-        )
+        aliases.where(key.isNotNull() & (key != ""))
         .select(
-            F.crc32(
-                F.encode(
-                    F.element_at(F.split(F.col(alias_col), " ", 2), 1), "UTF-8"
-                )
-            ).alias("h")
+            F.crc32(F.encode(F.element_at(F.split(key, " ", 2), 1), "UTF-8")).alias("h")
         )
         .distinct()
     )
@@ -339,19 +350,10 @@ def first_token_hash_filter(
     return spark.sparkContext.broadcast(arr)
 
 
-def _max_alias_words(aliases: DataFrame, alias_col: str) -> int:
-    """max word count over the alias table — the scalar pruning hint of
-    rules.max_alias_word_count, computed as one cheap agg job."""
-    row = aliases.select(
-        F.max(F.size(F.split(F.col(alias_col), " "))).alias("m")
-    ).first()
-    return int(row["m"]) if row and row["m"] is not None else 0
-
-
 def _probe_frame(
     texts: DataFrame, german: bool, max_span_words: int | None, ft_bc=None
 ):
-    """(doc_id, text) -> findEntites probe keys, one row each.
+    """(doc_id string, text) -> findEntites probe keys, one row each.
     Alias-set-independent by default; with ``ft_bc`` (a
     :func:`first_token_hash_filter` broadcast) probes whose first token
     hashes outside the alias first-token set are dropped BEFORE the
@@ -402,26 +404,32 @@ def _probe_frame(
                 }
             )
 
-    return texts.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInPandas(gen, schema=_PROBE_SCHEMA)
+    return texts.mapInPandas(gen, schema=_PROBE_SCHEMA)
 
 
-def _resolve_rows(pdf, blacklist, german, distinct_per_doc):
-    """One doc's join-surviving probe rows -> final candidate list."""
-    from netbase_spark.oracle.rules import filter_candidates, resolve_probe_hits
+def _resolve(blacklist, german: bool, triples: bool, distinct_per_doc: bool):
+    """The shuffle arm's per-batch body: each doc's join-surviving probe
+    rows -> its candidate list (and, for triples, its alias -> entity
+    map from the joined ``entity`` column) -> :func:`_emit`."""
 
-    rows = [
-        (v, k, int(i), int(n))
-        for v, k, i, n in zip(
-            pdf["variant"], pdf["probe_key"], pdf["start_word"], pdf["n_words"]
-        )
-    ]
-    cands = filter_candidates(resolve_probe_hits(rows, blacklist, german))
-    if distinct_per_doc:
-        seen: set[str] = set()
-        cands = [c for c in cands if c[0] not in seen and not seen.add(c[0])]
-    return cands
+    def resolve(pdf):
+        from netbase_spark.oracle.rules import filter_candidates, resolve_probe_hits
+
+        def docs():
+            for doc_id, g in pdf.groupby("doc_id", sort=False):
+                rows = [
+                    (v, k, int(i), int(n))
+                    for v, k, i, n in zip(
+                        g["variant"], g["probe_key"], g["start_word"], g["n_words"]
+                    )
+                ]
+                ent_of = dict(zip(g["probe_key"], g["entity"])) if triples else None
+                cands = filter_candidates(resolve_probe_hits(rows, blacklist, german))
+                yield doc_id, cands, ent_of
+
+        return _emit(docs(), triples, distinct_per_doc)
+
+    return resolve
 
 
 def _per_doc_stream(hits: DataFrame, batch_fn, out_schema) -> DataFrame:
@@ -460,105 +468,41 @@ def _per_doc_stream(hits: DataFrame, batch_fn, out_schema) -> DataFrame:
     )
 
 
+def detect_mentions(
+    docs: DataFrame,
+    alias_names: list[str],
+    blacklist: set[str],
+    german: bool = False,
+    distinct_per_doc: bool = False,
+) -> DataFrame:
+    """docs(doc_id, spans) -> mentions(doc_id, alias_key, start_word, n_words)."""
+    return detect_mentions_text(
+        doc_text(docs), alias_names, blacklist, german, distinct_per_doc
+    )
+
+
+def detect_mentions_text(
+    texts: DataFrame,
+    alias_names: list[str],
+    blacklist: set[str],
+    german: bool = False,
+    distinct_per_doc: bool = False,
+) -> DataFrame:
+    """texts(doc_id, text) -> mentions, on the broadcast arm over the
+    driver-side ``alias_names`` (:meth:`Gazetteer.scan`)."""
+    gaz = Gazetteer.broadcast(texts.sparkSession, frozenset(alias_names), blacklist, german)
+    return gaz.scan(texts, distinct_per_doc=distinct_per_doc)
+
+
 def detect_mentions_shuffle(
     texts: DataFrame,
     aliases: DataFrame,
     blacklist: set[str],
     german: bool = False,
     distinct_per_doc: bool = False,
-    alias_col: str = "alias_key",
-    ft_bc="auto",
 ) -> DataFrame:
-    """Shuffle-join twin of :func:`detect_mentions_text`: ``aliases`` is
-    a DataFrame with a normalized-surface-form column ``alias_col`` that
-    NEVER reaches the driver.  Identical output (property-tested).
-
-    ``ft_bc``: first-token pre-filter — ``"auto"`` builds one from the
-    alias table (:func:`first_token_hash_filter`; two dimension-sized
-    jobs), ``None`` disables it, or pass a prepared broadcast handle to
-    amortize the build across batches."""
-    bl = frozenset(blacklist)
-    maxw = _max_alias_words(aliases, alias_col)
-    if ft_bc == "auto":
-        ft_bc = first_token_hash_filter(aliases, alias_col)
-    probes = _probe_frame(texts, german, maxw, ft_bc)
-    akeys = (
-        aliases.select(F.col(alias_col).alias("probe_key"))
-        .where(F.col("probe_key").isNotNull() & (F.col("probe_key") != ""))
-        .distinct()
-    )
-    hits = probes.join(akeys, "probe_key")
-
-    def resolve_batch(pdf):
-        import pandas as pd
-
-        d, k, s, n = [], [], [], []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            for key, i, nw in _resolve_rows(g, bl, german, distinct_per_doc):
-                d.append(doc_id)
-                k.append(key)
-                s.append(i)
-                n.append(nw)
-        return pd.DataFrame(
-            {
-                "doc_id": d,
-                "alias_key": k,
-                "start_word": pd.Series(s, dtype="int32"),
-                "n_words": pd.Series(n, dtype="int32"),
-            }
-        )
-
-    return _per_doc_stream(hits, resolve_batch, MENTIONS_SCHEMA)
-
-
-def scan_mention_triples_shuffle(
-    docs: DataFrame,
-    alias_entity: DataFrame,
-    blacklist: set[str],
-    german: bool = False,
-    ft_bc=None,
-) -> DataFrame:
-    """Shuffle-join twin of :func:`scan_mention_triples_prepared`:
-    ``alias_entity`` is a DataFrame (alias_key, entity) — the rank-1 x
-    canonical composition of :func:`~netbase_spark.operators.linking.
-    alias_entity_table` — joined instead of driver-collected.  Identical
-    triples (property-tested).  ``ft_bc`` is a prepared
-    :func:`first_token_hash_filter` handle (or None: no pre-filter),
-    built once per gazetteer, not per batch."""
-    from netbase_spark.schemas import TRIPLES_SCHEMA
-
-    bl = frozenset(blacklist)
-    maxw = _max_alias_words(alias_entity, "alias_key")
-    probes = _probe_frame(doc_text(docs), german, maxw, ft_bc)
-    amap = alias_entity.select(
-        F.col("alias_key").alias("probe_key"), "entity"
-    ).where(F.col("probe_key").isNotNull() & (F.col("probe_key") != ""))
-    hits = probes.join(amap, "probe_key")
-
-    def resolve_batch(pdf):
-        import pandas as pd
-
-        from netbase_spark.relations import MENTIONED_IN
-
-        out_s, out_o = [], []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            ent_of = dict(zip(g["probe_key"], g["entity"]))
-            seen: set[str] = set()
-            for key, _i, _n in _resolve_rows(g, bl, german, distinct_per_doc=False):
-                ent = ent_of[key]
-                if ent != doc_id and ent not in seen:  # self-loop guard parity
-                    seen.add(ent)
-                    out_s.append(ent)
-                    out_o.append(doc_id)
-        n = len(out_s)
-        return pd.DataFrame(
-            {
-                "subj": out_s,
-                "rel": pd.Series([MENTIONED_IN] * n, dtype="int32"),
-                "obj": out_o,
-                "rule": ["mention"] * n,
-                "doc_id": out_o,
-            }
-        )
-
-    return _per_doc_stream(hits, resolve_batch, TRIPLES_SCHEMA)
+    """Shuffle-arm twin of :func:`detect_mentions_text`: ``aliases`` is
+    a DataFrame whose normalized-surface-form column ``alias_key``
+    NEVER reaches the driver.  Identical output (property-tested)."""
+    gaz = Gazetteer.shuffle(aliases, blacklist, german)
+    return gaz.scan(texts, distinct_per_doc=distinct_per_doc)

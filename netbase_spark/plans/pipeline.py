@@ -147,9 +147,7 @@ class Pipeline:
             "mention_triples",
             lambda: scan_batch(
                 docs,
-                scan_artifacts(
-                    self.spark, aliases, mapping, blacklist, german
-                ),
+                scan_artifacts(aliases, mapping, blacklist, german),
             ),
             write=write_triples,
         )

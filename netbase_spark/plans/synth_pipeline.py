@@ -12,11 +12,10 @@ Both drivers of the construction use these functions and nothing else:
 The steps:
 
 - :func:`label_side` — dissect ∪ alias-instance edges ∪ raw triples;
-- :func:`scan_artifacts` — the scan preparation: the SEO rule, alias ->
-  rank-1 entity -> canonical rep composition, and the
-  broadcast-vs-shuffle size gate;
-- :func:`scan_batch` — the doc side: the one dispatch between the
-  broadcast scan and the shuffle-join scan.
+- :func:`scan_artifacts` — the scan preparation: the SEO rule and the
+  alias -> rank-1 entity -> canonical rep composition, prepared as one
+  ``mentions.Gazetteer`` (which owns the broadcast-vs-shuffle choice);
+- :func:`scan_batch` — the doc side: one gazetteer scan per batch.
 """
 
 from __future__ import annotations
@@ -68,31 +67,27 @@ class ConstructionArtifacts:
 
     Everything here is label-side-only (gazetteer-bounded, never
     corpus-bounded): the canonicalized label triples, the union-find
-    mapping, and the fused-scan structure — either a prepared
-    ``sc.broadcast`` handle (under the broadcast cap) or the
-    checkpointed alias->entity DataFrame (above it, shuffle-join path).
-    The reference's analog is its shared-memory DB loaded once at
-    startup (src/init.cpp:362); a Spark deployment constructing a
-    10^12-doc corpus in batches (or a Structured Streaming micro-batch
-    loop) must not rebuild + re-broadcast a multi-GB automaton per
-    batch — at 10^7-10^8 aliases the rebuild would dominate batch
-    latency.  ``label_triples`` is None when the staged Pipeline builds
-    them in its own stage."""
+    mapping, and the prepared ``mentions.Gazetteer`` (which owns the
+    broadcast-vs-shuffle scan choice).  The reference's analog is its
+    shared-memory DB loaded once at startup (src/init.cpp:362); a Spark
+    deployment constructing a 10^12-doc corpus in batches (or a
+    Structured Streaming micro-batch loop) must not rebuild +
+    re-broadcast a multi-GB automaton per batch — at 10^7-10^8 aliases
+    the rebuild would dominate batch latency.  ``label_triples`` is
+    None when the staged Pipeline builds them in its own stage."""
 
-    __slots__ = (
-        "label_triples", "mapping", "scan_bc", "alias_entity", "blacklist",
-        "ft_bc", "german",
-    )
+    __slots__ = ("label_triples", "mapping", "gazetteer")
 
-    def __init__(self, label_triples, mapping, scan_bc, alias_entity,
-                 blacklist, ft_bc=None, german=False):
+    def __init__(self, label_triples, mapping, gazetteer):
         self.label_triples = label_triples
         self.mapping = mapping
-        self.scan_bc = scan_bc          # prepared broadcast handle, or None
-        self.alias_entity = alias_entity  # DataFrame fallback, or None
-        self.blacklist = blacklist
-        self.ft_bc = ft_bc  # prepared first-token filter (shuffle path)
-        self.german = german
+        self.gazetteer = gazetteer
+
+    @property
+    def scan_bc(self):
+        """The broadcast arm's handle, or None on the shuffle arm
+        (perfbench reads it for the payload size)."""
+        return self.gazetteer.bc
 
 
 def label_side(
@@ -116,7 +111,6 @@ def label_side(
 
 
 def scan_artifacts(
-    spark: SparkSession,
     aliases: DataFrame,
     mapping: DataFrame,
     blacklist: set[str],
@@ -130,57 +124,26 @@ def scan_artifacts(
     The scan matches label/altLabel surface forms only: SEO slugs are
     lookup aliases, not scan surface forms.  Each surviving alias
     resolves to its rank-1 entity, then to that entity's canonical rep
-    (``linking.alias_entity_table``).  The size gate is a ONE-job
-    CollectLimit probe (``broadcast_gate.collect_under_cap``): under the
-    cap the composed alias->entity map becomes one prepared broadcast
-    (the doc side then needs no join and no shuffle); above it the
-    table stays a checkpointed DataFrame for the probe-key shuffle join,
-    with its first-token pre-filter prepared once — the reference's
-    fixed 2*maxNodes Ahash assumption (src/netbase.cpp:159-228) does not
-    survive 10^8 aliases."""
+    (``linking.alias_entity_table``); ``mentions.Gazetteer.prepare``
+    then picks the broadcast or the shuffle arm from the table's size."""
     from pyspark.sql import functions as F
 
     from netbase_spark.operators.linking import alias_entity_table
-    from netbase_spark.operators.mentions import (
-        first_token_hash_filter,
-        prepare_triple_scan,
-    )
-    from netbase_spark.plans.broadcast_gate import collect_under_cap
+    from netbase_spark.operators.mentions import Gazetteer
 
     label_forms = aliases.where(~F.col("source").eqNullSafe("seo"))
-    ae = alias_entity_table(label_forms, mapping)
-    rows = collect_under_cap(ae, cap_bytes)
-    if rows is not None:
-        amap = {r["alias_key"]: r["entity"] for r in rows}
-        bc = prepare_triple_scan(spark, amap, blacklist)
-        return ConstructionArtifacts(
-            label_triples, mapping, bc, None, blacklist, german=german
-        )
-    ae = ae.localCheckpoint()
-    return ConstructionArtifacts(
-        label_triples, mapping, None, ae, blacklist,
-        ft_bc=first_token_hash_filter(ae, "alias_key"), german=german,
+    gazetteer = Gazetteer.prepare(
+        alias_entity_table(label_forms, mapping), blacklist, german, cap_bytes
     )
+    return ConstructionArtifacts(label_triples, mapping, gazetteer)
 
 
 def scan_batch(docs: DataFrame, artifacts: ConstructionArtifacts) -> DataFrame:
     """Canonical, per-doc-distinct mention triples of one document
-    batch: the broadcast scan (one mapInPandas over doc partitions, no
-    join, no shuffle) or, past the broadcast cap, the shuffle join
-    against the alias->entity table."""
-    from netbase_spark.operators.mentions import (
-        scan_mention_triples_prepared,
-        scan_mention_triples_shuffle,
-    )
+    batch, on whichever arm the artifacts' gazetteer holds."""
+    from netbase_spark.operators.mentions import doc_text
 
-    if artifacts.scan_bc is not None:
-        return scan_mention_triples_prepared(
-            docs, artifacts.scan_bc, artifacts.german
-        )
-    return scan_mention_triples_shuffle(
-        docs, artifacts.alias_entity, artifacts.blacklist, artifacts.german,
-        ft_bc=artifacts.ft_bc,
-    )
+    return artifacts.gazetteer.scan(doc_text(docs), triples=True)
 
 
 def build_artifacts(
@@ -225,7 +188,7 @@ def build_artifacts(
     # collides with its own slug keeps its label source either way)
     aliases = build_alias_table(labels_df, with_seo=False)
     return scan_artifacts(
-        spark, aliases, mapping, blacklist, german, cap_bytes, label_triples
+        aliases, mapping, blacklist, german, cap_bytes, label_triples
     )
 
 

@@ -87,11 +87,11 @@ def apply_merges(
     2. the on-disk triple table: only the data FILES holding rows that
        touch re-rooted nodes are rewritten
        (:func:`_surgical_recanonicalize`, a ``replace_files`` commit);
-    3. dimension artifacts: the gazetteer broadcast's alias->entity
-       values remap through the (tiny, collected) rep delta — the
-       automaton is reused, never rebuilt — and the shuffle-path
-       alias_entity table takes the same remap as a broadcast join, so
-       FUTURE batches link straight to the new representatives.
+    3. dimension artifacts: the label triples and the gazetteer's
+       alias->entity values remap through the rep delta
+       (``mentions.Gazetteer.remap``: the automaton is reused, never
+       rebuilt), so FUTURE batches link straight to the new
+       representatives.
 
     ``table_dir`` is a versioned table (plans/versioned); ``versioned``
     stays only for callers that pass it, and ``False`` raises
@@ -106,20 +106,13 @@ def apply_merges(
     """
     import time
 
-    from pyspark.sql import functions as F
-
     from netbase_spark.operators.canonicalize import (
         _merge_mapping_spark,
         mapping_delta,
         merge_mapping_rows,
         rewrite_triples,
     )
-    from netbase_spark.operators.mentions import remap_scan_entities
-    from netbase_spark.plans.broadcast_gate import (
-        collect_under_cap,
-        gated_broadcast,
-        local_frame,
-    )
+    from netbase_spark.plans.broadcast_gate import collect_under_cap, local_frame
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.plans.table_io import log_metrics
 
@@ -145,7 +138,7 @@ def apply_merges(
         # commit so a too-large delta fails with the on-disk state
         # untouched (raising after the rewrite would leave a merged
         # table with stale artifacts and no handle to recover)
-        if artifacts.scan_bc is not None:
+        if artifacts.gazetteer.bc is not None:
             raise ValueError(
                 "mapping delta exceeds the driver-collect cap; rebuild "
                 "artifacts via build_artifacts (shuffle path) instead of "
@@ -172,27 +165,8 @@ def apply_merges(
     label_triples = rewrite_triples(
         artifacts.label_triples, changed
     ).localCheckpoint()
-    scan_bc = artifacts.scan_bc
-    alias_entity = artifacts.alias_entity
-    if scan_bc is not None:
-        # rep_rows was collected (and gated) before the table commit
-        scan_bc = remap_scan_entities(spark, scan_bc, rep_of)
-    if alias_entity is not None:
-        d = gated_broadcast(
-            changed.select(F.col("node").alias("entity"), F.col("rep").alias("_r"))
-        )
-        alias_entity = (
-            alias_entity.join(d, "entity", "left")
-            .select(
-                "alias_key", F.coalesce("_r", "entity").alias("entity")
-            )
-            .localCheckpoint()
-        )
-    # the first-token filter survives a merge untouched: alias KEYS are
-    # unchanged, only their entity targets moved
     return ConstructionArtifacts(
-        label_triples, new_map, scan_bc, alias_entity, artifacts.blacklist,
-        ft_bc=artifacts.ft_bc, german=artifacts.german,
+        label_triples, new_map, artifacts.gazetteer.remap(changed, rep_of)
     )
 
 

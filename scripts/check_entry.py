@@ -45,8 +45,8 @@ def main():
     from netbase_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark(app="check_entry", cpus=8, shuffle_partitions=8,
-                      driver_memory="8g", extra={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(app="check_entry", shuffle_partitions=8,
+                      extra={"spark.ui.showConsoleProgress": "false"})
 
     con = duckdb.connect()
     for t in TABLES:

@@ -2,9 +2,12 @@
 """Shuffle-scan scale probe (round-3 verdict item 2): at 10^6..10^7
 synthetic aliases — past the broadcast gate's comfort zone — measure
 the shuffle-join mention scan with and without the first-token CRC
-pre-filter (operators/mentions.first_token_hash_filter):
+pre-filter (operators/mentions.first_token_hash_filter, prepared by
+``Gazetteer.shuffle``; the unfiltered gazetteer is prepared under a
+1-byte broadcast cap, where the filter does not fit):
 
-- filter build wall time and broadcast payload bytes (8 B/entry: the
+- gazetteer build wall time (the filter and the max alias word
+  count) and the filter's broadcast payload bytes (8 B/entry: the
   filter fits a broadcast long after the full alias->entity table
   doesn't);
 - probe rows shuffled with vs without the filter (the corpus-sized
@@ -96,12 +99,8 @@ def docs_df(spark, n_aliases: int):
 
 def main():
     sizes = [int(a) for a in sys.argv[1:]] or [1_000_000, 10_000_000]
-    from netbase_spark.operators.mentions import (
-        _max_alias_words,
-        _probe_frame,
-        detect_mentions_shuffle,
-        first_token_hash_filter,
-    )
+    from netbase_spark.operators.mentions import Gazetteer, _probe_frame
+    from netbase_spark.plans.broadcast_gate import CONF_KEY
     from netbase_spark.session import get_spark
 
     spark = get_spark(
@@ -120,22 +119,24 @@ def main():
         rec = {"aliases": n_alias, "docs": N_DOCS, "doc_tokens": DOC_TOKENS}
 
         t0 = time.monotonic()
-        ft = first_token_hash_filter(aliases, "alias_key")
-        rec["filter_build_s"] = round(time.monotonic() - t0, 2)
+        gaz = Gazetteer.shuffle(aliases, frozenset())
+        rec["gazetteer_build_s"] = round(time.monotonic() - t0, 2)
+        ft = gaz.ft_bc
         rec["filter_entries"] = int(ft.value.size) if ft is not None else None
         rec["filter_bytes"] = int(ft.value.nbytes) if ft is not None else None
+        spark.conf.set(CONF_KEY, "1")
+        bare = Gazetteer.shuffle(aliases, frozenset())
+        spark.conf.unset(CONF_KEY)
 
-        maxw = _max_alias_words(aliases, "alias_key")
+        maxw = gaz.max_words
         rec["probe_rows_unfiltered"] = _probe_frame(texts, False, maxw).count()
         rec["probe_rows_filtered"] = _probe_frame(texts, False, maxw, ft).count()
 
-        for tag, kw in (("nofilter", {"ft_bc": None}), ("filter", {"ft_bc": ft})):
+        for tag, g in (("nofilter", bare), ("filter", gaz)):
             best = None
             for _ in range(3):
                 t0 = time.monotonic()
-                nrows = detect_mentions_shuffle(
-                    texts, aliases, frozenset(), **kw
-                ).count()
+                nrows = g.scan(texts).count()
                 dt = time.monotonic() - t0
                 best = dt if best is None else min(best, dt)
             rec[f"scan_s_{tag}"] = round(best, 2)

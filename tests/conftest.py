@@ -5,5 +5,5 @@ import pytest
 def spark():
     from netbase_spark.session import get_spark
 
-    s = get_spark(app="netbase_spark_tests", cpus=8, shuffle_partitions=8, driver_memory="8g")
+    s = get_spark(app="netbase_spark_tests", shuffle_partitions=8)
     yield s

@@ -105,6 +105,7 @@ def test_apply_merges_builds_no_python_rdd(spark, tmp_path, monkeypatch):
     construct one)."""
     from pyspark.rdd import RDD, PipelinedRDD
 
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming.construct import apply_merges
@@ -115,7 +116,7 @@ def test_apply_merges_builds_no_python_rdd(spark, tmp_path, monkeypatch):
     arts = ConstructionArtifacts(
         local_frame(spark, [], TRIPLE_DDL),
         local_frame(spark, [], "node string, rep string"),
-        None, None, frozenset(),
+        Gazetteer.broadcast(spark, {}, ()),
     )
     late = local_frame(spark, [("E1", "E0"), ("E3", "E2")], "src string, dst string")
 
@@ -214,6 +215,17 @@ def _over_cap(df):
     return over_cap(df, ["fp"], 1)
 
 
+def _scan(cap, triples):
+    def run(df):
+        from netbase_spark.operators.mentions import Gazetteer
+
+        ae = local_frame(df.sparkSession, [("new york", "Q1"), ("tesla", "Q2")],
+                         "alias_key string, entity string")
+        return Gazetteer.prepare(ae, set(), cap_bytes=cap).scan(df, triples=triples)
+
+    return run
+
+
 def _merge_mapping(driver_threshold):
     def run(df):
         from netbase_spark.operators.canonicalize import merge_mapping
@@ -263,6 +275,8 @@ _MINSIGS = ([(1, 1, 2, 3, 4), (2, 1, 2, 3, 4)],
 _FPS = ([(1, 10), (2, 10), (1, 11), (2, 11)], "doc_id bigint, fp bigint")
 _TAXO = ([("a", SUPER_CLASS, "b"), ("b", SUPER_CLASS, "c")],
          "subj string, rel int, obj string")
+_TEXTS = ([("d1", "New York and Tesla"), ("d2", "a tesla")],
+          "doc_id string, text string")
 
 
 @pytest.mark.parametrize("op, data", [
@@ -285,12 +299,18 @@ _TAXO = ([("a", SUPER_CLASS, "b"), ("b", SUPER_CLASS, "c")],
     (_winnow_pairs, _FPS),
     (_bucketed, _VECS),
     (_over_cap, _FPS),
+    (_scan(None, False), _TEXTS),
+    (_scan(1, False), _TEXTS),
+    (_scan(None, True), _TEXTS),
+    (_scan(1, True), _TEXTS),
 ], ids=["cc", "isa_closure", "pagerank", "pagerank_resume",
         "cosine_neardup_pairs", "ann_lsh_buckets", "ann_lsh_buckets_keep_vec",
         "merge_mapping_driver", "merge_mapping_spark", "mapping_delta",
         "rewrite_triples", "recanonicalize_delta", "fresh_triples",
         "ivf_topk", "simhash_candidates", "minhash_lsh_pairs",
-        "winnow_overlap_pairs", "cosine_neardup_bucketed", "over_cap"])
+        "winnow_overlap_pairs", "cosine_neardup_bucketed", "over_cap",
+        "mentions_broadcast", "mentions_shuffle", "mention_triples_broadcast",
+        "mention_triples_shuffle"])
 def test_empty_input_matches_nonempty_schema(spark, op, data):
     rows, ddl = data
     full = op(local_frame(spark, rows, ddl))

@@ -15,6 +15,7 @@ import pytest
 
 from netbase_spark.data.fixtures import blacklist_fixture, labels_fixture
 from netbase_spark.data.synth import docs_df
+from netbase_spark.plans.broadcast_gate import local_frame
 from netbase_spark.oracle.rules import (
     enumerate_probe_keys,
     filter_candidates_naive,
@@ -23,6 +24,10 @@ from netbase_spark.oracle.rules import (
     norm_name,
     resolve_probe_hits,
 )
+from test_local_frame import _jobs
+from test_merge_arms import cap_bytes
+
+MAP_ROWS = ([("Q70", "Q7"), ("Q71", "Q7")], "node string, rep string")
 
 
 def test_probe_decomposition_matches_naive_scan():
@@ -146,7 +151,8 @@ def fixture_scan_inputs(spark):
     from netbase_spark.schemas import LABELS_SCHEMA
 
     labels = labels_fixture()
-    labels_df = spark.createDataFrame(
+    labels_df = local_frame(
+        spark,
         [(r["key"], r["label"], r["label_type"], r["lang"]) for r in labels],
         LABELS_SCHEMA,
     )
@@ -156,6 +162,8 @@ def fixture_scan_inputs(spark):
 
 
 def test_shuffle_scan_matches_broadcast_scan(spark, fixture_scan_inputs):
+    from pyspark.sql import functions as F
+
     from netbase_spark.operators.mentions import (
         detect_mentions_shuffle,
         detect_mentions_text,
@@ -163,12 +171,11 @@ def test_shuffle_scan_matches_broadcast_scan(spark, fixture_scan_inputs):
 
     _, texts, aliases = fixture_scan_inputs
     names = [r["name_norm"] for r in aliases.select("name_norm").distinct().collect()]
+    keys = aliases.select(F.col("name_norm").alias("alias_key"))
     bl = blacklist_fixture()
     for distinct in (False, True):
         want_df = detect_mentions_text(texts, names, bl, distinct_per_doc=distinct)
-        got_df = detect_mentions_shuffle(
-            texts, aliases, bl, distinct_per_doc=distinct, alias_col="name_norm"
-        )
+        got_df = detect_mentions_shuffle(texts, keys, bl, distinct_per_doc=distinct)
         want = sorted(map(tuple, want_df.collect()))
         got = sorted(map(tuple, got_df.collect()))
         assert got == want
@@ -180,29 +187,15 @@ def test_shuffle_triple_scan_matches_broadcast(spark, fixture_scan_inputs):
         alias_canonical_map,
         alias_entity_table,
     )
-    from netbase_spark.operators.mentions import (
-        prepare_triple_scan,
-        scan_mention_triples_prepared,
-        scan_mention_triples_shuffle,
-    )
+    from netbase_spark.operators.mentions import Gazetteer
 
-    docs, _, aliases = fixture_scan_inputs
-    mapping = spark.createDataFrame(
-        [("Q70", "Q7"), ("Q71", "Q7")], "node string, rep string"
-    )
+    _, texts, aliases = fixture_scan_inputs
+    mapping = local_frame(spark, *MAP_ROWS)
     bl = blacklist_fixture()
-    bc = prepare_triple_scan(spark, alias_canonical_map(aliases, mapping), bl)
-    want = sorted(
-        map(tuple, scan_mention_triples_prepared(docs, bc).collect())
-    )
-    got = sorted(
-        map(
-            tuple,
-            scan_mention_triples_shuffle(
-                docs, alias_entity_table(aliases, mapping), bl
-            ).collect(),
-        )
-    )
+    on_bc = Gazetteer.broadcast(spark, alias_canonical_map(aliases, mapping), bl)
+    on_join = Gazetteer.shuffle(alias_entity_table(aliases, mapping), bl)
+    want = sorted(map(tuple, on_bc.scan(texts, triples=True).collect()))
+    got = sorted(map(tuple, on_join.scan(texts, triples=True).collect()))
     assert got == want
     assert want, "fixture corpus produced no mention triples"
 
@@ -214,9 +207,7 @@ def test_alias_entity_table_matches_driver_dict(spark, fixture_scan_inputs):
     )
 
     _, _, aliases = fixture_scan_inputs
-    mapping = spark.createDataFrame(
-        [("Q70", "Q7"), ("Q71", "Q7")], "node string, rep string"
-    )
+    mapping = local_frame(spark, *MAP_ROWS)
     want = alias_canonical_map(aliases, mapping)
     got = {
         r["alias_key"]: r["entity"]
@@ -230,15 +221,20 @@ def test_gated_scan_forced_overflow(spark):
     cap=1 byte forces the shuffle-join plan against the alias->entity
     table; both emit identical canonical triples through a non-empty
     canonical map, and the shuffle plan really is shuffle-side (its
-    explain has a join, the broadcast one has none)."""
+    explain has a join, the broadcast one has none).  Assembling either
+    scan runs no Spark job: the shuffle arm's max alias word count is
+    computed once, when the gazetteer is prepared."""
     from netbase_spark.plans.synth_pipeline import build_artifacts, scan_batch
 
     docs = docs_df(spark, 80, seed=11, partitions=4)
     big = build_artifacts(spark, cap_bytes=1 << 40)
     small = build_artifacts(spark, cap_bytes=1)
-    assert big.scan_bc is not None and small.alias_entity is not None
+    assert big.scan_bc is not None and small.gazetteer.table is not None
+    assert small.scan_bc is None and small.gazetteer.max_words > 0
     assert big.mapping.count() > 0, "canonical map is empty — test is vacuous"
-    b, s = scan_batch(docs, big), scan_batch(docs, small)
+    b, jobs_b = _jobs(spark, lambda: scan_batch(docs, big))
+    s, jobs_s = _jobs(spark, lambda: scan_batch(docs, small))
+    assert jobs_b == jobs_s == 0
     assert "Join" not in b._jdf.queryExecution().executedPlan().toString()
     assert "Join" in s._jdf.queryExecution().executedPlan().toString()
     want = sorted(map(tuple, b.collect()))
@@ -275,7 +271,7 @@ def test_broadcast_gate_estimates(spark):
     assert "Broadcast" in hinted._jdf.queryExecution().executedPlan().toString()
     assert hinted.count() == unhinted.count() == 100
     # empty table: zero estimate, fits any positive cap
-    empty = spark.createDataFrame([], "id long")
+    empty = local_frame(spark, [], "id long")
     assert sampled_size_bytes(empty) == (0, 0)
     # one-job collect probe: rows under the cap, None above it
     from netbase_spark.plans.broadcast_gate import collect_under_cap
@@ -289,18 +285,18 @@ def test_broadcast_gate_estimates(spark):
 def test_first_token_prefilter_prunes_but_preserves(spark):
     """The CRC-32 first-token pre-filter drops most probes before the
     shuffle (pure pruning) while the scan output stays identical to the
-    unfiltered path; JVM crc32 and zlib.crc32 agree (soundness of the
-    two-sided hash)."""
+    unfiltered path (a gazetteer prepared under a 1-byte cap, where the
+    filter does not fit); JVM crc32 and zlib.crc32 agree (soundness of
+    the two-sided hash)."""
     import zlib
 
     from pyspark.sql import functions as F
 
     from netbase_spark.operators.mentions import (
-        _max_alias_words,
+        Gazetteer,
         _probe_frame,
         detect_mentions_shuffle,
         doc_text,
-        first_token_hash_filter,
     )
 
     docs = docs_df(spark, 30, seed=5, partitions=2)
@@ -313,7 +309,8 @@ def test_first_token_prefilter_prunes_but_preserves(spark):
     ).distinct()
     bl = blacklist_fixture()
 
-    ft = first_token_hash_filter(aliases, "alias_key")
+    gaz = Gazetteer.shuffle(aliases, bl)
+    ft = gaz.ft_bc
     assert ft is not None
     # JVM/zlib parity on actual alias first tokens
     toks = [
@@ -328,12 +325,13 @@ def test_first_token_prefilter_prunes_but_preserves(spark):
         j = int(np.searchsorted(arr, h))
         assert j < arr.size and arr[j] == h, t
 
-    maxw = _max_alias_words(aliases, "alias_key")
-    n_all = _probe_frame(texts, False, maxw).count()
-    n_filtered = _probe_frame(texts, False, maxw, ft).count()
+    n_all = _probe_frame(texts, False, gaz.max_words).count()
+    n_filtered = _probe_frame(texts, False, gaz.max_words, ft).count()
     assert n_filtered < n_all * 0.5, (n_filtered, n_all)
 
     with_f = detect_mentions_shuffle(texts, aliases, bl)
-    without_f = detect_mentions_shuffle(texts, aliases, bl, ft_bc=None)
+    with cap_bytes(spark, 1):
+        bare = Gazetteer.shuffle(aliases, bl)
+    assert bare.ft_bc is None and bare.max_words == gaz.max_words
     rows = lambda df: sorted(map(tuple, df.collect()))
-    assert rows(with_f) == rows(without_f)
+    assert rows(with_f) == rows(bare.scan(texts))

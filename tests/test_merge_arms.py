@@ -128,6 +128,7 @@ def test_surgical_merge_arms_agree(spark, tmp_path, case):
     files holding untouched rows, sameAs-class and self-loop rows among
     the touched ones, chained reps and empty results: both arms leave
     equal key sets, no duplicate key and byte-identical untouched rows."""
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming.construct import apply_merges
 
@@ -142,7 +143,7 @@ def test_surgical_merge_arms_agree(spark, tmp_path, case):
         arts = ConstructionArtifacts(
             local_frame(spark, [], TRIPLE_DDL),
             local_frame(spark, old_map, "node string, rep string"),
-            None, None, frozenset(),
+            Gazetteer.broadcast(spark, {}, ()),
         )
         with cap_bytes(spark, cap):
             out = apply_merges(spark, path,
@@ -218,6 +219,7 @@ def test_merge_records_which_arm_ran(spark, tmp_path):
     """Each merge appends one record naming its arm, files, input bytes,
     cap and secs; no merge record carries ``fresh_rows`` (that key
     marks a micro-batch record)."""
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming.construct import apply_merges
@@ -228,7 +230,7 @@ def test_merge_records_which_arm_ran(spark, tmp_path):
     arts = ConstructionArtifacts(
         local_frame(spark, [], TRIPLE_DDL),
         local_frame(spark, [], "node string, rep string"),
-        None, None, frozenset(),
+        Gazetteer.broadcast(spark, {}, ()),
     )
     apply_merges(spark, path, local_frame(spark, [("E1", "E0")], "src string, dst string"),
                  arts, batch_id="m1")
@@ -252,6 +254,7 @@ def test_spark_arm_caps_the_isin_list(spark, tmp_path, monkeypatch):
     """A rep delta on the driver that is longer than ISIN_NODE_CAP goes
     to the Spark arm as broadcast-marker joins, not as an isin list, and
     gives the same table as the Arrow arm."""
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming import construct as C
 
@@ -274,7 +277,7 @@ def test_spark_arm_caps_the_isin_list(spark, tmp_path, monkeypatch):
         arts = ConstructionArtifacts(
             local_frame(spark, [], TRIPLE_DDL),
             local_frame(spark, old_map, "node string, rep string"),
-            None, None, frozenset(),
+            Gazetteer.broadcast(spark, {}, ()),
         )
         with cap_bytes(spark, cap):
             C.apply_merges(spark, path,
@@ -288,6 +291,7 @@ def test_spark_arm_caps_the_isin_list(spark, tmp_path, monkeypatch):
 def test_driver_arms_run_no_spark_job(spark, tmp_path):
     """Under the cap, a small compaction and the surgical rewrite run no
     Spark job, and a 3-edge late merge runs at most 8."""
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming.construct import (
@@ -310,7 +314,7 @@ def test_driver_arms_run_no_spark_job(spark, tmp_path):
     arts = ConstructionArtifacts(
         local_frame(spark, [], TRIPLE_DDL),
         local_frame(spark, [], "node string, rep string"),
-        None, None, frozenset(),
+        Gazetteer.broadcast(spark, {}, ()),
     )
     late = local_frame(spark, [("E3", "E2"), ("E4", "E2"), ("E5", "F1")],
                        "src string, dst string")

@@ -569,13 +569,14 @@ def test_pagerank_resume_warm_start(spark):
     than a cold start, and one warm round from a one-round init is
     bit-equal to two cold rounds (the oracle-able composition)."""
     from netbase_spark.operators.materialize import pagerank, pagerank_resume
+    from netbase_spark.plans.broadcast_gate import local_frame
 
     def ring_plus_star(extra):
         rows = [(f"n{i}", f"n{(i + 1) % 20}") for i in range(20)]
         rows += [(f"l{i}", "n0") for i in range(extra)]
-        return spark.createDataFrame(rows, "src string, dst string")
+        return local_frame(spark, rows, "src string, dst string")
 
-    empty_prev = spark.createDataFrame([], "node string, pr_e12 long")
+    empty_prev = local_frame(spark, [], "node string, pr_e12 long")
     e0 = ring_plus_star(5)
 
     # composition identity: cold(2) == resume(1, init=cold-resume(1))

@@ -216,9 +216,9 @@ def test_scan_closure_stays_small_at_100k_aliases(spark):
     from pyspark.serializers import CloudPickleSerializer
 
     from netbase_spark.operators.mentions import (
-        _broadcast_gazetteer,
-        _make_mention_scan,
-        _make_triple_scan,
+        Gazetteer,
+        _resolve,
+        _trie_scan,
         detect_mentions_text,
     )
 
@@ -233,11 +233,12 @@ def test_scan_closure_stays_small_at_100k_aliases(spark):
         ))
     }
     assert len(aliases) == 100_000
-    bc = _broadcast_gazetteer(spark, aliases, {"the"})
+    gaz = Gazetteer.broadcast(spark, aliases, {"the"})
     ser = CloudPickleSerializer()
     for fn in (
-        _make_mention_scan(bc, False, False),
-        _make_triple_scan(bc),
+        _trie_scan(gaz.bc, False, False, False),
+        _trie_scan(gaz.bc, False, True, False),
+        _resolve(gaz.blacklist, False, True, False),
     ):
         size = len(ser.dumps(fn))
         assert size < 100_000, f"scan closure serialized to {size} bytes"
@@ -293,11 +294,11 @@ def test_construct_artifacts_reuse_and_overflow(spark):
     inline_b = tset(construct_from(spark, docs_b))
 
     arts = build_artifacts(spark)
-    assert arts.scan_bc is not None and arts.alias_entity is None
+    assert arts.scan_bc is not None and arts.gazetteer.table is None
     assert tset(construct_from(spark, docs_a, arts)) == inline_a
     assert tset(construct_from(spark, docs_b, arts)) == inline_b
 
     arts_small = build_artifacts(spark, cap_bytes=1)
-    assert arts_small.scan_bc is None and arts_small.alias_entity is not None
+    assert arts_small.scan_bc is None and arts_small.gazetteer.table is not None
     assert tset(construct_from(spark, docs_a, arts_small)) == inline_a
     assert tset(construct_from(spark, docs_b, arts_small)) == inline_b

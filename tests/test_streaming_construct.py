@@ -266,6 +266,7 @@ def test_surgical_recanonicalize_rewrites_only_touched_files(
         merge_mapping,
         rewrite_triples,
     )
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming.construct import apply_merges
@@ -291,7 +292,7 @@ def test_surgical_recanonicalize_rewrites_only_touched_files(
         spark.createDataFrame(
             [], "subj string, rel int, obj string, rule string, doc_id string"
         ),
-        empty_map, None, None, frozenset(),
+        empty_map, Gazetteer.broadcast(spark, {}, ()),
     )
     import shutil
 
@@ -323,6 +324,7 @@ def test_surgical_path_keeps_untouched_sameas_and_self_loops(
         merge_mapping,
         recanonicalize_delta,
     )
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.relations import SYNONYM
@@ -350,7 +352,8 @@ def test_surgical_path_keeps_untouched_sameas_and_self_loops(
     tv = str(tmp_path / "versioned")
     V.create(df, tv)
     arts_v = ConstructionArtifacts(
-        spark.createDataFrame([], schema), empty_map, None, None, frozenset()
+        spark.createDataFrame([], schema), empty_map,
+        Gazetteer.broadcast(spark, {}, ()),
     )
     apply_merges(spark, tv, late, arts_v, batch_id="adv1")
 

@@ -239,6 +239,7 @@ def test_rewrite_data_files_restores_surgical_locality(spark, tmp_path):
     files, a surgical merge must rewrite ~all files — after
     rewrite_data_files(cluster_by=subj) the same merge touches O(1)
     files and carries the rest by name."""
+    from netbase_spark.operators.mentions import Gazetteer
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import ConstructionArtifacts
     from netbase_spark.streaming.construct import apply_merges
@@ -264,8 +265,8 @@ def test_rewrite_data_files_restores_surgical_locality(spark, tmp_path):
         before = set(V.read_manifest(table)["files"])
         empty_map = spark.createDataFrame([], "node string, rep string")
         arts = ConstructionArtifacts(
-            spark.createDataFrame([], schema), empty_map, None, None,
-            frozenset(),
+            spark.createDataFrame([], schema), empty_map,
+            Gazetteer.broadcast(spark, {}, ()),
         )
         apply_merges(
             spark, table,
